@@ -60,15 +60,6 @@ class ProfileConfig:
     # parallelism.  Bit-identical values under any chunking; inert for
     # non-file frames and for inputs that parallelize at the scan.
     parallelize_small_input: bool = True
-    # Tiny-input band (below the 4 MiB fine-chunk band): when a
-    # file-backed input is under this many bytes, the per-column
-    # distinct-value volume is trivially bounded, so the frequency pass
-    # skips its scale-safe bucket pre-prune phase (one fewer
-    # exchange+window of pure per-stage overhead; identical results —
-    # the bucket phase only drops rows that cannot reach the global
-    # top-k).  Measured 0.10-0.15s per table at sf0.1 local[32].
-    # 0 disables (always two-phase).
-    tiny_input_bytes: int = 1 << 20
 
     def exact(self) -> "ProfileConfig":
         """Return a copy in fully-exact mode (for oracle parity tests)."""
@@ -87,7 +78,6 @@ class ProfileConfig:
             compute_histograms=self.compute_histograms,
             compute_mad=self.compute_mad,
             parallelize_small_input=self.parallelize_small_input,
-            tiny_input_bytes=self.tiny_input_bytes,
         )
 
 

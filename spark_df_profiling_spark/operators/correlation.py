@@ -110,18 +110,23 @@ def correlation_matrix(df: DataFrame,
     # df.columns ONCE, by position — never run through name resolution
     # (df["a`b"] raises INVALID_ATTRIBUTE_NAME_SYNTAX) and never
     # interpolated into SQL strings (where an embedded backtick would
-    # break the generated expressions).  First occurrence wins on
-    # duplicate names, matching what unambiguous resolution would pick.
+    # break the generated expressions).  Names match case-insensitively
+    # unless spark.sql.caseSensitive is on, as Spark resolves them.
+    # First occurrence wins on duplicate names, matching what
+    # unambiguous resolution would pick.
+    case_sensitive = df.sparkSession.conf.get(
+        "spark.sql.caseSensitive", "false").lower() == "true"
+    fold = (lambda c: c) if case_sensitive else str.lower
     pos: dict[str, int] = {}
     for i, c in enumerate(df.columns):
-        pos.setdefault(c, i)
-    missing = [c for c in num_cols if c not in pos]
+        pos.setdefault(fold(c), i)
+    missing = [c for c in num_cols if fold(c) not in pos]
     if missing:
         raise ValueError(f"columns not in DataFrame: {missing}")
     safe_all = df.toDF(*[f"__x{i}" for i in range(len(df.columns))])
     safe = [f"__p{j}" for j in range(len(num_cols))]
     sel = safe_all.select(
-        *[safe_all[f"__x{pos[c]}"].cast("double").alias(s)
+        *[safe_all[f"__x{pos[fold(c)]}"].cast("double").alias(s)
           for c, s in zip(num_cols, safe)])
     if len(num_cols) <= _DECLARATIVE_MAX_COLS:
         from spark_df_profiling_spark.config import DEFAULT_CONFIG
@@ -182,29 +187,6 @@ def correlation_matrix(df: DataFrame,
         for j, y in enumerate(num_cols):
             v = float(arr[i][j])
             out[(x, y)] = v if not math.isnan(v) else float("nan")
-    return out
-
-
-def pairwise_correlations(df: DataFrame,
-                          num_cols: list[str]) -> dict[tuple[str, str], float]:
-    """Fallback path: ``df.stat.corr`` per pair (reference behavior).
-
-    O(k^2) jobs — only sensible for k <= 3 or when pyspark.ml is
-    unavailable.  NOTE: semantics differ from :func:`correlation_matrix`
-    on null placement — ``df.stat.corr`` drops nulls pairwise, the matrix
-    path listwise; the reference uses listwise (na.drop over all NUM cols).
-    """
-    clean = df.select(
-        *[df[c].cast("double").alias(c) for c in num_cols]).na.drop("any")
-    out: dict[tuple[str, str], float] = {}
-    for i, x in enumerate(num_cols):
-        for j, y in enumerate(num_cols):
-            if j < i:
-                out[(x, y)] = out[(y, x)]
-            elif j == i:
-                out[(x, y)] = 1.0
-            else:
-                out[(x, y)] = clean.stat.corr(x, y)
     return out
 
 

@@ -44,9 +44,8 @@ def topk_frequencies(df: DataFrame, cat_cols: list[str], k: int,
     ``two_phase=False`` skips the bucket phase and ranks the aggregated
     counts directly — IDENTICAL results (the bucket phase only
     pre-prunes rows that cannot be in the global top-k), one fewer
-    exchange+window.  For callers who KNOW the distinct-value volume is
-    trivial (describe() passes this for sub-MiB inputs, where the extra
-    stage is pure per-job overhead); the scale-safe default stays on."""
+    exchange+window.  It is the reference form the two-phase result is
+    tested against; the scale-safe default stays on."""
     if not cat_cols:
         return {}
     top = topk_frequencies_frame(df, cat_cols, k, sub_partitions,

@@ -121,9 +121,14 @@ def first_digit(col) -> F.Column:
     for non-representable powers (negative magnitudes: 10^-2 etc.) and
     the engines genuinely disagree by an ulp — enough to flip
     ``floor(d0)`` when d0 sits exactly on an integer (same divergence
-    class as the r15 sig() decimal-tie bug; see oracle.sig)."""
+    class as the r15 sig() decimal-tie bug; see oracle.sig).
+
+    Below 1e-300 the value is first lifted by ``* 1e300`` (one
+    correctly-rounded multiply): a subnormal's magnitude reaches -324,
+    where the parsed scale ``'1e-324'`` underflows to 0."""
     c = (F.col(col) if isinstance(col, str) else col).cast("double")
     a = F.abs(c)
+    a = F.when(a < 1e-300, a * 1e300).otherwise(a)
     mag = F.floor(F.log10(a))
     scale = F.concat(F.lit("1e"),
                      mag.cast("long").cast("string")).cast("double")

@@ -5,15 +5,23 @@ Re-implements the full statistics surface of the reference's
 Spark lifecycle from SURVEY §3:
 
     pass 0  schema-only type dispatch                       (no job)
-    pass 1  ONE wide agg: counts/distinct/moments/quantiles/
-            zeros/infinities/first/min/max                   (1 job)
-    pass 2  MAD + histograms (need pass-1 mean/min/max)      (1 job)
-    pass 3  full Pearson matrix via pyspark.ml               (1 job)
-    pass 4  all categorical top-k freqs, one stacked shuffle (1 job)
+    pass 1  wide aggs split into buffer-class chunks: counts/
+            distinct/moments/zeros/infinities/min/max, plus the
+            Pearson matrix as corr() exprs (<= 50 num cols)  (1 job/chunk)
+            quantile sketches, concurrent with pass 1        (1 job/chunk)
+            all categorical top-k freqs, one stacked group-by (1 job)
+    pass 2  MAD + histograms (need pass-1 mean/min/max)      (1 job/chunk)
 
-vs the reference's O(#stats x #cols + k^2) jobs.  The result is a *Spark
-DataFrame* of per-column statistics — nothing scale-dependent is collected
-to the driver (only O(#cols) aggregate scalars cross py4j).
+The chunks run concurrently.  On a one-partition input every query runs
+over ``coalesce(1)`` as one single-stage job: perfbench's
+``profile.jobs`` measures 8 jobs per table on its catalog.  On other
+inputs each query also has a map stage before its Exchange, which AQE
+runs as a job of its own, so the count roughly doubles.  Either way it
+is O(#chunks), vs the reference's O(#stats x #cols + k^2) jobs.
+
+The result is a *Spark DataFrame* of per-column statistics — nothing
+scale-dependent is collected to the driver (only O(#cols) aggregate
+scalars cross py4j).
 """
 
 from __future__ import annotations
@@ -117,7 +125,9 @@ class ProfileResult:
 
 def describe(df: DataFrame,
              cfg: ProfileConfig = DEFAULT_CONFIG) -> ProfileResult:
-    """Profile every column of ``df``; ~4 Spark jobs total.
+    """Profile every column of ``df`` in a few concurrent Spark jobs:
+    one per aggregate chunk plus the frequency pass (see the module
+    docstring for the counts perfbench measures).
 
     Raises ``TypeError`` for non-DataFrame input and ``ValueError`` for an
     empty DataFrame — the reference's input contract
@@ -156,7 +166,8 @@ def describe(df: DataFrame,
     # while taking profile(lineitem, 11 MB) from 2.62s to 2.46s).
     cores = spark.sparkContext.defaultParallelism
     # one inputFiles() py4j round-trip (~10-30ms), shared by the byte
-    # band, the row-group probe, and the T5 memsize below
+    # band, the row-group probe, the one-partition check and the T5
+    # memsize below
     try:
         src_files = orig_df.inputFiles()
     except Exception:
@@ -173,19 +184,14 @@ def describe(df: DataFrame,
     small_input = (cfg.parallelize_small_input
                    and (4 << 20) <= src_bytes < cores * (4 << 20)
                    and rg is not None and rg < cores)
-    # Tiny-input band (disjoint from the band above — it ends at 1 MiB,
-    # the band starts at 4 MiB): the distinct-value volume of every
-    # column is trivially bounded by the input bytes, so the frequency
-    # pass can skip its scale-safe bucket pre-prune phase (one fewer
-    # exchange+window of pure per-stage overhead; measured 0.10-0.15s
-    # per table, interleaved best-of-8 at sf0.1 local[32]: supplier
-    # freq 0.344→0.240s, documents 0.378→0.249s).  Results identical —
-    # the bucket phase only drops rows that cannot reach the global
-    # top-k.  Non-file frames (src_bytes 0) keep the standard path.
-    # (A second tiny-input remedy — merging all agg chunks into ONE
-    # job — was built and measured SLOWER everywhere; see the negative
-    # result note in wide_agg.make_chunks.)
-    tiny_input = 0 < src_bytes < cfg.tiny_input_bytes
+    # Inputs Spark plans as ONE file-scan partition (a small file):
+    # every profile query runs over coalesce(1).  CoalesceExec(1) reports
+    # SinglePartition, so neither the global aggregates nor the
+    # frequency group-by and window plan an Exchange and each query is
+    # one single-stage job, instead of a map job plus an AQE final job.
+    # Values are identical: the rows and their order are unchanged.
+    if src_files and _single_partition_plan(orig_df):
+        df = df.coalesce(1)
     fields = df.schema.fields
     base_classes = [
         S.dtype_class(f.dataType, fix_decimal=cfg.fix_decimal,
@@ -270,11 +276,7 @@ def describe(df: DataFrame,
 
     def freq_thunk():
         spark.sparkContext.setJobDescription("profile: frequencies")
-        # tiny inputs skip the bucket pre-prune phase: identical values
-        # (it only drops rows that cannot reach the global top-k), one
-        # fewer exchange+window of pure per-stage overhead
-        return FR.topk_frequencies(df, freq_spec_cols, cfg.top_k,
-                                   two_phase=not tiny_input)
+        return FR.topk_frequencies(df, freq_spec_cols, cfg.top_k)
 
     freq_task = (W.InheritableTask(freq_thunk, gate)
                  if freq_spec_cols else None)
@@ -365,8 +367,7 @@ def describe(df: DataFrame,
     if extra_freq_cols:  # non-string columns that resolved CONST
         freqs_raw = dict(freqs_raw)
         freqs_raw.update(FR.topk_frequencies(df, extra_freq_cols,
-                                             cfg.top_k,
-                                             two_phase=not tiny_input))
+                                             cfg.top_k))
     freqs = {safe_to_orig[c]: v for c, v in freqs_raw.items()}
 
     # ---- assemble the profile DataFrame (driver: O(#cols) scalars) -----
@@ -403,6 +404,30 @@ def describe(df: DataFrame,
         correlations=correlations,
         rejected=rejected,
     )
+
+
+def _single_partition_plan(df: DataFrame) -> bool:
+    """True when Spark plans ``df`` as ONE file-scan partition with no
+    Exchange: the executed plan is not adaptive, holds no exchange, has
+    exactly one leaf, and that leaf is a file scan whose input RDD has
+    one partition.  Planning only — no job, no generated code.  Byte
+    counts and parquet footers cannot answer this: a self-union of a
+    one-file input lists one input file but plans as two partitions."""
+    try:
+        stack, leaves = [df._jdf.queryExecution().executedPlan()], []
+        while stack:
+            node = stack.pop()
+            name = node.getClass().getSimpleName()
+            if name == "AdaptiveSparkPlanExec" or "Exchange" in name:
+                return False
+            kids = node.children()
+            if kids.isEmpty():
+                leaves.append((name, node))
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        return (len(leaves) == 1 and leaves[0][0] == "FileSourceScanExec"
+                and leaves[0][1].inputRDD().getNumPartitions() == 1)
+    except Exception:
+        return False
 
 
 def profile(df: DataFrame,
@@ -602,8 +627,9 @@ def profile_many(dfs: dict[str, DataFrame],
                  max_threads: int = 8) -> dict[str, "ProfileResult"]:
     """Profile a catalog of tables concurrently.
 
-    Each profile is only ~3 Spark actions whose cluster work is brief;
-    the wall-clock is dominated by per-table plan compilation, which is
+    Each profile is a handful of short Spark jobs (8 per table on
+    perfbench's one-partition catalog, its ``profile.jobs``); the
+    wall-clock is dominated by per-table plan compilation, which is
     driver-side and embarrassingly parallel.  Profiles run on
     ``InheritableThread`` workers (same rationale as
     ``run_chunked_agg``: pinned-thread mode maps Python threads to JVM

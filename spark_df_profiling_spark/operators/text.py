@@ -654,17 +654,6 @@ def chunk_documents(df: DataFrame, text_col: str, id_col: str,
 
 
 # --- TF-IDF (corpus-level term weighting) ----------------------------------
-def doc_frequency(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(token, df) — number of documents containing each whitespace
-    token.  One explode + distinct-by-(doc,token) + count: two
-    shuffles on uniform keys, partial aggregation map-side."""
-    return (df.select(F.col(id_col).alias("__id"),
-                      F.explode(F.array_distinct(
-                          F.split(_c(text_col), " "))).alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("df")))
-
-
 def tfidf_topk(df: DataFrame, text_col: str, id_col: str,
                k: int = 3) -> DataFrame:
     """Top-k TF-IDF terms per document (smoothed sklearn-style idf).

@@ -715,12 +715,12 @@ LEFT JOIN (
   SELECT CASE WHEN d0 >= 10 THEN floor(d0 / 10)
               WHEN d0 < 1 THEN floor(d0 * 10)
               ELSE floor(d0) END AS dg, count(*) AS cnt
-  FROM (SELECT abs(CAST(l_extendedprice AS DOUBLE))
-               / CAST('1e' || CAST(CAST(floor(log10(abs(CAST(
-                   l_extendedprice AS DOUBLE)))) AS BIGINT) AS VARCHAR)
-                      AS DOUBLE) AS d0
-        FROM lineitem
-        WHERE abs(l_extendedprice) > 0)
+  FROM (SELECT a / CAST('1e' || CAST(CAST(floor(log10(a)) AS BIGINT)
+                                  AS VARCHAR) AS DOUBLE) AS d0
+        FROM (SELECT CASE WHEN x < 1e-300 THEN x * 1e300 ELSE x END AS a
+              FROM (SELECT abs(CAST(l_extendedprice AS DOUBLE)) AS x
+                    FROM lineitem)
+              WHERE x > 0))
   GROUP BY 1) g ON d.d = g.dg
 """
 

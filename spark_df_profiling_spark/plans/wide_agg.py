@@ -300,18 +300,6 @@ def make_chunks(exprs: list[str], cfg: ProfileConfig,
       get their own chunk so histograms/MAD stay codegen'd.
     * ``small_input=True`` switches to the finer ``_CHUNK_CAP_SMALL``
       caps (see above) for inputs whose scan cannot parallelize.
-
-    (r16 negative result: merging ALL classes into ONE chunk for
-    sub-MiB inputs — one job instead of ~5 — was built and MEASURED
-    SLOWER on every such bench table (interleaved best-of-8, local[32]:
-    customer 0.59→0.76s, part 0.62→0.86s, supplier 0.74→0.89s,
-    embeddings 0.54→0.68s): the merged single-task ObjectHashAggregate
-    serializes per-expression work that the class-split chunks run
-    CONCURRENTLY with column pruning, and a chunk submission costs less
-    than the serialized compute it hides (py4j releases the GIL during
-    the JVM call).  Reverted; only the single-phase frequency form
-    (operators/frequency.py, two_phase=False) survives from that
-    experiment — it removes a per-stage overhead, not concurrency.)
     """
     caps = _CHUNK_CAP_SMALL if small_input else _CHUNK_CAP
     # sketch chunks FIRST: task threads start in list order and the HLL

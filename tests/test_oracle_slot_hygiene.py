@@ -7,26 +7,16 @@ on stale semantics at worst).  This test runs every tagged slot at
 sf0.001 and asserts each tag value present in the Spark frame appears
 as a quoted literal in the registered oracle SQL.
 
-Wall-clock (r16): the ~20 slot executions are heavyweight grading
-composites (145s pooled in the r16 durations run), but the ASSERTIONS
-only need each slot's distinct tag/key values.  A subprocess runner
-launched at MODULE IMPORT (pytest collection time) collects those
-values in its own JVM while the rest of the suite runs; the test joins
-it and applies the same per-slot literal checks with the same failure
-messages.  Tag values are discrete strings produced by literal
+The ~20 slot executions are heavyweight grading composites, but the
+assertions only need each slot's distinct tag/key values.  A fresh
+local[8] runner JVM collects those values through conftest's runner
+queue (only when this test is selected, overlapping the rest of the
+suite); the test then applies the per-slot literal checks.  Tag values are discrete strings produced by literal
 expressions, so they cannot depend on the runner's core/partition
-count.  Runner output goes to files, not pipes (an undrained pipe can
-fill and deadlock the runner)."""
+count."""
 
-import atexit
 import json
-import os
 import re
-import subprocess
-import sys
-import tempfile
-
-import pytest
 
 from spark_df_profiling_spark import oracle
 
@@ -67,17 +57,17 @@ SF = "/root/testdata/sf0.001"
 RUNNER = r"""
 import json, sys
 sys.path.insert(0, "/root/repo")
-out_path = sys.argv[1]
-tagged = json.loads(sys.argv[2])
-prefixed = json.loads(sys.argv[3])
-sf = sys.argv[4]
+memory, out_path = sys.argv[1], sys.argv[2]
+tagged = json.loads(sys.argv[3])
+prefixed = json.loads(sys.argv[4])
+sf = sys.argv[5]
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[8]")
          .config("spark.sql.shuffle.partitions", "8")
          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.ui.enabled", "false")
-         .config("spark.driver.memory", "6g")
+         .config("spark.driver.memory", memory)
          .appName("slot-hygiene").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 from spark_df_profiling_spark import oracle
@@ -98,34 +88,8 @@ with open(out_path, "w") as f:
 spark.stop()
 """
 
-# ---- module-import launch (pytest collection time) ----------------------
-_DIR = tempfile.mkdtemp(prefix="slot-hygiene-")
-_OUT = os.path.join(_DIR, "tags.json")
-_LOG = open(os.path.join(_DIR, "runner.log"), "w")
-_PROC = subprocess.Popen(
-    [sys.executable, "-c", RUNNER, _OUT, json.dumps(TAGGED),
-     json.dumps(PREFIXED), SF],
-    stdout=_LOG, stderr=subprocess.STDOUT)
-
-
-@atexit.register
-def _reap_runner():
-    if _PROC.poll() is None:
-        _PROC.kill()
-        _PROC.wait()
-    _LOG.close()
-
-
-def _join_runner() -> dict:
-    try:
-        _PROC.wait(timeout=900)
-    except subprocess.TimeoutExpired:
-        _PROC.kill()
-        raise
-    _LOG.flush()
-    tail = open(_LOG.name).read()[-3000:]
-    assert _PROC.returncode == 0, f"hygiene runner failed:\n{tail}"
-    return json.loads(open(_OUT).read())
+SPARK_RUNNERS = {"local[8]": (RUNNER, json.dumps(TAGGED),
+                              json.dumps(PREFIXED), SF)}
 
 
 def _tag_failures(tags, slot):
@@ -164,11 +128,11 @@ def _prefix_failures(keys, slot):
     return []
 
 
-def test_every_spark_tag_and_prefix_is_in_oracle_sql():
-    """All TAGGED + PREFIXED slots in ONE test: the slot executions ran
-    in the import-time subprocess (see module docstring); here we only
-    join it and apply the same per-slot literal assertions."""
-    vals = _join_runner()
+def test_every_spark_tag_and_prefix_is_in_oracle_sql(spark_runner):
+    """All TAGGED + PREFIXED slots in ONE test: the slot executions run
+    in one runner JVM (see module docstring); here we apply the same
+    per-slot literal assertions to the values it collected."""
+    vals = spark_runner["local[8]"]
     failures = []
     for slot in sorted(TAGGED):
         failures.extend(_tag_failures(vals[slot][TAGGED[slot]], slot))

@@ -16,24 +16,10 @@ A boundary flip becomes a loud local failure naming the slot, instead
 of a driver mystery.
 
 Subprocesses because one JVM allows one SparkContext: the session-scoped
-``spark`` fixture cannot re-master mid-run.
-
-Wall-clock (r16): the two runners launch at MODULE IMPORT — i.e. during
-pytest collection, ~20 minutes before this test runs in a full-suite
-pass — and the test only joins them and compares.  The suite's slowest
-test (283s serial in the r16 durations run) thus overlaps the rest of
-the suite instead of extending it.  Output goes to FILES, not pipes: a
-pipe nobody drains until join time can fill and deadlock the runner.
+``spark`` fixture cannot re-master mid-run.  The runners run through
+conftest's runner queue: only when this test is selected, one at a
+time, overlapping the rest of the suite.
 """
-
-import atexit
-import json
-import os
-import subprocess
-import sys
-import tempfile
-
-import pytest
 
 # Slots whose grading includes rounded float accumulations.  Keep the
 # list tight — each slot runs twice in fresh JVMs.
@@ -54,15 +40,15 @@ FLOAT_GRADED = [
 RUNNER = r"""
 import json, sys
 sys.path.insert(0, "/root/repo")
-master, shuffle, out_path = sys.argv[1], sys.argv[2], sys.argv[3]
-slots = sys.argv[4].split(",")
+memory, out_path, master, shuffle = sys.argv[1:5]
+slots = sys.argv[5].split(",")
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master(master)
          .config("spark.sql.shuffle.partitions", shuffle)
          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.ui.enabled", "false")
-         .config("spark.driver.memory", "6g")
+         .config("spark.driver.memory", memory)
          .appName(f"par-stress-{master}").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 sys.path.insert(0, "/root/repo/tools")
@@ -88,42 +74,14 @@ with open(out_path, "w") as f:
 spark.stop()
 """
 
-# ---- module-import launch (pytest collection time) ----------------------
-_DIR = tempfile.mkdtemp(prefix="par-stress-")
-_PROCS: dict[str, tuple] = {}
-for _master, _shuffle in (("local[2]", "2"), ("local[32]", "200")):
-    _out = os.path.join(_DIR, f"par_{_shuffle}.json")
-    _log = open(os.path.join(_DIR, f"par_{_shuffle}.log"), "w")
-    _PROCS[_master] = (subprocess.Popen(
-        [sys.executable, "-c", RUNNER, _master, _shuffle, _out,
-         ",".join(FLOAT_GRADED)],
-        stdout=_log, stderr=subprocess.STDOUT), _out, _log)
+
+SPARK_RUNNERS = {master: (RUNNER, master, shuffle, ",".join(FLOAT_GRADED))
+                 for master, shuffle in (("local[2]", "2"),
+                                         ("local[32]", "200"))}
 
 
-@atexit.register
-def _reap_runners():
-    """Don't leak JVMs when the suite exits before the test runs
-    (-x on an earlier failure, -k deselection, --collect-only)."""
-    for proc, _, log in _PROCS.values():
-        if proc.poll() is None:
-            proc.kill()
-            proc.wait()
-        log.close()
-
-
-def test_float_graded_slots_stable_across_parallelism():
-    results = {}
-    for master, (proc, out, log) in _PROCS.items():
-        try:
-            proc.wait(timeout=900)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-            raise
-        log.flush()
-        tail = open(log.name).read()[-3000:]
-        assert proc.returncode == 0, f"{master} runner failed:\n{tail}"
-        results[master] = json.loads(open(out).read())
-    a, b = results["local[2]"], results["local[32]"]
+def test_float_graded_slots_stable_across_parallelism(spark_runner):
+    a, b = spark_runner["local[2]"], spark_runner["local[32]"]
     for slot in FLOAT_GRADED:
         assert a[slot] == b[slot], (
             f"{slot}: output differs between local[2] and local[32] — "

@@ -1,6 +1,6 @@
 """Round-16 optimization internals: row-group-aware small-input
 predicate (scan_parallelism) gating the fine-chunk band and the
-small-scan fan-out."""
+small-scan fan-out, and describe()'s one-partition plan."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -89,6 +89,56 @@ def test_first_digit_pow_free(spark):
     assert got == want
 
 
+def test_first_digit_subnormals_engine_matches_oracle(spark):
+    """A subnormal's magnitude reaches -324, where the parsed scale
+    '1e-324' underflows to 0; both engines lift such values into the
+    normal range first.  Every digit equals the first digit of the
+    double's exact decimal value, and the DuckDB oracle SQL agrees."""
+    from decimal import Decimal
+
+    import duckdb
+
+    from spark_df_profiling_spark import oracle
+    from spark_df_profiling_spark.operators.outliers import first_digit
+
+    vals = [5e-324, -1e-323, 3e-320, 7.5e-315, 2.2250738585072014e-308,
+            1e-300, 4.5e-301, 123.0]
+    want = [int(str(abs(Decimal(v)).normalize())[0]) for v in vals]
+    assert want[0] == 4  # 4.94e-324, the smallest subnormal
+    df = spark.createDataFrame([(v,) for v in vals], "v double")
+    got = [r.d for r in
+           df.select(first_digit(F.col("v")).alias("d")).collect()]
+    assert got == want
+    con = duckdb.connect()
+    con.execute("CREATE TABLE lineitem (l_extendedprice DOUBLE)")
+    for v, d in zip(vals, want):
+        con.execute("DELETE FROM lineitem")
+        con.execute("INSERT INTO lineitem VALUES (?)", [v])
+        hits = [int(r[1]) for r in con.execute(
+            oracle._BENFORD_HIST_SQL).fetchall() if r[2]]
+        assert hits == [d], (v, hits)
+
+
+def test_correlation_matrix_follows_case_sensitivity(spark):
+    """Column names match the way Spark resolves them: case-insensitively
+    by default (first occurrence wins), exactly when
+    spark.sql.caseSensitive is on."""
+    from spark_df_profiling_spark.operators.correlation import (
+        correlation_matrix)
+    rows = [(float(i), float(2 * i + 1), float(10 - i)) for i in range(20)]
+    df = spark.createDataFrame(rows, ["Alpha", "beta", "BETA"])
+    out = correlation_matrix(df, ["alpha", "BETA"])
+    assert out[("alpha", "BETA")] == pytest.approx(1.0)
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try:
+        with pytest.raises(ValueError, match="alpha"):
+            correlation_matrix(df, ["alpha", "BETA"])
+        out = correlation_matrix(df, ["Alpha", "BETA"])
+        assert out[("Alpha", "BETA")] == pytest.approx(-1.0)
+    finally:
+        spark.conf.unset("spark.sql.caseSensitive")
+
+
 def test_correlation_matrix_backtick_names(spark):
     """Declarative correlation path must survive caller-supplied column
     names containing backticks/spaces (ADVICE r15): names are renamed
@@ -162,26 +212,89 @@ def test_local_result_frame_arrow_exactness(spark):
     assert a[0]["freq"][0]["cnt"] == 2**55 + 3
 
 
-def test_tiny_input_band_identical(spark):
-    """Sub-MiB file-backed inputs run the single-phase frequency form
-    (two_phase=False) — the full describe() result must be identical
-    to the band disabled (tiny_input_bytes=0), in default AND exact
-    mode."""
-    from dataclasses import replace
+ONE_RG = "customer.parquet"  # one row group at sf0.001
 
+
+def test_one_partition_plan_identical(spark, sf_dir):
+    """A one-row-group file profiles over coalesce(1) (no Exchange); the
+    same rows in the same order through repartition(1) take the
+    standard plan.  The full describe() result must be identical, in
+    default AND exact mode."""
     from spark_df_profiling_spark.config import ProfileConfig
+    from spark_df_profiling_spark.operators.profile import (
+        _single_partition_plan, describe)
+    from spark_df_profiling_spark.sources import scan_parallelism
+
+    df = spark.read.parquet(f"{sf_dir}/{ONE_RG}")
+    std_df = df.repartition(1)
+    assert scan_parallelism(df) == 1
+    assert _single_partition_plan(df)
+    assert not _single_partition_plan(std_df)
+    for cfg in (ProfileConfig(), ProfileConfig().exact()):
+        one = describe(df, cfg)
+        std = describe(std_df, cfg)
+        assert one.variables.collect() == std.variables.collect()
+        assert one.table == std.table
+        assert one.freq == std.freq
+        assert one.correlations == std.correlations
+
+
+def test_one_partition_plan_runs_single_stage_jobs(spark, sf_dir):
+    """Every job describe() runs on a one-partition input has exactly
+    one stage: no map stage, no AQE final job after an Exchange."""
     from spark_df_profiling_spark.operators.profile import describe
 
-    df = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    for cfg in (ProfileConfig(), ProfileConfig().exact()):
-        tiny = describe(df, cfg)
-        std = describe(df, replace(cfg, tiny_input_bytes=0))
-        assert tiny.variables.collect() == std.variables.collect()
-        assert tiny.table == std.table and tiny.freq == std.freq
+    sc = spark.sparkContext
+    df = spark.read.parquet(f"{sf_dir}/{ONE_RG}")
+    sc.setJobGroup("one-partition-describe", "one-partition describe")
+    try:
+        describe(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("one-partition-describe")
+    assert jobs
+    stages = {j: list(tracker.getJobInfo(j).stageIds) for j in jobs}
+    assert all(len(s) == 1 for s in stages.values()), stages
+
+
+def test_multi_partition_inputs_keep_standard_plan(spark, sf_dir, tmp_path):
+    """The predicate reads the physical plan, not bytes or footers: a
+    self-union of a one-file input (one input file, two partitions), a
+    repartition(8) and a 64-row-group file that splits into several
+    partitions keep the standard plan, while a 64-row-group file small
+    enough for ONE split takes the one-partition plan."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_df_profiling_spark.operators.profile import (
+        _single_partition_plan)
+
+    df = spark.read.parquet(f"{sf_dir}/{ONE_RG}")
+    union = df.union(df)
+    assert len(union.inputFiles()) == 1
+    assert not _single_partition_plan(union)
+    assert not _single_partition_plan(df.repartition(8))
+
+    def write(path, n):
+        pad = pa.array([os.urandom(32).hex() for _ in range(n)])
+        pq.write_table(pa.table({"id": pa.array(range(n)), "pad": pad}),
+                       path, row_group_size=n // 64)
+        return spark.read.parquet(path)
+
+    big = write(str(tmp_path / "big.parquet"), 128_000)
+    assert big.rdd.getNumPartitions() > 1
+    assert not _single_partition_plan(big)
+    small = write(str(tmp_path / "small.parquet"), 6_400)
+    assert small.rdd.getNumPartitions() == 1
+    assert _single_partition_plan(small)
 
 
 def test_topk_single_phase_identical(spark):
-    """two_phase=False (tiny-input form) must return exactly the
+    """two_phase=False (single-phase form) must return exactly the
     two-phase result — the bucket phase only pre-prunes rows that
     cannot reach the global top-k."""
     from spark_df_profiling_spark.operators.frequency import (
