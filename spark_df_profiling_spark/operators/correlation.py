@@ -22,6 +22,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_df_profiling_spark.session import wide_codegen
+
 
 def correlation_exprs(df: DataFrame, num_cols: list[str]) -> list[str]:
     """Pearson matrix as pass-1 aggregate SQL expressions (zero extra jobs).
@@ -133,17 +135,6 @@ def correlation_matrix(df: DataFrame,
         from spark_df_profiling_spark.plans.wide_agg import run_chunked_agg
         from spark_df_profiling_spark.sources import (
             input_bytes, scan_parallelism)
-        # The pair aggregates hold ~9 buffer slots each, so even the
-        # 8-column matrix (28 pairs ≈ 250 slots) exceeds the default
-        # codegen.maxFields=100 and silently demotes the whole agg to
-        # interpreted execution (measured 2.7s vs 0.8s codegen'd on
-        # sf0.1 lineitem).  describe() already raises the ceiling; the
-        # standalone operator must not depend on a profile having run
-        # first in the same session.
-        try:
-            df.sparkSession.conf.set("spark.sql.codegen.maxFields", "500")
-        except Exception:
-            pass
         # Same small-input band as describe(): a single-row-group file
         # pins the matrix job to ~1 task however many cores exist, so
         # the pair expressions are fanned out as concurrent fine chunks
@@ -165,7 +156,12 @@ def correlation_matrix(df: DataFrame,
             for s in safe)
         exprs.append(f"count(CASE WHEN {allnn} THEN 1 END) "
                      f"AS `__n_complete`")
-        row = run_chunked_agg(sel, exprs, DEFAULT_CONFIG, small_input=small)
+        # The pair aggregates hold ~9 buffer slots each, so even the
+        # 8-column matrix (28 pairs ≈ 250 slots) exceeds the default
+        # codegen.maxFields=100 (see session.wide_codegen).
+        with wide_codegen(df.sparkSession):
+            row = run_chunked_agg(sel, exprs, DEFAULT_CONFIG,
+                                  small_input=small)
         if not int(row.get("__n_complete") or 0):
             return {}
         # decode_correlation_row keys pairs by POSITION (__corr_{i}_{j});

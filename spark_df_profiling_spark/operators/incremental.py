@@ -242,11 +242,23 @@ def merge_partials(*parts: DataFrame) -> DataFrame:
                        + F.pow(x["mean"] - acc["mean"], 2)
                        * acc["count"] * x["count"]
                        / (acc["count"] + x["count"])).alias("m2")))
+    # "one distinct value" is tested as min == max (both ignore NULLs,
+    # as count_distinct does), not with count_distinct: several DISTINCT
+    # aggregates plan an Expand whose projections follow the hash order
+    # of fresh expression ids, so every merge would generate new code
+    # and compile its classes again.
+    def one_value(c):  # count_distinct(c) == 1, or NULL if all NULL
+        return F.min(c) == F.max(c)
+
+    def at_most_one_value(c):  # count_distinct(c) <= 1
+        return F.coalesce(one_value(c), F.lit(True))
+
     # type_class consistency: asserted INSIDE the expression that
     # produces the output type_class, so column pruning can never drop
-    # the check (assert_true yields NULL on pass, raises on fail)
+    # the check (assert_true yields NULL on pass, raises on fail; an
+    # all-NULL type_class gives NULL and raises too)
     tc_ok = F.assert_true(
-        F.count_distinct("type_class") == 1,
+        one_value("type_class"),
         F.concat(F.lit("type_class drift across partials for column "),
                  F.col("column"), F.lit(" — refusing to merge")))
     tc = F.when(tc_ok.isNull(), F.max("type_class")).alias("type_class")
@@ -254,12 +266,11 @@ def merge_partials(*parts: DataFrame) -> DataFrame:
     # coverage (a partial built without hist_edges cannot silently
     # vanish into a merged histogram), and one bin COUNT — same edges
     # with different hist_bins would zip_with NULL-padded arrays into
-    # NULL bins otherwise (count_distinct ignores the NULL sizes of
-    # hist-less partials, so this composes with all-or-none)
+    # NULL bins otherwise (min/max ignore the NULL sizes of hist-less
+    # partials, so this composes with all-or-none)
     hist_ok = F.assert_true(
-        (F.count_distinct("hist_lo") <= 1)
-        & (F.count_distinct("hist_hi") <= 1)
-        & (F.count_distinct(F.size("hist")) <= 1)
+        at_most_one_value("hist_lo") & at_most_one_value("hist_hi")
+        & at_most_one_value(F.size("hist"))
         & ((F.count("hist") == 0)
            | (F.count("hist") == F.count(F.lit(1)))),
         F.concat(F.lit("histogram edge/config drift across partials "

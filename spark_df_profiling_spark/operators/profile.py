@@ -40,6 +40,7 @@ from spark_df_profiling_spark.config import DEFAULT_CONFIG, ProfileConfig
 from spark_df_profiling_spark.operators import correlation as C
 from spark_df_profiling_spark.operators import frequency as FR
 from spark_df_profiling_spark.plans import wide_agg as W
+from spark_df_profiling_spark.session import wide_codegen
 from spark_df_profiling_spark.sources import input_bytes, scan_parallelism
 
 # Explicit result schema — stable across inputs (the driver smoke check
@@ -141,6 +142,11 @@ def describe(df: DataFrame,
             "describe()/profile() are batch operators; for a streaming "
             "DataFrame use spark_df_profiling_spark.streaming."
             "windowed_profile (tumbling/sliding windows + watermark)")
+    with wide_codegen(df.sparkSession):
+        return _describe(df, cfg)
+
+
+def _describe(df: DataFrame, cfg: ProfileConfig) -> ProfileResult:
     spark = df.sparkSession
     original_names = [f.name for f in df.schema.fields]
     # Rename every column POSITIONALLY to a safe internal name so that
@@ -207,13 +213,9 @@ def describe(df: DataFrame,
     # pass 1.  Wall-clock drops from
     #     pass1 + (quantiles | pass2) + freq       (three barriers)
     # to  max(pass1, quantiles, freq) + pass2-lite (one barrier)
-    # with bit-identical output.  Very wide plans lose codegen'd
-    # projections at the default codegen.maxFields=100; profiles
-    # routinely exceed that.
-    try:
-        spark.conf.set("spark.sql.codegen.maxFields", "500")
-    except Exception:
-        pass
+    # with bit-identical output.  describe() runs all of it under
+    # session.wide_codegen: profiles routinely exceed the default
+    # codegen.maxFields=100.
     p1_exprs = W.build_pass1_exprs(df, base_classes, cfg)
     # Correlation matrix rides pass 1 as declarative corr() expressions
     # (zero extra jobs) up to 50 numeric columns; beyond that the

@@ -271,8 +271,9 @@ def _expr_class(s: str) -> str:
 
 # Budgeted chunk sizes (buffer-slot aware, see _expr_class):
 # light: worst case ~6 slots/expr (corr) -> 64 exprs ~= 384 slots, safely
-# under the codegen.maxFields=500 we set; sketch/object: execution is
-# per-row cheap / already interpreted, cap only to bound planning time.
+# under the codegen.maxFields=500 of session.wide_codegen; sketch/object:
+# execution is per-row cheap / already interpreted, cap only to bound
+# planning time.
 _CHUNK_CAP = {"light": 64, "sketch": 48, "object": 32, "pair": 40}
 
 

@@ -34,6 +34,30 @@ def spark():
     spark.stop()
 
 
+def restore_conf(spark, snapshot):
+    """Put every key of ``snapshot`` (key -> value, None = unset) back
+    on ``spark``; unchanged keys (static ones among them) are skipped."""
+    for k, v in snapshot.items():
+        if spark.conf.get(k, None) == v:
+            continue
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+@pytest.fixture
+def session_conf(spark):
+    """Snapshot every key ``build_session`` sets on the shared session
+    (``getOrCreate`` applies them to it) and restore them after."""
+    from spark_df_profiling_spark.session import (
+        ARROW_BATCH_ROWS, DEFAULT_CONF, SHUFFLE_PARTITIONS)
+    snap = {k: spark.conf.get(k, None)
+            for k in (*DEFAULT_CONF, ARROW_BATCH_ROWS, SHUFFLE_PARTITIONS)}
+    yield
+    restore_conf(spark, snap)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"

@@ -106,17 +106,13 @@ def test_streaming_dedup_matches_batch(spark, sf_dir):
     assert got == want
 
 
-def test_build_session_tuned_defaults(spark):
+def test_build_session_tuned_defaults(spark, session_conf):
     from spark_df_profiling_spark.session import build_session
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        s = build_session()  # getOrCreate: returns the shared session
-        assert s.conf.get("spark.sql.adaptive.enabled") == "true"
-        assert s.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
-        got = int(s.conf.get("spark.sql.shuffle.partitions"))
-        assert got == 2 * s.sparkContext.defaultParallelism
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
+    s = build_session()  # getOrCreate: returns the shared session
+    assert s.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert s.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
+    got = int(s.conf.get("spark.sql.shuffle.partitions"))
+    assert got == 2 * s.sparkContext.defaultParallelism
 
 
 def test_write_partitioned_sorted_rowgroups(spark, sf_dir, tmp_path):
