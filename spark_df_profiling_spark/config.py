@@ -8,7 +8,7 @@ percentile_approx quantiles).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
 
 
 @dataclass(frozen=True)
@@ -47,38 +47,15 @@ class ProfileConfig:
     profile_complex: bool = True
 
     # --- physical execution ----------------------------------------------
-    max_agg_exprs: int = 250       # chunk wide aggs to dodge codegen limits
+    # Chunk sizes (plans.wide_agg._CHUNK_CAP) and describe()'s in-flight
+    # job gate are constants, not settings.
     compute_correlations: bool = True
     compute_histograms: bool = True
     compute_mad: bool = True
-    # Small-input fast path: a file-backed input smaller than
-    # cores x 4 MiB cannot reach core-parallelism at the scan (parquet
-    # row groups bound splits), so each profiling chunk runs as a
-    # ~1-task pass.  When True, describe() splits the chunk lists finer
-    # (wide_agg._CHUNK_CAP_SMALL) and runs more of them concurrently —
-    # chunk-level concurrency with column pruning substitutes for scan
-    # parallelism.  Bit-identical values under any chunking; inert for
-    # non-file frames and for inputs that parallelize at the scan.
-    parallelize_small_input: bool = True
 
     def exact(self) -> "ProfileConfig":
         """Return a copy in fully-exact mode (for oracle parity tests)."""
-        return ProfileConfig(
-            bins=self.bins,
-            sample=self.sample,
-            corr_reject=self.corr_reject,
-            top_k=self.top_k,
-            exact_distinct=True,
-            exact_quantiles=True,
-            quantiles=self.quantiles,
-            fix_decimal=self.fix_decimal,
-            profile_complex=self.profile_complex,
-            max_agg_exprs=self.max_agg_exprs,
-            compute_correlations=self.compute_correlations,
-            compute_histograms=self.compute_histograms,
-            compute_mad=self.compute_mad,
-            parallelize_small_input=self.parallelize_small_input,
-        )
+        return replace(self, exact_distinct=True, exact_quantiles=True)
 
 
 DEFAULT_CONFIG = ProfileConfig()

@@ -81,8 +81,8 @@ def decode_correlation_row(row: dict, num_cols: list[str]
 
 # Column count up to which the standalone matrix runs as declarative
 # covar/stddev aggregate expressions instead of pyspark.ml.  16 columns
-# = 120 pair expressions = 2 concurrent codegen'd chunks (make_chunks) —
-# two columnar scans with zero row boxing beat ml.stat's
+# = 120 pair expressions = 3 concurrent codegen'd chunks (make_chunks) —
+# a few columnar scans with zero row boxing beat ml.stat's
 # RowMatrix path (VectorAssembler projection + per-row ml.Vector
 # allocation + an RDD treeAggregate outside whole-stage codegen) at any
 # scale; beyond ~16 columns the O(k^2) expression count grows past what
@@ -131,22 +131,7 @@ def correlation_matrix(df: DataFrame,
         *[safe_all[f"__x{pos[fold(c)]}"].cast("double").alias(s)
           for c, s in zip(num_cols, safe)])
     if len(num_cols) <= _DECLARATIVE_MAX_COLS:
-        from spark_df_profiling_spark.config import DEFAULT_CONFIG
         from spark_df_profiling_spark.plans.wide_agg import run_chunked_agg
-        from spark_df_profiling_spark.sources import (
-            input_bytes, scan_parallelism)
-        # Same small-input band as describe(): a single-row-group file
-        # pins the matrix job to ~1 task however many cores exist, so
-        # the pair expressions are fanned out as concurrent fine chunks
-        # (wide_agg._CHUNK_CAP_SMALL['pair']; bit-identical values —
-        # each expression runs over the full input in exactly one job;
-        # measured 0.78s -> 0.31s best on the 8-column sf0.1 matrix).
-        # At scale the band is off and the matrix stays a one-scan job.
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        src_bytes = input_bytes(df)
-        rg = scan_parallelism(df)
-        small = ((4 << 20) <= src_bytes < cores * (4 << 20)
-                 and rg is not None and rg < cores)
         exprs = correlation_exprs(sel, safe)
         # completeness guard: the ml path returns {} when listwise
         # deletion leaves nothing (Correlation.corr raises on empty
@@ -160,8 +145,7 @@ def correlation_matrix(df: DataFrame,
         # 8-column matrix (28 pairs ≈ 250 slots) exceeds the default
         # codegen.maxFields=100 (see session.wide_codegen).
         with wide_codegen(df.sparkSession):
-            row = run_chunked_agg(sel, exprs, DEFAULT_CONFIG,
-                                  small_input=small)
+            row = run_chunked_agg(sel, exprs)
         if not int(row.get("__n_complete") or 0):
             return {}
         # decode_correlation_row keys pairs by POSITION (__corr_{i}_{j});

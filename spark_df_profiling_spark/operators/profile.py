@@ -26,8 +26,11 @@ scalars cross py4j).
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import math
+import threading
+import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -41,7 +44,9 @@ from spark_df_profiling_spark.operators import correlation as C
 from spark_df_profiling_spark.operators import frequency as FR
 from spark_df_profiling_spark.plans import wide_agg as W
 from spark_df_profiling_spark.session import wide_codegen
-from spark_df_profiling_spark.sources import input_bytes, scan_parallelism
+from spark_df_profiling_spark.sources import input_bytes
+# unused here; kept importable because perfbench/trace.py wraps it by name
+from spark_df_profiling_spark.sources import scan_parallelism  # noqa: F401
 
 # Explicit result schema — stable across inputs (the driver smoke check
 # requires a stable schema for entry()).
@@ -142,11 +147,28 @@ def describe(df: DataFrame,
             "describe()/profile() are batch operators; for a streaming "
             "DataFrame use spark_df_profiling_spark.streaming."
             "windowed_profile (tumbling/sliding windows + watermark)")
-    with wide_codegen(df.sparkSession):
-        return _describe(df, cfg)
+    with wide_codegen(df.sparkSession), _job_tag(df.sparkSession) as tag:
+        return _describe(df, cfg, tag)
 
 
-def _describe(df: DataFrame, cfg: ProfileConfig) -> ProfileResult:
+@contextlib.contextmanager
+def _job_tag(spark: SparkSession):
+    """Tag this thread's Spark jobs with a fresh tag for the scope.
+
+    Tags are a thread-local property that ``InheritableThread`` copies,
+    so every job a describe submits from its task threads carries the
+    tag and :func:`_describe` can cancel them on error without touching
+    the caller's job group or tags."""
+    sc = spark.sparkContext
+    tag = f"spark_df_profiling-describe-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        yield tag
+    finally:
+        sc.removeJobTag(tag)
+
+
+def _describe(df: DataFrame, cfg: ProfileConfig, tag: str) -> ProfileResult:
     spark = df.sparkSession
     original_names = [f.name for f in df.schema.fields]
     # Rename every column POSITIONALLY to a safe internal name so that
@@ -155,41 +177,13 @@ def _describe(df: DataFrame, cfg: ProfileConfig) -> ProfileResult:
     # unlike F.col which resolves by — possibly ambiguous — name).
     safe_df = df.toDF(*[f"__c{i}" for i in range(len(original_names))])
     orig_df, df = df, safe_df
-    # ---- small-input detection -----------------------------------------
-    # Parquet splits cannot go below row-group granularity, so a small
-    # file-backed input pins every stat chunk to a ~1-task pass however
-    # many cores the session has (measured: the 8-column quantile chunk
-    # alone was a 2.2s single-core pass over 600k rows).  For such
-    # inputs the chunk lists are split FINER (wide_agg._CHUNK_CAP_SMALL)
-    # and more jobs run concurrently — chunk-level concurrency with
-    # column pruning is the parallelization mechanism when the scan
-    # itself cannot fan out.  Values are bit-identical under any
-    # chunking; inert for non-file frames (_input_bytes 0) and for
-    # inputs large enough to parallelize at the scan.  Lower bound
-    # 4 MiB: below it a chunk's single-task pass is already trivial and
-    # splitting only multiplies per-job submission overhead (measured:
-    # fine chunks took profile(documents, 584 KB) from 0.80s to 1.09s
-    # while taking profile(lineitem, 11 MB) from 2.62s to 2.46s).
-    cores = spark.sparkContext.defaultParallelism
-    # one inputFiles() py4j round-trip (~10-30ms), shared by the byte
-    # band, the row-group probe, the one-partition check and the T5
-    # memsize below
+    # one inputFiles() py4j round-trip (~10-30ms), shared by the
+    # one-partition check and the T5 memsize below
     try:
         src_files = orig_df.inputFiles()
     except Exception:
         src_files = []
     src_bytes = input_bytes(orig_df, files=src_files)
-    # Row-group-aware predicate: the byte band alone is only a proxy for
-    # "the scan cannot parallelize" — on a many-core cluster it could
-    # reach multi-GB files whose many row groups split fine.  The footer
-    # row-group count (metadata-only, no job) is the honest test; None
-    # (non-file / non-parquet / many files) means the scan parallelizes
-    # by other means and the band stays off.
-    rg = (scan_parallelism(orig_df, files=src_files)
-          if cfg.parallelize_small_input else None)
-    small_input = (cfg.parallelize_small_input
-                   and (4 << 20) <= src_bytes < cores * (4 << 20)
-                   and rg is not None and rg < cores)
     # Inputs Spark plans as ONE file-scan partition (a small file):
     # every profile query runs over coalesce(1).  CoalesceExec(1) reports
     # SinglePartition, so neither the global aggregates nor the
@@ -238,37 +232,37 @@ def _describe(df: DataFrame, cfg: ProfileConfig) -> ProfileResult:
     # while py4j releases the GIL during each chunk's JVM call so
     # threaded submissions already overlap analysis AND execution.
     # See OPTIMIZATION_r16.md.
-    import threading
-    # with fine chunks the jobs are ~1-task each, so a wider gate just
-    # fills idle cores; at scale (small_input False) the 8-job bound
-    # keeps driver pressure at the long-standing level.  Hard 64-job
-    # ceiling: past ~64 in-flight jobs the driver's py4j/GIL submission
-    # serialization dominates anyway, so on a many-core cluster a raw
-    # defaultParallelism gate would only add scheduler pressure, never
-    # throughput (ADVICE r15).
-    gate = threading.Semaphore(
-        min(max(8, cores), 64) if small_input else 8)
+
+    # At most 8 of this describe's jobs in flight, whatever the input
+    # size or core count.
+    gate = threading.Semaphore(8)
+    # Set on error: thunks still queued at the gate submit nothing.
+    cancelled = threading.Event()
+    sc = spark.sparkContext
+
+    def thunk(label: str, fn):
+        def run():
+            if cancelled.is_set():
+                return None
+            sc.setJobDescription(f"profile: {label}")
+            return fn()
+        return run
 
     def chunk_thunk(ch: list[str], label: str):
-        def run():
-            spark.sparkContext.setJobDescription(f"profile: {label}")
-            return df.selectExpr(*ch).collect()[0]
-        return run
+        return thunk(label, lambda: df.selectExpr(*ch).collect()[0])
 
     # Chunk-level LPT (guide §2.6): task threads start on construction
     # and the driver's py4j submissions are GIL-serialized at ~30-60ms
     # apiece, so CREATION ORDER is start order.  The quantile sketches
-    # (ObjectHashAggregate, ~0.85s each on fine-chunked lineitem) and
-    # the frequency shuffle are the long poles; submitting them BEFORE
-    # the short pass-1 light chunks starts the critical path ~0.5s
-    # earlier on a ~20-chunk profile instead of queueing it behind a
-    # dozen 0.1-0.3s chunks.  Join order (pass 1 first) is unchanged —
+    # (ObjectHashAggregate) and the frequency shuffle are the long
+    # poles; submitting them BEFORE the short pass-1 light chunks starts
+    # the critical path ~0.5s earlier on a ~20-chunk profile instead of
+    # queueing it behind a dozen 0.1-0.3s chunks.  Join order (pass 1 first) is unchanged —
     # results are dependency-joined, not order-joined.
     q_exprs = W.build_quantile_exprs(df, base_classes, cfg)
     spec_tasks = [W.InheritableTask(chunk_thunk(ch, f"quantiles #{i}"),
                                     gate)
-                  for i, ch in enumerate(
-                      W.make_chunks(q_exprs, cfg, small_input))]
+                  for i, ch in enumerate(W.make_chunks(q_exprs))]
     # Speculative frequency pass: every base-CAT (string/bool/binary)
     # column lands in freq_cols whatever its resolved class; columns of
     # OTHER base classes only join freq_cols when they resolve CONST
@@ -276,13 +270,11 @@ def _describe(df: DataFrame, cfg: ProfileConfig) -> ProfileResult:
     freq_spec_cols = [f.name for f, bc in zip(fields, base_classes)
                       if bc == S.CAT]
 
-    def freq_thunk():
-        spark.sparkContext.setJobDescription("profile: frequencies")
-        return FR.topk_frequencies(df, freq_spec_cols, cfg.top_k)
-
+    freq_thunk = thunk("frequencies", lambda: FR.topk_frequencies(
+        df, freq_spec_cols, cfg.top_k))
     freq_task = (W.InheritableTask(freq_thunk, gate)
                  if freq_spec_cols else None)
-    p1_chunks = W.make_chunks(p1_exprs, cfg, small_input)
+    p1_chunks = W.make_chunks(p1_exprs)
     p1_tasks = [W.InheritableTask(chunk_thunk(ch, f"pass1 #{i}"), gate)
                 for i, ch in enumerate(p1_chunks)]
     # Pass 2's TRUE dependency is the LIGHT pass-1 chunks only: MAD
@@ -317,8 +309,7 @@ def _describe(df: DataFrame, cfg: ProfileConfig) -> ProfileResult:
                                        include_quantiles=False)
         p2_tasks = [W.InheritableTask(chunk_thunk(ch, f"pass2 #{i}"),
                                       gate)
-                    for i, ch in enumerate(
-                        W.make_chunks(p2_exprs, cfg, small_input))] \
+                    for i, ch in enumerate(W.make_chunks(p2_exprs))] \
             if p2_exprs else []
         all_tasks.extend(p2_tasks)
 
@@ -333,8 +324,15 @@ def _describe(df: DataFrame, cfg: ProfileConfig) -> ProfileResult:
             p2.update(t_.join().asDict())
         freqs_raw = freq_task.join() if freq_task is not None else {}
     except BaseException:
-        for t_ in all_tasks:  # don't leave jobs running behind the error
-            t_.wait_noraise()
+        # Don't leave jobs running behind the error, and don't wait them
+        # out: cancel everything carrying this describe's tag.  A thunk
+        # just past the gate check can submit after a cancel, so cancel
+        # again until its task ends.
+        cancelled.set()
+        sc.cancelJobsWithTag(tag)
+        for t_ in all_tasks:
+            while not t_.wait_noraise(timeout=0.5):
+                sc.cancelJobsWithTag(tag)
         raise
 
     # ---- correlation matrix + greedy rejection -------------------------

@@ -8,10 +8,10 @@ it as one 2-phase HashAggregate (partial map-side + final), so the input is
 scanned exactly once regardless of column count.
 
 Scale notes (100 TB):
-* Expression lists are chunked at ``cfg.max_agg_exprs`` to stay clear of
-  whole-stage-codegen's 64KB method / constant-pool limits — each chunk is
-  an independent single-pass job (SURVEY §4 "our one real physical-design
-  risk").
+* Expression lists are chunked per buffer class (``_CHUNK_CAP``) to stay
+  clear of whole-stage-codegen's 64KB method / constant-pool and
+  ``codegen.maxFields`` limits — each chunk is an independent single-pass
+  job (SURVEY §4 "our one real physical-design risk").
 * Distinct counts default to ``approx_count_distinct`` (HLL++): exact
   multi-column countDistinct forces an Expand-based plan whose row
   multiplication is catastrophic at scale.  The oracle/test path flips
@@ -260,11 +260,8 @@ def _expr_class(s: str) -> str:
         # matrix alone holds ~250 slots — past codegen.maxFields they
         # silently demote the WHOLE aggregate to interpreted execution
         # (measured: the one-job 8-column matrix runs 2.7s interpreted
-        # vs 0.8s codegen'd on sf0.1 lineitem).  Own class: budgeted
-        # caps keep every pair chunk codegen'd, and the small-input
-        # band fans them out (cap 4 -> 8 concurrent 1-task jobs,
-        # 0.31s best — values bit-identical, each expression still
-        # computed over the full input in exactly one job).
+        # vs 0.8s codegen'd on sf0.1 lineitem).  Own class: its
+        # budgeted cap keeps every pair chunk codegen'd.
         return "pair"
     return "light"
 
@@ -277,59 +274,37 @@ def _expr_class(s: str) -> str:
 _CHUNK_CAP = {"light": 64, "sketch": 48, "object": 32, "pair": 40}
 
 
-# Chunk caps for inputs whose SCAN cannot parallelize (single parquet
-# row group / single small file): there every chunk job is a ~1-task
-# pass, so concurrency across MANY SMALL chunks is the only
-# parallelization mechanism — and column pruning keeps the total bytes
-# decoded across chunks roughly constant (each chunk reads only its own
-# columns).  Measured on 600k-row 1-row-group lineitem, local[32]: the
-# 8-column percentile_approx chunk 2.2s as ONE job vs 0.85s as 8
-# concurrent single-column jobs; light chunks similar.  Values are
-# bit-identical under any chunking (each aggregate expression runs over
-# the full input in exactly one job; partitioning is untouched).
-_CHUNK_CAP_SMALL = {"light": 16, "sketch": 3, "object": 1, "pair": 4}
-
-
-def make_chunks(exprs: list[str], cfg: ProfileConfig,
-                small_input: bool = False) -> list[list[str]]:
-    """Split aggregate expressions into buffer-class-homogeneous chunks.
+def make_chunks(exprs: list[str]) -> list[list[str]]:
+    """Split aggregate expressions into buffer-class-homogeneous chunks
+    of at most ``_CHUNK_CAP[class]`` expressions each.
 
     Grouping rules (measured on 600k-row lineitem, local[32]):
     * declarative aggs mixed with HLL sketches lose whole-stage codegen
       (buffer > codegen.maxFields) — 9.3s; split into two chunks — 1.2s.
     * percentile sketches demote a chunk to ObjectHashAggregateExec; they
       get their own chunk so histograms/MAD stay codegen'd.
-    * ``small_input=True`` switches to the finer ``_CHUNK_CAP_SMALL``
-      caps (see above) for inputs whose scan cannot parallelize.
+    Values are identical under any chunking: each expression runs over
+    the full input in exactly one job.
     """
-    caps = _CHUNK_CAP_SMALL if small_input else _CHUNK_CAP
-    # sketch chunks FIRST: task threads start in list order and the HLL
-    # sketch chunks are pass 1's long poles (0.3-0.6s vs 0.1-0.3s for
-    # light chunks on fine-chunked lineitem) — and pass 2 cannot start
-    # before EVERY pass-1 chunk (classes need the distinct counts, bins
-    # need min/max), so the longest chunks should not queue behind a
-    # dozen short ones (LPT, guide §2.6; same reasoning as submitting
-    # the quantile sketches before pass 1).  Measured NEUTRAL at sf0.1
-    # local[32] (interleaved best-of-8: lineitem 1.52s med both orders
-    # — the 32-slot small-input gate admits every chunk within the
-    # ~0.7s submission spread, so nothing queues); it matters when the
-    # chunk count exceeds the in-flight gate (8 at scale).  Chunk
-    # contents are unchanged — only the submission order.
+    # sketch chunks FIRST: task threads start in list order, and the HLL
+    # sketch chunks are pass 1's long poles, so they should not queue
+    # behind the short light chunks when the chunk count exceeds
+    # describe()'s in-flight gate (LPT, guide §2.6; same reasoning as
+    # submitting the quantile sketches before pass 1).  Chunk contents
+    # are unchanged — only the submission order.
     groups: dict[str, list[str]] = {"sketch": [], "pair": [],
                                     "light": [], "object": []}
     for e in exprs:
         groups[_expr_class(e)].append(e)
     chunks: list[list[str]] = []
     for klass, es in groups.items():
-        step = max(1, min(cfg.max_agg_exprs, caps[klass]))
+        step = _CHUNK_CAP[klass]
         for start in range(0, len(es), step):
             chunks.append(es[start:start + step])
     return chunks
 
 
-def run_chunked_agg(df: DataFrame, exprs: list[str],
-                    cfg: ProfileConfig,
-                    small_input: bool = False) -> dict[str, Any]:
+def run_chunked_agg(df: DataFrame, exprs: list[str]) -> dict[str, Any]:
     """Execute a wide agg, chunked by buffer class, chunks run CONCURRENTLY.
 
     Chunking per :func:`make_chunks`.  Each chunk is one Spark job (one
@@ -357,7 +332,7 @@ def run_chunked_agg(df: DataFrame, exprs: list[str],
     out: dict[str, Any] = {}
     if not exprs:
         return out
-    chunks = make_chunks(exprs, cfg, small_input)
+    chunks = make_chunks(exprs)
     if len(chunks) == 1:
         return df.selectExpr(*chunks[0]).collect()[0].asDict()
     rows = run_inheritable(
@@ -447,10 +422,11 @@ class InheritableTask:
             raise self._err
         return self._result
 
-    def wait_noraise(self) -> None:
+    def wait_noraise(self, timeout: float | None = None) -> bool:
         """Join without raising (error-path cleanup: don't leave Spark
-        jobs running behind an exception)."""
-        self._thread.join()
+        jobs running behind an exception); True once the thunk ended."""
+        self._thread.join(timeout)
+        return not self._thread.is_alive()
 
 
 def stat_key(i: int, stat: str) -> str:

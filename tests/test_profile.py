@@ -194,3 +194,84 @@ def test_run_inheritable_order_bound_and_errors(spark):
 
     with pytest.raises(RuntimeError, match="boom"):
         run_inheritable([boom])
+
+
+def test_exact_keeps_every_other_field():
+    import dataclasses
+    cfg = ProfileConfig(
+        bins=7, sample=3, corr_reject=0.5, top_k=9, distinct_rsd=0.02,
+        quantile_accuracy=500, quantiles=(0.1, 0.9), fix_decimal=False,
+        profile_complex=False, compute_correlations=False,
+        compute_histograms=False, compute_mad=False)
+    switched = {"exact_distinct", "exact_quantiles"}
+    others = [f for f in dataclasses.fields(ProfileConfig)
+              if f.name not in switched]
+    # every other field is off its default, so a dropped one shows
+    assert all(getattr(cfg, f.name) != f.default for f in others)
+    ex = cfg.exact()
+    assert ex.exact_distinct and ex.exact_quantiles
+    for f in others:
+        assert getattr(ex, f.name) == getattr(cfg, f.name), f.name
+
+
+def test_describe_error_cancels_in_flight_jobs(spark, lineitem,
+                                               monkeypatch):
+    """An error in describe() cancels the jobs it still has running,
+    by its own job tag, instead of waiting them out; the caller's job
+    group and tags reach those jobs and are unchanged afterwards."""
+    import threading
+    import time
+
+    from spark_df_profiling_spark.operators import frequency as FR
+    from spark_df_profiling_spark.plans import wide_agg as W
+
+    sc = spark.sparkContext
+    sleep_s = 120
+    seen = {}
+    started = threading.Event()
+
+    def slow_topk(df, cols, k, *args, **kwargs):
+        seen["tags"] = set(sc.getJobTags())
+        seen["group"] = sc.getLocalProperty("spark.jobGroup.id")
+        # local to this task thread: a cancel interrupts the sleep, so
+        # the task frees its core at once
+        sc.setInterruptOnCancel(True)
+        started.set()
+        return spark.range(1, numPartitions=1).selectExpr(
+            f"reflect('java.lang.Thread', 'sleep', {sleep_s * 1000}L)"
+        ).collect()
+
+    def failing_pass2(*args, **kwargs):
+        assert started.wait(60)
+        time.sleep(1.0)  # the slow job is running by now
+        raise RuntimeError("pass 2 failed")
+
+    monkeypatch.setattr(FR, "topk_frequencies", slow_topk)
+    monkeypatch.setattr(W, "build_pass2_exprs", failing_pass2)
+    sc.setJobGroup("caller-group", "caller jobs")
+    sc.addJobTag("caller-tag")
+    try:
+        t0 = time.perf_counter()
+        with pytest.raises(RuntimeError, match="pass 2 failed"):
+            describe(lineitem)
+        elapsed = time.perf_counter() - t0
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert set(sc.getJobTags()) == {"caller-tag"}
+    finally:
+        sc.removeJobTag("caller-tag")
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+    assert elapsed < sleep_s / 4
+    assert seen["group"] == "caller-group"
+    (tag,) = seen["tags"] - {"caller-tag"}
+    tracker = sc.statusTracker()
+    statuses = [tracker.getJobInfo(j).status
+                for j in sc._jsc.sc().statusTracker().getJobIdsForTag(tag)]
+    assert "FAILED" in statuses  # the cancelled slow job
+    assert "RUNNING" not in statuses
+    deadline = time.time() + 30
+    while tracker.getActiveStageIds() and time.time() < deadline:
+        time.sleep(0.1)
+    assert not tracker.getActiveStageIds()

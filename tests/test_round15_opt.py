@@ -1,10 +1,8 @@
-"""Round-15 optimization internals: fine chunking, small-scan fan-out,
-minhash persist toggle, pow-free sig() rounding."""
+"""Round-15 optimization internals: buffer-class chunking, small-scan
+fan-out, minhash persist toggle, pow-free sig() rounding."""
 
 import pytest
 from pyspark.sql import functions as F
-
-from spark_df_profiling_spark.config import ProfileConfig
 
 
 @pytest.fixture(scope="module")
@@ -12,40 +10,34 @@ def li(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/lineitem.parquet")
 
 
-def test_make_chunks_small_input_caps():
+def test_make_chunks_caps():
     from spark_df_profiling_spark.plans.wide_agg import (
-        _CHUNK_CAP, _CHUNK_CAP_SMALL, make_chunks)
-    cfg = ProfileConfig()
+        _CHUNK_CAP, make_chunks)
     exprs = ([f"count(`c{i}`) AS `k{i}`" for i in range(40)]
              + [f"approx_count_distinct(`c{i}`) AS `d{i}`"
                 for i in range(7)]
              + [f"percentile_approx(`c{i}`, 0.5, 100) AS `q{i}`"
                 for i in range(3)])
-    for small, caps in ((False, _CHUNK_CAP), (True, _CHUNK_CAP_SMALL)):
-        chunks = make_chunks(exprs, cfg, small_input=small)
-        # partition property: every expr in exactly one chunk
-        flat = [e for ch in chunks for e in ch]
-        assert sorted(flat) == sorted(exprs)
-        for ch in chunks:
-            kind = ("object" if "percentile" in ch[0] else
-                    "sketch" if "approx_count_distinct" in ch[0]
-                    else "light")
-            assert len(ch) <= caps[kind]
-            # chunks stay buffer-class homogeneous
-            assert all(
-                ("percentile" in e) == (kind == "object")
-                and ("approx_count_distinct" in e) == (kind == "sketch")
-                for e in ch)
-    # the small caps really are finer where it matters
-    assert _CHUNK_CAP_SMALL["object"] == 1
-    assert _CHUNK_CAP_SMALL["light"] < _CHUNK_CAP["light"]
+    chunks = make_chunks(exprs)
+    # partition property: every expr in exactly one chunk
+    flat = [e for ch in chunks for e in ch]
+    assert sorted(flat) == sorted(exprs)
+    for ch in chunks:
+        kind = ("object" if "percentile" in ch[0] else
+                "sketch" if "approx_count_distinct" in ch[0]
+                else "light")
+        assert len(ch) <= _CHUNK_CAP[kind]
+        # chunks stay buffer-class homogeneous
+        assert all(
+            ("percentile" in e) == (kind == "object")
+            and ("approx_count_distinct" in e) == (kind == "sketch")
+            for e in ch)
 
 
 def test_chunking_is_value_preserving(spark, li):
     """The same aggregate expressions produce identical values whether
-    evaluated as one wide selectExpr or as fine per-class chunks."""
+    evaluated as one wide selectExpr or as per-class chunks."""
     from spark_df_profiling_spark.plans.wide_agg import make_chunks
-    cfg = ProfileConfig()
     exprs = [
         "count(1) AS `n`",
         "sum(CAST(l_quantity AS DOUBLE)) AS `s`",
@@ -57,7 +49,9 @@ def test_chunking_is_value_preserving(spark, li):
     ]
     one = li.selectExpr(*exprs).collect()[0].asDict()
     merged = {}
-    for ch in make_chunks(exprs, cfg, small_input=True):
+    chunks = make_chunks(exprs)
+    assert len(chunks) == 3  # light, sketch and object classes
+    for ch in chunks:
         merged.update(li.selectExpr(*ch).collect()[0].asDict())
     assert merged == one
 

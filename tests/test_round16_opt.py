@@ -1,6 +1,6 @@
-"""Round-16 optimization internals: row-group-aware small-input
-predicate (scan_parallelism) gating the fine-chunk band and the
-small-scan fan-out, and describe()'s one-partition plan."""
+"""Round-16 optimization internals: the row-group count
+(scan_parallelism) gating the small-scan fan-out, and describe()'s
+one-partition plan."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -56,22 +56,6 @@ def test_small_scan_inert_when_row_groups_suffice(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(p1)
     one = spark.read.parquet(p1)
     assert parallelize_small_scan(one).rdd.getNumPartitions() == cores
-
-
-def test_describe_small_input_band_gates_on_row_groups(spark, tmp_path):
-    """describe()'s fine-chunk band uses the same footer bound: a
-    many-row-group input in the byte band profiles with the AT-SCALE
-    chunk caps (values identical either way — pinned separately by
-    test_chunking_is_value_preserving)."""
-    from spark_df_profiling_spark.sources import scan_parallelism
-    cores = spark.sparkContext.defaultParallelism
-    p = str(tmp_path / "gate.parquet")
-    _write_multi_rowgroup(spark, p, n_groups=64)
-    df = spark.read.parquet(p)
-    rg = scan_parallelism(df)
-    # the describe() predicate: band AND rg is not None AND rg < cores
-    assert not (rg is not None and rg < cores), \
-        "many-row-group file must fail the small_input predicate"
 
 
 def test_first_digit_pow_free(spark):

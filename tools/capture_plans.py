@@ -60,8 +60,6 @@ def main() -> None:
         from spark_df_profiling_spark.plans import wide_agg as W
 
         sections: list[str] = []
-        orig_run = W.run_chunked_agg
-
         orig_make = W.make_chunks
 
         def _chunk_df(ch):
@@ -71,12 +69,12 @@ def main() -> None:
             safe = d.toDF(*[f"__c{i}" for i in range(len(d.columns))])
             return safe.selectExpr(*ch)
 
-        def spy_make(exprs, cfg, small_input=False):
-            chunks = orig_make(exprs, cfg, small_input)
+        def spy_make(exprs):
+            chunks = orig_make(exprs)
             for ch in chunks:
                 sections.append(
                     f"=== chunked agg [{W._expr_class(ch[0])}] "
-                    f"({len(ch)} exprs, small_input={small_input}) ===\n"
+                    f"({len(ch)} exprs) ===\n"
                     + fmt(_chunk_df(ch)))
             return chunks
 
@@ -114,9 +112,9 @@ def main() -> None:
         li = t("lineitem")
         if len(cols) <= getattr(C, "_DECLARATIVE_MAX_COLS", 0):
             # the declarative branch through the operator's OWN
-            # chunking (r16: pair-class fine chunks in the small-input
-            # band), captured by spying run_chunked_agg's make_chunks —
-            # no hand-mirrored plan that can drift
+            # chunking (pair-class chunks), captured by spying
+            # run_chunked_agg's make_chunks — no hand-mirrored plan
+            # that can drift
             from spark_df_profiling_spark.plans import wide_agg as W
             sections: list[str] = []
             orig_make = W.make_chunks
@@ -124,13 +122,13 @@ def main() -> None:
             sel = li.select(*[li[c].cast("double").alias(s)
                               for c, s in zip(cols, safe)])
 
-            def spy_make(exprs, cfg, small_input=False):
-                chunks = orig_make(exprs, cfg, small_input)
+            def spy_make(exprs):
+                chunks = orig_make(exprs)
                 for ch in chunks:
                     sections.append(
                         f"=== declarative corr chunk "
-                        f"[{W._expr_class(ch[0])}] ({len(ch)} exprs, "
-                        f"small_input={small_input}) ===\n"
+                        f"[{W._expr_class(ch[0])}] ({len(ch)} exprs) "
+                        f"===\n"
                         + fmt(sel.selectExpr(*ch)))
                 return chunks
 
