@@ -1,9 +1,11 @@
 """Pearson correlation matrix + CORR rejection (SURVEY §2.7 R1/R2).
 
 The reference computes the matrix with one ``df.corr(x, y)`` driver call per
-pair — O(k^2) Spark jobs (``base.py::describe>>corr_matrix``).  Here the full
-matrix is ONE job via ``pyspark.ml.stat.Correlation`` over an assembled
-vector column.
+pair — O(k^2) Spark jobs (``base.py::describe>>corr_matrix``).  Here the
+pairs are declarative covar/stddev aggregates in their own ``pair`` chunks,
+one job per 40 pairs (``plans.wide_agg._CHUNK_CAP``), up to
+``_DECLARATIVE_MAX_COLS`` columns; wider matrices are ONE job via
+``pyspark.ml.stat.Correlation`` over an assembled vector column.
 
 Reference semantics preserved exactly:
 * listwise deletion — ``na.drop(how="any")`` across ALL numeric columns
@@ -26,16 +28,17 @@ from spark_df_profiling_spark.session import wide_codegen
 
 
 def correlation_exprs(df: DataFrame, num_cols: list[str]) -> list[str]:
-    """Pearson matrix as pass-1 aggregate SQL expressions (zero extra jobs).
+    """Pearson matrix as ``pair``-class aggregate SQL expressions.
 
     Pearson corr is a declarative aggregate, so the k·(k-1)/2
-    upper-triangle correlations ride the same single-pass wide agg as
-    every other statistic — where the reference spends O(k^2) separate
-    Spark jobs (``base.py::describe>>corr_matrix``), this costs zero
-    extra passes.  SQL-string form for the same reason as
-    ``build_pass1_exprs`` (py4j round-trip elimination); Catalyst dedups
-    the repeated stddev/covar aggregate children, so the textual
-    repetition costs nothing physically.
+    upper-triangle correlations run as wide aggregates like every other
+    statistic: one job per ``pair`` chunk of up to 40 pairs (they hold
+    ~9 buffer slots each, too many to share a light chunk), where the
+    reference spends O(k^2) separate Spark jobs
+    (``base.py::describe>>corr_matrix``).  SQL-string form for the same
+    reason as ``build_pass1_exprs`` (py4j round-trip elimination);
+    Catalyst dedups the repeated stddev/covar aggregate children, so the
+    textual repetition costs nothing physically.
 
     Listwise deletion (reference semantics: ``na.drop(how='any')`` across
     ALL numeric columns) is emulated by null-masking each operand with
@@ -92,16 +95,16 @@ _DECLARATIVE_MAX_COLS = 16
 
 def correlation_matrix(df: DataFrame,
                        num_cols: list[str]) -> dict[tuple[str, str], float]:
-    """Full Pearson matrix over num_cols in one pass.
+    """Full Pearson matrix over num_cols.
 
     Returns {(col_x, col_y): rho}.  Empty dict when fewer than 2 columns
     or no complete rows survive listwise deletion.
 
     Up to ``_DECLARATIVE_MAX_COLS`` columns the matrix is computed with
-    the same declarative :func:`correlation_exprs` aggregates that ride
+    the same declarative :func:`correlation_exprs` aggregates as
     profile()'s pass 1 (whole-stage codegen, columnar parquet read, no
-    per-row vector allocation); beyond that, one ``pyspark.ml.stat``
-    job.  Both paths implement textbook Pearson over listwise-deleted
+    per-row vector allocation): one job per 40-pair chunk plus one for
+    the complete-row count; beyond that, one ``pyspark.ml.stat`` job.  Both paths implement textbook Pearson over listwise-deleted
     rows — values agree to float rounding (the oracle's 5-significant-
     digit normalization absorbs the summation-order difference).
     """
@@ -132,15 +135,15 @@ def correlation_matrix(df: DataFrame,
           for c, s in zip(num_cols, safe)])
     if len(num_cols) <= _DECLARATIVE_MAX_COLS:
         from spark_df_profiling_spark.plans.wide_agg import run_chunked_agg
-        exprs = correlation_exprs(sel, safe)
         # completeness guard: the ml path returns {} when listwise
         # deletion leaves nothing (Correlation.corr raises on empty
         # input) — replicate that contract explicitly
         allnn = " AND ".join(
             f"(`{s}` IS NOT NULL AND NOT isnan(CAST(`{s}` AS DOUBLE)))"
             for s in safe)
-        exprs.append(f"count(CASE WHEN {allnn} THEN 1 END) "
-                     f"AS `__n_complete`")
+        exprs = {"pair": correlation_exprs(sel, safe),
+                 "light": [f"count(CASE WHEN {allnn} THEN 1 END) "
+                           f"AS `__n_complete`"]}
         # The pair aggregates hold ~9 buffer slots each, so even the
         # 8-column matrix (28 pairs ≈ 250 slots) exceeds the default
         # codegen.maxFields=100 (see session.wide_codegen).

@@ -5,10 +5,11 @@ Re-implements the full statistics surface of the reference's
 Spark lifecycle from SURVEY §3:
 
     pass 0  schema-only type dispatch                       (no job)
-    pass 1  wide aggs split into buffer-class chunks: counts/
-            distinct/moments/zeros/infinities/min/max, plus the
-            Pearson matrix as corr() exprs (<= 50 num cols)  (1 job/chunk)
-            quantile sketches, concurrent with pass 1        (1 job/chunk)
+    pass 1  wide aggs split into buffer-class chunks: light
+            counts/moments/zeros/infinities/min/max, sketch
+            distincts, pair chunks of covar/stddev Pearson
+            exprs (<= 50 num cols, 40 pairs a chunk)         (1 job/chunk)
+            object quantile sketches, concurrent with pass 1 (1 job/chunk)
             all categorical top-k freqs, one stacked group-by (1 job)
     pass 2  MAD + histograms (need pass-1 mean/min/max)      (1 job/chunk)
 
@@ -201,26 +202,27 @@ def _describe(df: DataFrame, cfg: ProfileConfig, tag: str) -> ProfileResult:
     # ---- overlapped job pipeline ---------------------------------------
     # Dependency-driven scheduling instead of serial passes: only MAD and
     # histogram bins truly need pass-1 results (mean / min / max), so the
-    # quantile-sketch job (schema-only, see build_quantile_exprs) and the
+    # quantile-sketch chunks (schema-only, see build_pass1_exprs) and the
     # frequency shuffle (string/bool columns ALWAYS resolve to a
     # freq-eligible class — CAT/UNIQUE/CONST) launch CONCURRENTLY with
-    # pass 1.  Wall-clock drops from
+    # the rest of pass 1.  Wall-clock drops from
     #     pass1 + (quantiles | pass2) + freq       (three barriers)
     # to  max(pass1, quantiles, freq) + pass2-lite (one barrier)
     # with bit-identical output.  describe() runs all of it under
     # session.wide_codegen: profiles routinely exceed the default
     # codegen.maxFields=100.
     p1_exprs = W.build_pass1_exprs(df, base_classes, cfg)
-    # Correlation matrix rides pass 1 as declarative corr() expressions
-    # (zero extra jobs) up to 50 numeric columns; beyond that the
-    # expression count grows O(k^2) and the one-job ml.stat path wins.
+    # Up to 50 numeric columns the correlation matrix joins pass 1 as
+    # declarative covar/stddev pair expressions, in their own pair
+    # chunks (one job per 40 pairs); beyond that the expression count
+    # grows O(k^2) and the one-job ml.stat path wins.
     dtype_num_cols = [f.name for f, cls in zip(fields, base_classes)
                       if S.is_numeric(cls)]
     corr_in_pass1 = (cfg.compute_correlations
                      and cfg.corr_reject is not None
                      and 2 <= len(dtype_num_cols) <= 50)
     if corr_in_pass1:
-        p1_exprs.extend(C.correlation_exprs(df, dtype_num_cols))
+        p1_exprs["pair"] = C.correlation_exprs(df, dtype_num_cols)
 
     # NOTE (r16 negative result): packing each batch's chunks into one
     # SELECT of uncorrelated scalar subqueries — one py4j submission,
@@ -253,16 +255,17 @@ def _describe(df: DataFrame, cfg: ProfileConfig, tag: str) -> ProfileResult:
 
     # Chunk-level LPT (guide §2.6): task threads start on construction
     # and the driver's py4j submissions are GIL-serialized at ~30-60ms
-    # apiece, so CREATION ORDER is start order.  The quantile sketches
-    # (ObjectHashAggregate) and the frequency shuffle are the long
-    # poles; submitting them BEFORE the short pass-1 light chunks starts
-    # the critical path ~0.5s earlier on a ~20-chunk profile instead of
-    # queueing it behind a dozen 0.1-0.3s chunks.  Join order (pass 1 first) is unchanged —
-    # results are dependency-joined, not order-joined.
-    q_exprs = W.build_quantile_exprs(df, base_classes, cfg)
+    # apiece, so CREATION ORDER is start order.  The long poles go
+    # first: the quantile sketches (ObjectHashAggregate), the frequency
+    # shuffle, then the HLL sketch and pair chunks; submitting them
+    # BEFORE the short light chunks starts the critical path ~0.5s
+    # earlier on a ~20-chunk profile instead of queueing it behind a
+    # dozen 0.1-0.3s chunks.  Results are dependency-joined, not
+    # order-joined.
     spec_tasks = [W.InheritableTask(chunk_thunk(ch, f"quantiles #{i}"),
                                     gate)
-                  for i, ch in enumerate(W.make_chunks(q_exprs))]
+                  for i, ch in enumerate(
+                      W.make_chunks("object", p1_exprs["object"]))]
     # Speculative frequency pass: every base-CAT (string/bool/binary)
     # column lands in freq_cols whatever its resolved class; columns of
     # OTHER base classes only join freq_cols when they resolve CONST
@@ -274,9 +277,10 @@ def _describe(df: DataFrame, cfg: ProfileConfig, tag: str) -> ProfileResult:
         df, freq_spec_cols, cfg.top_k))
     freq_task = (W.InheritableTask(freq_thunk, gate)
                  if freq_spec_cols else None)
-    p1_chunks = W.make_chunks(p1_exprs)
+    p1_chunks = [(klass, ch) for klass in ("sketch", "pair", "light")
+                 for ch in W.make_chunks(klass, p1_exprs.get(klass, []))]
     p1_tasks = [W.InheritableTask(chunk_thunk(ch, f"pass1 #{i}"), gate)
-                for i, ch in enumerate(p1_chunks)]
+                for i, (_, ch) in enumerate(p1_chunks)]
     # Pass 2's TRUE dependency is the LIGHT pass-1 chunks only: MAD
     # needs mean, histogram bins need min/max/count — all light-class
     # results.  The distinct counts (sketch chunks, pass 1's 0.3-0.6s
@@ -289,39 +293,31 @@ def _describe(df: DataFrame, cfg: ProfileConfig, tag: str) -> ProfileResult:
     # sketch/pair/quantile tail instead of serializing behind it
     # (gantt: lineitem pass 2 started 1.83s after the timed window
     # opened, 0.6-0.9s after its true inputs were ready).
-    light_tasks = [t for ch, t in zip(p1_chunks, p1_tasks)
-                   if W._expr_class(ch[0]) == "light"]
-    slow_tasks = [t for ch, t in zip(p1_chunks, p1_tasks)
-                  if W._expr_class(ch[0]) != "light"]
+    light_tasks = [t for (klass, _), t in zip(p1_chunks, p1_tasks)
+                   if klass == "light"]
+    slow_tasks = [t for (klass, _), t in zip(p1_chunks, p1_tasks)
+                  if klass != "light"]
     all_tasks = p1_tasks + spec_tasks + ([freq_task] if freq_task else [])
 
-    p1: dict[str, Any] = {}
-    p2: dict[str, Any] = {}
+    # Every alias is unique across chunks and passes, so pass-1, pass-2
+    # and quantile results all merge into this one dict.
+    stats: dict[str, Any] = {}
     try:
         for t_ in light_tasks:
-            p1.update(t_.join().asDict())
-        n = int(p1.get("__n") or 0)
+            stats.update(t_.join().asDict())
+        n = int(stats.get("__n") or 0)
         if n == 0:
             raise ValueError("df cannot be empty")
 
         # ---- pass 2: MAD + histograms (light-dependent only) ----------
-        p2_exprs = W.build_pass2_exprs(df, base_classes, p1, cfg,
-                                       include_quantiles=False)
+        p2_exprs = W.build_pass2_exprs(df, base_classes, stats, cfg)
         p2_tasks = [W.InheritableTask(chunk_thunk(ch, f"pass2 #{i}"),
                                       gate)
-                    for i, ch in enumerate(W.make_chunks(p2_exprs))] \
-            if p2_exprs else []
+                    for i, ch in enumerate(W.make_chunks("light", p2_exprs))]
         all_tasks.extend(p2_tasks)
 
-        for t_ in slow_tasks:
-            p1.update(t_.join().asDict())
-        distincts = [int(p1.get(W.stat_key(i, "distinct")) or 0)
-                     for i in range(len(fields))]
-        classes = [S.resolve_class(bc, d, n)
-                   for bc, d in zip(base_classes, distincts)]
-
-        for t_ in spec_tasks + p2_tasks:
-            p2.update(t_.join().asDict())
+        for t_ in slow_tasks + spec_tasks + p2_tasks:
+            stats.update(t_.join().asDict())
         freqs_raw = freq_task.join() if freq_task is not None else {}
     except BaseException:
         # Don't leave jobs running behind the error, and don't wait them
@@ -334,6 +330,10 @@ def _describe(df: DataFrame, cfg: ProfileConfig, tag: str) -> ProfileResult:
             while not t_.wait_noraise(timeout=0.5):
                 sc.cancelJobsWithTag(tag)
         raise
+    distincts = [int(stats.get(W.stat_key(i, "distinct")) or 0)
+                 for i in range(len(fields))]
+    classes = [S.resolve_class(bc, d, n)
+               for bc, d in zip(base_classes, distincts)]
 
     # ---- correlation matrix + greedy rejection -------------------------
     # Rejection applies among columns RESOLVED as NUM (a constant numeric
@@ -347,7 +347,7 @@ def _describe(df: DataFrame, cfg: ProfileConfig, tag: str) -> ProfileResult:
     if cfg.compute_correlations and cfg.corr_reject is not None \
             and len(num_cols) >= 2:
         if corr_in_pass1:
-            corr_safe = C.decode_correlation_row(p1, dtype_num_cols)
+            corr_safe = C.decode_correlation_row(stats, dtype_num_cols)
         else:
             corr_safe = C.correlation_matrix(df, num_cols)
         rej_safe = C.greedy_rejection(num_cols, corr_safe, cfg.corr_reject)
@@ -372,11 +372,9 @@ def _describe(df: DataFrame, cfg: ProfileConfig, tag: str) -> ProfileResult:
 
     # ---- assemble the profile DataFrame (driver: O(#cols) scalars) -----
     rows = []
-    for i, (f_, base_cls, cls) in enumerate(
-            zip(fields, base_classes, classes)):
-        rows.append(_assemble_row(i, f_, base_cls, cls, n, p1, p2,
-                                  freqs, rejected, cfg,
-                                  name=original_names[i]))
+    for i, (f_, cls) in enumerate(zip(fields, classes)):
+        rows.append(_assemble_row(i, f_, cls, n, stats, freqs, rejected,
+                                  cfg, name=original_names[i]))
     variables = _local_result_frame(spark, rows)
 
     # ---- table-level stats (T1-T5) -------------------------------------
@@ -489,19 +487,18 @@ def _local_result_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
             spark.sparkContext.parallelize(rows, 1), PROFILE_SCHEMA)
 
 
-def _assemble_row(i: int, f_: T.StructField, base_cls: str, cls: str,
-                  n: int, p1: dict, p2: dict,
-                  freqs: dict, rejected: dict,
+def _assemble_row(i: int, f_: T.StructField, cls: str, n: int,
+                  stats: dict, freqs: dict, rejected: dict,
                   cfg: ProfileConfig, name: str | None = None) -> dict[str, Any]:
     k = W.stat_key
     name = name if name is not None else f_.name
-    cnt = int(p1.get(k(i, "count")) or 0)
-    distinct = int(p1.get(k(i, "distinct")) or 0)
+    cnt = int(stats.get(k(i, "count")) or 0)
+    distinct = int(stats.get(k(i, "distinct")) or 0)
     n_missing = n - cnt
     is_num = S.is_numeric(cls)
 
-    def fnum(stat: str, src: dict = p1) -> float | None:
-        v = src.get(k(i, stat))
+    def fnum(stat: str) -> float | None:
+        v = stats.get(k(i, stat))
         return float(v) if v is not None else None
 
     row: dict[str, Any] = {
@@ -534,9 +531,9 @@ def _assemble_row(i: int, f_: T.StructField, base_cls: str, cls: str,
     if is_num:
         mean, mn, mx = fnum("mean"), fnum("min"), fnum("max")
         std = fnum("std")
-        zeros = p1.get(k(i, "zeros"))
-        inf = p1.get(k(i, "inf"))
-        nan = p1.get(k(i, "nan"))
+        zeros = stats.get(k(i, "zeros"))
+        inf = stats.get(k(i, "inf"))
+        nan = stats.get(k(i, "nan"))
         row.update({
             "mean": mean, "std": std, "variance": fnum("variance"),
             "skewness": fnum("skewness"), "kurtosis": fnum("kurtosis"),
@@ -549,14 +546,14 @@ def _assemble_row(i: int, f_: T.StructField, base_cls: str, cls: str,
             "n_infinite": int(inf) if inf is not None else 0,
             "p_infinite": (int(inf) / n) if inf is not None and n else 0.0,
             "n_nan": int(nan) if nan is not None else 0,
-            "mad": fnum("mad", p2),
+            "mad": fnum("mad"),
         })
         sk, ku = row["skewness"], row["kurtosis"]
         nn = row.get("count")
         if sk is not None and ku is not None and nn \
                 and math.isfinite(sk) and math.isfinite(ku):
             row["jarque_bera"] = nn / 6.0 * (sk * sk + ku * ku / 4.0)
-        qs = p2.get(k(i, "quantiles"))
+        qs = stats.get(k(i, "quantiles"))
         if qs is not None:
             labels = ["q05", "q25", "q50", "q75", "q95"]
             for lbl, v in zip(labels, list(qs)):
@@ -568,9 +565,9 @@ def _assemble_row(i: int, f_: T.StructField, base_cls: str, cls: str,
             row["cv"] = std / mean
         if cfg.compute_histograms and mn is not None and mx is not None \
                 and math.isfinite(mn) and math.isfinite(mx):
-            row["histogram"] = _histogram_from(p2, i, mn, mx, cnt, cfg)
+            row["histogram"] = _histogram_from(stats, i, mn, mx, cnt, cfg)
     elif cls == S.DATE:
-        mn_d, mx_d = p1.get(k(i, "min_date")), p1.get(k(i, "max_date"))
+        mn_d, mx_d = stats.get(k(i, "min_date")), stats.get(k(i, "max_date"))
         row.update({
             "min_date": mn_d.isoformat() if mn_d is not None else None,
             "max_date": mx_d.isoformat() if mx_d is not None else None,
@@ -579,13 +576,14 @@ def _assemble_row(i: int, f_: T.StructField, base_cls: str, cls: str,
         mn_e, mx_e = W._to_epoch(mn_d), W._to_epoch(mx_d)
         if cfg.compute_histograms and mn_e is not None and mx_e is not None \
                 and mx_e > mn_e:
-            row["histogram"] = _histogram_from(p2, i, mn_e, mx_e, cnt, cfg)
+            row["histogram"] = _histogram_from(stats, i, mn_e, mx_e, cnt,
+                                               cfg)
     elif cls in (S.ARRAY, S.MAP):
-        ms = p1.get(k(i, "mean_size"))
+        ms = stats.get(k(i, "mean_size"))
         row.update({
             "mean_size": float(ms) if ms is not None else None,
-            "min_size": p1.get(k(i, "min_size")),
-            "max_size": p1.get(k(i, "max_size")),
+            "min_size": stats.get(k(i, "min_size")),
+            "max_size": stats.get(k(i, "max_size")),
         })
 
     fr = freqs.get(name)
@@ -602,7 +600,7 @@ def _assemble_row(i: int, f_: T.StructField, base_cls: str, cls: str,
     return row
 
 
-def _histogram_from(p2: dict, i: int, mn: float, mx: float, cnt: int,
+def _histogram_from(stats: dict, i: int, mn: float, mx: float, cnt: int,
                     cfg: ProfileConfig) -> list[dict[str, Any]] | None:
     k = W.stat_key
     if mx <= mn:
@@ -611,7 +609,7 @@ def _histogram_from(p2: dict, i: int, mn: float, mx: float, cnt: int,
     width = (mx - mn) / cfg.bins
     out = []
     for b in range(cfg.bins):
-        v = p2.get(k(i, f"hist{b}"))
+        v = stats.get(k(i, f"hist{b}"))
         if v is None:
             return None
         out.append({

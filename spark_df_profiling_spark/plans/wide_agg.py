@@ -1,11 +1,11 @@
-"""Wide-agg plan: every per-column statistic in ONE Spark job.
+"""Wide-agg plan: every per-column statistic in a few wide aggregates.
 
 The reference (``base.py::describe``, public v1.1.13) issues ~10-12 Spark
 jobs *per column* (separate agg / percentile / mad / zeros / histogram /
-distinct / count actions — SURVEY.md §2.3).  Here all pass-1 statistics for
-*all* columns are flattened into a single ``df.agg(*exprs)``: Catalyst plans
-it as one 2-phase HashAggregate (partial map-side + final), so the input is
-scanned exactly once regardless of column count.
+distinct / count actions — SURVEY.md §2.3).  Here the statistics of *all*
+columns are flattened into wide ``selectExpr`` aggregates, one Spark job
+per buffer-class chunk, so the job count does not grow with the column
+count until a chunk fills.
 
 Scale notes (100 TB):
 * Expression lists are chunked per buffer class (``_CHUNK_CAP``) to stay
@@ -35,7 +35,8 @@ from spark_df_profiling_spark import schema as S
 from spark_df_profiling_spark.config import ProfileConfig
 
 
-def _key(i: int, stat: str) -> str:
+def stat_key(i: int, stat: str) -> str:
+    """Result alias of statistic ``stat`` of column ``i``."""
     return f"c{i}__{stat}"
 
 
@@ -46,8 +47,10 @@ def _dlit(v: float) -> str:
 
 
 def build_pass1_exprs(df: DataFrame, classes: list[str],
-                      cfg: ProfileConfig) -> list[str]:
-    """SQL aggregate-expression list for pass 1 (no prior results needed).
+                      cfg: ProfileConfig) -> dict[str, list[str]]:
+    """Pass-1 SQL aggregate expressions (no prior results needed), keyed
+    by buffer class (see ``_CHUNK_CAP``): ``sketch`` distinct counts,
+    ``light`` declarative statistics, ``object`` quantile sketches.
 
     Covers SURVEY §2 kernels T1, U1-U5, N1-N6, N11, C-prep, D1, G1.
 
@@ -58,19 +61,30 @@ def build_pass1_exprs(df: DataFrame, classes: list[str],
     Callers pass them to :func:`run_chunked_agg` (or ``df.selectExpr``).
     Column names are backtick-quoted; ``describe()`` renames columns to
     ``__c{i}`` first, so embedded backticks can't occur in the hot path.
+
+    Quantiles (N6) need nothing from pass 1 — unlike MAD (mean) and
+    histogram bins (min/max) — so the ObjectHashAggregate job they force
+    runs CONCURRENTLY with the other pass-1 chunks.  Built from base
+    classes, not resolved ones: the only divergence is a base-numeric
+    column that pass 1 would resolve to CONST or that is all-NULL — there
+    ``percentile(_approx)`` returns NULL, which the assembler treats
+    exactly like an absent key (oracle-verified); the cost is one wasted
+    sketch for the (rare) constant numeric column.
     """
-    exprs: list[str] = ["count(1) AS `__n`"]
+    qs = ", ".join(repr(q) for q in cfg.quantiles)
+    sketch: list[str] = []
+    light: list[str] = ["count(1) AS `__n`"]
+    quantiles: list[str] = []
     for i, (field, cls) in enumerate(zip(df.schema.fields, classes)):
         c = f"`{field.name}`"
-        k = _key(i, "count")
-        exprs.append(f"count({c}) AS `{k}`")
+        light.append(f"count({c}) AS `{stat_key(i, 'count')}`")
         if cfg.exact_distinct:
-            exprs.append(
-                f"count(DISTINCT {c}) AS `{_key(i, 'distinct')}`")
+            sketch.append(
+                f"count(DISTINCT {c}) AS `{stat_key(i, 'distinct')}`")
         else:
-            exprs.append(
+            sketch.append(
                 f"approx_count_distinct({c}, {cfg.distinct_rsd!r}) "
-                f"AS `{_key(i, 'distinct')}`")
+                f"AS `{stat_key(i, 'distinct')}`")
         # NOTE: no first()/min()/max() over STRING columns here — a single
         # string-buffered aggregate disqualifies HashAggregateExec (string
         # buffers are immutable in UnsafeRow) and demotes the ENTIRE wide
@@ -80,99 +94,66 @@ def build_pass1_exprs(df: DataFrame, classes: list[str],
 
         if S.is_numeric(cls):
             cd = f"CAST({c} AS DOUBLE)"
-            exprs.extend([
-                f"avg({cd}) AS `{_key(i, 'mean')}`",
-                f"CAST(min({c}) AS DOUBLE) AS `{_key(i, 'min')}`",
-                f"CAST(max({c}) AS DOUBLE) AS `{_key(i, 'max')}`",
-                f"var_samp({cd}) AS `{_key(i, 'variance')}`",
-                f"stddev_samp({cd}) AS `{_key(i, 'std')}`",
-                f"skewness({cd}) AS `{_key(i, 'skewness')}`",
-                f"kurtosis({cd}) AS `{_key(i, 'kurtosis')}`",
-                f"sum({cd}) AS `{_key(i, 'sum')}`",
+            light.extend([
+                f"avg({cd}) AS `{stat_key(i, 'mean')}`",
+                f"CAST(min({c}) AS DOUBLE) AS `{stat_key(i, 'min')}`",
+                f"CAST(max({c}) AS DOUBLE) AS `{stat_key(i, 'max')}`",
+                f"var_samp({cd}) AS `{stat_key(i, 'variance')}`",
+                f"stddev_samp({cd}) AS `{stat_key(i, 'std')}`",
+                f"skewness({cd}) AS `{stat_key(i, 'skewness')}`",
+                f"kurtosis({cd}) AS `{stat_key(i, 'kurtosis')}`",
+                f"sum({cd}) AS `{stat_key(i, 'sum')}`",
                 f"sum(CASE WHEN {c} = 0 THEN 1 ELSE 0 END) "
-                f"AS `{_key(i, 'zeros')}`",
+                f"AS `{stat_key(i, 'zeros')}`",
             ])
             if cls == S.NUM_FLOAT:
-                exprs.append(
+                light.append(
                     f"sum(CASE WHEN {cd} IN (double('Infinity'), "
                     f"double('-Infinity')) THEN 1 ELSE 0 END) "
-                    f"AS `{_key(i, 'inf')}`")
-                exprs.append(
+                    f"AS `{stat_key(i, 'inf')}`")
+                light.append(
                     f"sum(CASE WHEN isnan({cd}) THEN 1 ELSE 0 END) "
-                    f"AS `{_key(i, 'nan')}`")
-            # NOTE: quantiles deliberately live in pass 2 — a single
-            # percentile/percentile_approx expression demotes the WHOLE
-            # aggregate from HashAggregate(codegen) to ObjectHashAggregate
-            # (interpreted), slowing every other expression ~2x.  Keeping
-            # pass 1 sketch-free keeps it inside whole-stage codegen.
+                    f"AS `{stat_key(i, 'nan')}`")
+            if cfg.exact_quantiles:
+                quantiles.append(f"percentile({cd}, array({qs})) "
+                                 f"AS `{stat_key(i, 'quantiles')}`")
+            else:
+                quantiles.append(
+                    f"percentile_approx({cd}, array({qs}), "
+                    f"{cfg.quantile_accuracy}) "
+                    f"AS `{stat_key(i, 'quantiles')}`")
         elif cls == S.DATE:
-            exprs.append(f"min({c}) AS `{_key(i, 'min_date')}`")
-            exprs.append(f"max({c}) AS `{_key(i, 'max_date')}`")
+            light.append(f"min({c}) AS `{stat_key(i, 'min_date')}`")
+            light.append(f"max({c}) AS `{stat_key(i, 'max_date')}`")
         elif cls in (S.ARRAY, S.MAP):
-            exprs.extend([
-                f"avg(size({c})) AS `{_key(i, 'mean_size')}`",
+            light.extend([
+                f"avg(size({c})) AS `{stat_key(i, 'mean_size')}`",
                 f"CAST(min(size({c})) AS BIGINT) "
-                f"AS `{_key(i, 'min_size')}`",
+                f"AS `{stat_key(i, 'min_size')}`",
                 f"CAST(max(size({c})) AS BIGINT) "
-                f"AS `{_key(i, 'max_size')}`",
+                f"AS `{stat_key(i, 'max_size')}`",
             ])
-    return exprs
-
-
-def build_quantile_exprs(df: DataFrame, base_classes: list[str],
-                         cfg: ProfileConfig) -> list[str]:
-    """Quantile (N6) sketch expressions from SCHEMA-ONLY dispatch.
-
-    Quantiles need nothing from pass 1 — unlike MAD (mean) and histogram
-    bins (min/max) — so the ObjectHashAggregate job they force can run
-    CONCURRENTLY with pass 1 instead of serializing behind it.  Built
-    from base classes, not resolved ones: the only divergence is a
-    base-numeric column that pass 1 would resolve to CONST or that is
-    all-NULL — there ``percentile(_approx)`` returns NULL, which the
-    assembler treats exactly like an absent key, so the result is
-    IDENTICAL to the old pass-2 placement (oracle-verified); the cost is
-    one wasted sketch for the (rare) constant numeric column.
-    """
-    exprs: list[str] = []
-    qs = ", ".join(repr(q) for q in cfg.quantiles)
-    for i, (field, cls) in enumerate(zip(df.schema.fields, base_classes)):
-        if not S.is_numeric(cls):
-            continue
-        c = f"CAST(`{field.name}` AS DOUBLE)"
-        if cfg.exact_quantiles:
-            exprs.append(f"percentile({c}, array({qs})) "
-                         f"AS `{_key(i, 'quantiles')}`")
-        else:
-            exprs.append(
-                f"percentile_approx({c}, array({qs}), "
-                f"{cfg.quantile_accuracy}) AS `{_key(i, 'quantiles')}`")
-    return exprs
+    return {"sketch": sketch, "light": light, "object": quantiles}
 
 
 def build_pass2_exprs(df: DataFrame, classes: list[str], pass1: dict[str, Any],
-                      cfg: ProfileConfig,
-                      include_quantiles: bool = True) -> list[str]:
-    """Pass-2 SQL expressions: quantiles (N6), MAD (N10), histograms (N12).
+                      cfg: ProfileConfig) -> list[str]:
+    """Pass-2 SQL expressions, all ``light``: MAD (N10), histograms (N12).
 
     MAD is the reference's *mean* absolute deviation around the mean
     (``base.py::describe>>describe_integer_1d``), an inherently two-pass
     statistic.  Histogram bins are equal-width on [min, max] with the last
     bin right-closed, matching ``base.py::describe>>create_hist_data``.
-    Quantile sketches sit here (not pass 1) so the ObjectHashAggregate
-    they force is paid once, on this smaller expression set — and the
-    orchestrator passes ``include_quantiles=False`` to issue them via
-    :func:`build_quantile_exprs` concurrently WITH pass 1 instead (they
-    are the only pass-2 statistic with no pass-1 dependency).  Bin-edge
-    literals are emitted with :func:`_dlit`, so the SQL form computes the
-    bit-exact same bins as driver-side float arithmetic.
+    Bin-edge literals are emitted with :func:`_dlit`, so the SQL form
+    computes the bit-exact same bins as driver-side float arithmetic.
     """
     exprs: list[str] = []
     for i, (field, cls) in enumerate(zip(df.schema.fields, classes)):
         if cls == S.DATE and cfg.compute_histograms:
             # D3 extension (reference has no date histogram): equal-width
             # bins over epoch seconds, edges from pass-1 min/max.
-            mn_d = pass1.get(_key(i, "min_date"))
-            mx_d = pass1.get(_key(i, "max_date"))
+            mn_d = pass1.get(stat_key(i, "min_date"))
+            mx_d = pass1.get(stat_key(i, "max_date"))
             mn_e = _to_epoch(mn_d)
             mx_e = _to_epoch(mx_d)
             if mn_e is not None and mx_e is not None and mx_e > mn_e:
@@ -189,28 +170,19 @@ def build_pass2_exprs(df: DataFrame, classes: list[str], pass1: dict[str, Any],
                                 f"AND {ep} < {_dlit(right)}")
                     exprs.append(
                         f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END) "
-                        f"AS `{_key(i, f'hist{b}')}`")
+                        f"AS `{stat_key(i, f'hist{b}')}`")
             continue
         if not S.is_numeric(cls):
             continue
-        cnt = pass1.get(_key(i, "count")) or 0
-        mean = pass1.get(_key(i, "mean"))
-        mn = pass1.get(_key(i, "min"))
-        mx = pass1.get(_key(i, "max"))
+        cnt = pass1.get(stat_key(i, "count")) or 0
+        mean = pass1.get(stat_key(i, "mean"))
+        mn = pass1.get(stat_key(i, "min"))
+        mx = pass1.get(stat_key(i, "max"))
         c = f"CAST(`{field.name}` AS DOUBLE)"
-        if include_quantiles and cnt > 0:
-            qs = ", ".join(repr(q) for q in cfg.quantiles)
-            if cfg.exact_quantiles:
-                exprs.append(f"percentile({c}, array({qs})) "
-                             f"AS `{_key(i, 'quantiles')}`")
-            else:
-                exprs.append(
-                    f"percentile_approx({c}, array({qs}), "
-                    f"{cfg.quantile_accuracy}) AS `{_key(i, 'quantiles')}`")
         if cfg.compute_mad and cnt > 0 and mean is not None \
                 and math.isfinite(mean):
             exprs.append(f"avg(abs({c} - {_dlit(mean)})) "
-                         f"AS `{_key(i, 'mad')}`")
+                         f"AS `{stat_key(i, 'mad')}`")
         if cfg.compute_histograms and cnt > 0 and mn is not None \
                 and mx is not None and math.isfinite(mn) and math.isfinite(mx) \
                 and mx > mn:
@@ -225,91 +197,53 @@ def build_pass2_exprs(df: DataFrame, classes: list[str], pass1: dict[str, Any],
                     cond = (f"{c} >= {_dlit(left)} AND {c} < {_dlit(right)} "
                             f"AND NOT isnan({c})")
                 exprs.append(f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END) "
-                             f"AS `{_key(i, f'hist{b}')}`")
+                             f"AS `{stat_key(i, f'hist{b}')}`")
     return exprs
 
 
-def _expr_class(s: str) -> str:
-    """Classify an aggregate SQL expression by its buffer/exec impact.
-
-    * ``sketch``  — HLL++ (``approx_count_distinct``): ~52 LONG buffer
-      slots per column.  A dozen of these pushes the aggregate past
-      ``spark.sql.codegen.maxFields``, silently demoting EVERY expression
-      in the same physical agg to interpreted execution (measured 6-8x
-      slowdown of the whole pass).  Isolated in their own chunk they are
-      cheap (one register update per row).
-    * ``object`` — percentile/percentile_approx: TypedImperativeAggregate,
-      forces ObjectHashAggregateExec (no whole-stage codegen) for the
-      entire chunk, so they must never share a chunk with declarative
-      aggregates.
-    * ``light``  — everything else (count/min/max/moments/corr/when-sums):
-      2-6 fixed-width buffer slots each, stays inside HashAggregateExec
-      whole-stage codegen when chunked below the maxFields budget.
-    """
-    if "approx_count_distinct" in s or "count(DISTINCT" in s:
-        # exact count_distinct also isolated: it plans via Expand (one
-        # duplicated row-stream per DISTINCT column) — grouping the
-        # distincts together caps the Expand multiplication to the
-        # distinct-only chunk instead of inflating the whole wide agg.
-        return "sketch"
-    if "percentile" in s:
-        return "object"
-    if "covar_samp(" in s:
-        # correlation pair expressions: ~9 buffer slots each (two
-        # stddev states + one covar state), so a 28-pair 8-column
-        # matrix alone holds ~250 slots — past codegen.maxFields they
-        # silently demote the WHOLE aggregate to interpreted execution
-        # (measured: the one-job 8-column matrix runs 2.7s interpreted
-        # vs 0.8s codegen'd on sf0.1 lineitem).  Own class: its
-        # budgeted cap keeps every pair chunk codegen'd.
-        return "pair"
-    return "light"
-
-
-# Budgeted chunk sizes (buffer-slot aware, see _expr_class):
-# light: worst case ~6 slots/expr (corr) -> 64 exprs ~= 384 slots, safely
-# under the codegen.maxFields=500 of session.wide_codegen; sketch/object:
-# execution is per-row cheap / already interpreted, cap only to bound
-# planning time.
+# The build_*_exprs functions name the aggregation-buffer class of every
+# expression they emit; a chunk holds one class, up to that class's cap:
+# * light  — declarative aggregates (count/min/max/moments/when-sums):
+#   2-6 fixed-width buffer slots each, so 64 expressions (~384 slots)
+#   stay under the codegen.maxFields=500 of session.wide_codegen and the
+#   chunk keeps HashAggregateExec whole-stage codegen.
+# * sketch — distinct counts.  HLL++ holds ~52 LONG slots per column: a
+#   dozen of them push an aggregate past maxFields and silently demote
+#   EVERY expression in it to interpreted execution (measured on 600k-row
+#   lineitem, local[32]: 9.3s mixed with the light aggregates vs 1.2s in
+#   two chunks).  Exact count(DISTINCT) plans an Expand (one duplicated
+#   row stream per DISTINCT column); grouping the distincts confines
+#   that multiplication to their own chunk.
+# * pair   — correlation pairs: ~9 slots each (two stddev states + one
+#   covar state), so the 28 pairs of an 8-column matrix hold ~250 slots
+#   (measured on sf0.1 lineitem: that matrix in one job ran 2.7s
+#   interpreted vs 0.8s codegen'd); 40 pairs stay under the budget.
+# * object — percentile/percentile_approx (TypedImperativeAggregate)
+#   force ObjectHashAggregateExec, without codegen, on the whole chunk,
+#   so they never share a chunk with declarative aggregates.
+# Sketch and object chunks are per-row cheap or already interpreted:
+# their caps only bound planning time.
 _CHUNK_CAP = {"light": 64, "sketch": 48, "object": 32, "pair": 40}
 
 
-def make_chunks(exprs: list[str]) -> list[list[str]]:
-    """Split aggregate expressions into buffer-class-homogeneous chunks
-    of at most ``_CHUNK_CAP[class]`` expressions each.
-
-    Grouping rules (measured on 600k-row lineitem, local[32]):
-    * declarative aggs mixed with HLL sketches lose whole-stage codegen
-      (buffer > codegen.maxFields) — 9.3s; split into two chunks — 1.2s.
-    * percentile sketches demote a chunk to ObjectHashAggregateExec; they
-      get their own chunk so histograms/MAD stay codegen'd.
-    Values are identical under any chunking: each expression runs over
-    the full input in exactly one job.
-    """
-    # sketch chunks FIRST: task threads start in list order, and the HLL
-    # sketch chunks are pass 1's long poles, so they should not queue
-    # behind the short light chunks when the chunk count exceeds
-    # describe()'s in-flight gate (LPT, guide §2.6; same reasoning as
-    # submitting the quantile sketches before pass 1).  Chunk contents
-    # are unchanged — only the submission order.
-    groups: dict[str, list[str]] = {"sketch": [], "pair": [],
-                                    "light": [], "object": []}
-    for e in exprs:
-        groups[_expr_class(e)].append(e)
-    chunks: list[list[str]] = []
-    for klass, es in groups.items():
-        step = _CHUNK_CAP[klass]
-        for start in range(0, len(es), step):
-            chunks.append(es[start:start + step])
-    return chunks
+def make_chunks(klass: str, exprs: list[str]) -> list[list[str]]:
+    """Split one buffer class's expressions, in order, into chunks of at
+    most ``_CHUNK_CAP[klass]`` expressions.  Values are identical under
+    any chunking: each expression runs over the full input in exactly
+    one job."""
+    step = _CHUNK_CAP[klass]
+    return [exprs[i:i + step] for i in range(0, len(exprs), step)]
 
 
-def run_chunked_agg(df: DataFrame, exprs: list[str]) -> dict[str, Any]:
-    """Execute a wide agg, chunked by buffer class, chunks run CONCURRENTLY.
+def run_chunked_agg(df: DataFrame,
+                    exprs_by_class: dict[str, list[str]]) -> dict[str, Any]:
+    """Execute a wide agg given as ``{buffer class: exprs}``; its chunks
+    run CONCURRENTLY.
 
-    Chunking per :func:`make_chunks`.  Each chunk is one Spark job (one
-    scan) issued as a single ``selectExpr`` — one py4j round-trip however
-    many expressions the chunk holds.  Chunks are submitted from
+    Chunking per :func:`make_chunks`, submitted in the dict's class
+    order.  Each chunk is one Spark job (one scan) issued as a single
+    ``selectExpr`` — one py4j round-trip however many expressions the
+    chunk holds.  Chunks are submitted from
     ``pyspark.InheritableThread`` workers (NOT a plain
     ThreadPoolExecutor): in pinned-thread mode each Python thread maps to
     its own JVM thread, so a bare pool thread would silently drop the
@@ -329,12 +263,13 @@ def run_chunked_agg(df: DataFrame, exprs: list[str]) -> dict[str, Any]:
     the GIL during each chunk's JVM call so threaded submissions already
     overlap analysis and execution).  Reverted; see OPTIMIZATION_r16.md.)
     """
-    out: dict[str, Any] = {}
-    if not exprs:
-        return out
-    chunks = make_chunks(exprs)
+    chunks = [ch for klass, exprs in exprs_by_class.items()
+              for ch in make_chunks(klass, exprs)]
+    if not chunks:
+        return {}
     if len(chunks) == 1:
         return df.selectExpr(*chunks[0]).collect()[0].asDict()
+    out: dict[str, Any] = {}
     rows = run_inheritable(
         [(lambda ch=ch: df.selectExpr(*ch).collect()[0])
          for ch in chunks])
@@ -427,11 +362,6 @@ class InheritableTask:
         jobs running behind an exception); True once the thunk ended."""
         self._thread.join(timeout)
         return not self._thread.is_alive()
-
-
-def stat_key(i: int, stat: str) -> str:
-    """Public accessor for the alias scheme (used by the orchestrator)."""
-    return _key(i, stat)
 
 
 def _to_epoch(v: Any) -> float | None:

@@ -13,47 +13,52 @@ def li(spark, sf_dir):
 def test_make_chunks_caps():
     from spark_df_profiling_spark.plans.wide_agg import (
         _CHUNK_CAP, make_chunks)
-    exprs = ([f"count(`c{i}`) AS `k{i}`" for i in range(40)]
-             + [f"approx_count_distinct(`c{i}`) AS `d{i}`"
-                for i in range(7)]
-             + [f"percentile_approx(`c{i}`, 0.5, 100) AS `q{i}`"
-                for i in range(3)])
-    chunks = make_chunks(exprs)
-    # partition property: every expr in exactly one chunk
-    flat = [e for ch in chunks for e in ch]
-    assert sorted(flat) == sorted(exprs)
-    for ch in chunks:
-        kind = ("object" if "percentile" in ch[0] else
-                "sketch" if "approx_count_distinct" in ch[0]
-                else "light")
-        assert len(ch) <= _CHUNK_CAP[kind]
-        # chunks stay buffer-class homogeneous
-        assert all(
-            ("percentile" in e) == (kind == "object")
-            and ("approx_count_distinct" in e) == (kind == "sketch")
-            for e in ch)
+    by_class = {
+        "light": [f"count(`c{i}`) AS `k{i}`" for i in range(140)],
+        "sketch": [f"approx_count_distinct(`c{i}`) AS `d{i}`"
+                   for i in range(50)],
+        "pair": [f"covar_samp(`c{i}`, `c{i + 1}`) AS `p{i}`"
+                 for i in range(41)],
+        "object": [f"percentile_approx(`c{i}`, 0.5, 100) AS `q{i}`"
+                   for i in range(3)],
+    }
+    for klass, exprs in by_class.items():
+        chunks = make_chunks(klass, exprs)
+        # partition property: every expr in exactly one chunk, in order
+        assert [e for ch in chunks for e in ch] == exprs
+        assert all(0 < len(ch) <= _CHUNK_CAP[klass] for ch in chunks)
+        # as few chunks as the cap allows
+        assert len(chunks) == -(-len(exprs) // _CHUNK_CAP[klass])
+        assert make_chunks(klass, []) == []
 
 
 def test_chunking_is_value_preserving(spark, li):
     """The same aggregate expressions produce identical values whether
     evaluated as one wide selectExpr or as per-class chunks."""
-    from spark_df_profiling_spark.plans.wide_agg import make_chunks
-    exprs = [
-        "count(1) AS `n`",
-        "sum(CAST(l_quantity AS DOUBLE)) AS `s`",
-        "var_samp(CAST(l_extendedprice AS DOUBLE)) AS `v`",
-        "skewness(CAST(l_discount AS DOUBLE)) AS `sk`",
-        "approx_count_distinct(l_partkey, 0.05) AS `d`",
-        "percentile_approx(CAST(l_tax AS DOUBLE), array(0.5), 1000) "
-        "AS `q`",
-    ]
+    from spark_df_profiling_spark.plans.wide_agg import (
+        make_chunks, run_chunked_agg)
+    by_class = {
+        "light": [
+            "count(1) AS `n`",
+            "sum(CAST(l_quantity AS DOUBLE)) AS `s`",
+            "var_samp(CAST(l_extendedprice AS DOUBLE)) AS `v`",
+            "skewness(CAST(l_discount AS DOUBLE)) AS `sk`",
+        ],
+        "sketch": ["approx_count_distinct(l_partkey, 0.05) AS `d`"],
+        "object": [
+            "percentile_approx(CAST(l_tax AS DOUBLE), array(0.5), 1000) "
+            "AS `q`"],
+    }
+    exprs = [e for es in by_class.values() for e in es]
     one = li.selectExpr(*exprs).collect()[0].asDict()
     merged = {}
-    chunks = make_chunks(exprs)
+    chunks = [ch for klass, es in by_class.items()
+              for ch in make_chunks(klass, es)]
     assert len(chunks) == 3  # light, sketch and object classes
     for ch in chunks:
         merged.update(li.selectExpr(*ch).collect()[0].asDict())
     assert merged == one
+    assert run_chunked_agg(li, by_class) == one
 
 
 def test_parallelize_small_scan_bands(spark, tmp_path):

@@ -28,11 +28,12 @@ def _job_count(spark, fn):
 def test_profile_job_count(spark, lineitem):
     # Bounded job count, independent of row count: pass-1 light chunks
     # (codegen-friendly, column-disjoint) + one distinct-sketch chunk +
-    # pass-2 light chunks + one quantile chunk + stacked freq.  For the
-    # 16-col lineitem that is <= 9 scans, each column-pruned so the total
-    # bytes read stay ~3x one full-table read (vs the reference's
-    # ~12 jobs PER COLUMN).  AQE materializes exchanges as extra
-    # bookkeeping jobs, so the probe runs with AQE off.
+    # one correlation-pair chunk + pass-2 light chunks + one quantile
+    # chunk + stacked freq.  For the 11-column lineitem that is 8 scans
+    # (test_describe_chunk_layout pins the chunks), each column-pruned
+    # so the total bytes read stay ~3x one full-table read (vs the
+    # reference's ~12 jobs PER COLUMN).  AQE materializes exchanges as
+    # extra bookkeeping jobs, so the probe runs with AQE off.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         n = _job_count(spark, lambda: profile(lineitem))
@@ -47,14 +48,53 @@ def test_pass1_is_hash_aggregate(spark, lineitem):
     cfg = ProfileConfig()
     classes = [S.dtype_class(f.dataType) for f in lineitem.schema.fields]
     # Light exprs only — the HLL sketches are deliberately chunked apart
-    # (they blow the codegen field budget; see wide_agg._expr_class).
-    exprs = [e for e in W.build_pass1_exprs(lineitem, classes, cfg)
-             if W._expr_class(e) == "light"]
+    # (they blow the codegen field budget; see wide_agg._CHUNK_CAP).
+    exprs = W.build_pass1_exprs(lineitem, classes, cfg)["light"]
     agg = lineitem.selectExpr(*exprs)
     agg.collect()
     plan = agg._jdf.queryExecution().executedPlan().toString()
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
+
+
+@pytest.mark.parametrize("exact", [False, True])
+def test_describe_chunk_layout(spark, lineitem, monkeypatch, exact):
+    """describe() chunks each buffer class that build_pass1_exprs and
+    correlation_exprs name, in task-creation order (object, sketch,
+    pair, light, then pass-2 light), and every class holds only its own
+    aggregate kind — the SQL text is checked here, never in the
+    package."""
+    from spark_df_profiling_spark.operators.profile import describe
+    from spark_df_profiling_spark.plans import wide_agg as W
+    seen = []
+    orig = W.make_chunks
+
+    def spy(klass, exprs):
+        out = orig(klass, exprs)
+        seen.extend((klass, ch) for ch in out)
+        return out
+
+    monkeypatch.setattr(W, "make_chunks", spy)
+    describe(lineitem, ProfileConfig().exact() if exact else ProfileConfig())
+    # 11 columns, 8 of them numeric: 11 distinct counts, 8 quantile
+    # sketches, 28 correlation pairs, 94 light pass-1 exprs and 98
+    # light pass-2 exprs (MAD + 10 bins per numeric column, 10 date bins)
+    assert [(k, len(ch)) for k, ch in seen] == [
+        ("object", 8), ("sketch", 11), ("pair", 28),
+        ("light", 64), ("light", 30), ("light", 64), ("light", 34)]
+    marker = {
+        "sketch": "count(DISTINCT " if exact else "approx_count_distinct(",
+        "object": "percentile(" if exact else "percentile_approx(",
+        "pair": "covar_samp(",
+    }
+    for klass, ch in seen:
+        for e in ch:
+            if klass == "light":
+                assert not any(m in e for m in (
+                    "approx_count_distinct", "DISTINCT", "percentile",
+                    "covar_samp")), e
+            else:
+                assert marker[klass] in e, (klass, e)
 
 
 def test_knn_broadcasts_queries(spark, sf_dir):

@@ -69,11 +69,11 @@ def main() -> None:
             safe = d.toDF(*[f"__c{i}" for i in range(len(d.columns))])
             return safe.selectExpr(*ch)
 
-        def spy_make(exprs):
-            chunks = orig_make(exprs)
+        def spy_make(klass, exprs):
+            chunks = orig_make(klass, exprs)
             for ch in chunks:
                 sections.append(
-                    f"=== chunked agg [{W._expr_class(ch[0])}] "
+                    f"=== chunked agg [{klass}] "
                     f"({len(ch)} exprs) ===\n"
                     + fmt(_chunk_df(ch)))
             return chunks
@@ -122,12 +122,12 @@ def main() -> None:
             sel = li.select(*[li[c].cast("double").alias(s)
                               for c, s in zip(cols, safe)])
 
-            def spy_make(exprs):
-                chunks = orig_make(exprs)
+            def spy_make(klass, exprs):
+                chunks = orig_make(klass, exprs)
                 for ch in chunks:
                     sections.append(
                         f"=== declarative corr chunk "
-                        f"[{W._expr_class(ch[0])}] ({len(ch)} exprs) "
+                        f"[{klass}] ({len(ch)} exprs) "
                         f"===\n"
                         + fmt(sel.selectExpr(*ch)))
                 return chunks
