@@ -11,12 +11,13 @@ Users of the public ``julioasotodv/spark-df-profiling`` (v1.1.13) do::
 This module preserves that exact surface (``__init__.py::ProfileReport``
 in the reference, function-level citations per SURVEY.md §0) while
 delegating every computation to the Spark-native engine in
-``spark_df_profiling_spark`` — same statistics, ~4 Spark jobs per table
-instead of ~12 per column.  ``get_description()`` returns the reference's
-``{'table', 'variables', 'freq'}`` dict shape with a pandas ``variables``
-frame using the reference's column names (``5%``, ``25%`` ..., ``type``,
-``top``, ``freq``, ``correlation``), so downstream code written against
-the reference keeps working.
+``spark_df_profiling_spark`` — same statistics, 8 Spark jobs per table on a
+one-partition input (perfbench ``profile.jobs``) instead of ~12 per
+column.  ``get_description()`` returns the reference's ``{'table',
+'variables', 'freq'}`` dict shape with a pandas ``variables`` frame using
+the reference's column names (``5%``, ``25%`` ..., ``type``, ``top``,
+``freq``, ``correlation``), so downstream code written against the
+reference keeps working.
 """
 
 from __future__ import annotations

@@ -23,7 +23,7 @@ class ProfileConfig:
     # --- reference-compatible knobs -------------------------------------
     bins: int = 10                 # histogram bins (reference default)
     sample: int = 5                # head-sample rows for the report
-    corr_reject: float | None = 0.9  # Pearson threshold for CORR rejection
+    corr_reject: float | None = 0.9  # Pearson CORR threshold; None skips corr
     top_k: int = 50                # frequency-table depth (reference: 50)
 
     # --- exact vs approximate (scale switches) ---------------------------
@@ -49,7 +49,6 @@ class ProfileConfig:
     # --- physical execution ----------------------------------------------
     # Chunk sizes (plans.wide_agg._CHUNK_CAP) and describe()'s in-flight
     # job gate are constants, not settings.
-    compute_correlations: bool = True
     compute_histograms: bool = True
     compute_mad: bool = True
 

@@ -8,8 +8,9 @@ That is O(#categorical-columns) shuffles over the full table.
 Here ALL categorical columns share ONE shuffle: the columns are stacked into
 ``(col_name, value)`` pairs with the ``stack`` generator (a narrow map-side
 transform — no extra scan per column), aggregated by
-``groupBy(col_name, value)`` (partial+final hash agg), and ranked with a
-single ``row_number`` window over the (already tiny) aggregated counts.
+``groupBy(col_name, value)`` (partial+final hash agg), and ranked over the
+(already tiny) aggregated counts by the salted two-phase kernel
+``plans.topk.two_phase_topk``.
 "Other" buckets (C3/C4) are derived arithmetically from pass-1 stats —
 no extra scan, unlike the reference's two extra jobs.
 
@@ -22,34 +23,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_df_profiling_spark.plans.topk import two_phase_topk
+
 
 def topk_frequencies(df: DataFrame, cat_cols: list[str], k: int,
-                     sub_partitions: int = 64,
-                     two_phase: bool = True
+                     sub_partitions: int = 64
                      ) -> dict[str, list[tuple[str, int]]]:
     """Return {column: [(value, count), ...]} for the top-k values of each
     categorical column, computed in one Spark job.
 
-    Scale-safe two-phase top-k: a single ``row_number`` window partitioned
-    by ``col_name`` alone would funnel EVERY distinct value of a column
-    through one task (col_name has only #columns distinct values — the
-    worst possible window key at 100 TB).  Phase 1 ranks within
-    ``(col_name, hash(value) % sub_partitions)`` — parallel, each bucket
-    keeps its local top-k; phase 2 ranks the surviving
-    ``sub_partitions x k`` rows per column — trivially small.  The local
-    top-k provably contains the global top-k (a value's full count lives
-    in exactly one bucket since the bucket key is a function of the
-    value).
-
-    ``two_phase=False`` skips the bucket phase and ranks the aggregated
-    counts directly — IDENTICAL results (the bucket phase only
-    pre-prunes rows that cannot be in the global top-k), one fewer
-    exchange+window.  It is the reference form the two-phase result is
-    tested against; the scale-safe default stays on."""
+    The rank is :func:`~spark_df_profiling_spark.plans.topk.
+    two_phase_topk` keyed by ``col_name``: ranking by ``col_name`` alone
+    would funnel EVERY distinct value of a column through one task
+    (col_name has only #columns distinct values — the worst possible
+    window key at 100 TB), so phase 1 ranks within ``(col_name,
+    hash(value) % sub_partitions)`` and phase 2 ranks the surviving
+    ``sub_partitions x k`` rows per column.  ``sub_partitions=1`` is the
+    single-phase reference form, with identical results."""
     if not cat_cols:
         return {}
-    top = topk_frequencies_frame(df, cat_cols, k, sub_partitions,
-                                 two_phase)
+    top = topk_frequencies_frame(df, cat_cols, k, sub_partitions)
     out: dict[str, list[tuple[str, int]]] = {c: [] for c in cat_cols}
     rows = top.collect()
     for r in sorted(rows, key=lambda r: (r["col_name"], r["rk"])):
@@ -58,30 +51,17 @@ def topk_frequencies(df: DataFrame, cat_cols: list[str], k: int,
 
 
 def topk_frequencies_frame(df: DataFrame, cat_cols: list[str], k: int,
-                           sub_partitions: int = 64,
-                           two_phase: bool = True) -> DataFrame:
+                           sub_partitions: int = 64) -> DataFrame:
     """The (col_name, value, cnt, rk) frame :func:`topk_frequencies`
     collects — exposed so plan-capture tooling explains the EXACT frame
     the operator executes instead of a hand-mirrored copy."""
-    stacked = stack_columns(df, cat_cols)
-    counts = (stacked
+    counts = (stack_columns(df, cat_cols)
               .where(F.col("value").isNotNull())
               .groupBy("col_name", "value")
               .agg(F.count(F.lit(1)).alias("cnt")))
-    if two_phase:
-        bucket = F.pmod(F.xxhash64(F.col("value")), F.lit(sub_partitions))
-        w_local = (Window.partitionBy("col_name", bucket)
-                   .orderBy(F.desc("cnt"), F.asc("value")))
-        counts = (counts
-                  .withColumn("rk", F.row_number().over(w_local))
-                  .where(F.col("rk") <= k)
-                  .drop("rk"))
-    w_global = (Window.partitionBy("col_name")
-                .orderBy(F.desc("cnt"), F.asc("value")))
-    return (counts
-            .withColumn("rk", F.row_number().over(w_global))
-            .where(F.col("rk") <= k)
-            .select("col_name", "value", "cnt", "rk"))
+    return two_phase_topk(counts, ["col_name"], F.xxhash64("value"),
+                          [F.desc("cnt"), F.asc("value")], k,
+                          sub_partitions, rank="rk")
 
 
 def stack_columns(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -382,19 +362,13 @@ def hll_state(df: DataFrame, cols: str | list[str] | None = None,
     ``hll_merge`` folds it into the stored one — register-wise max is
     exactly the union semantics.
 
-    Plan: one narrow projection to (reg, rho) feeding a reg-keyed hash
-    aggregate with map-side partial max — the shuffle carries at most
-    ``m`` rows per upstream task.  No explode (unlike CMS/Bloom: HLL
-    needs one coordinate per row, not k).
+    The no-group case of :func:`hll_state_by`: one narrow projection
+    to (reg, rho) feeding a reg-keyed hash aggregate with map-side
+    partial max — the shuffle carries at most ``m`` rows per upstream
+    task.  No explode (unlike CMS/Bloom: HLL needs one coordinate per
+    row, not k).
     """
-    from spark_df_profiling_spark.operators.dedup import content_hash
-    if not (4 <= p <= 18):
-        raise ValueError(f"need 4 <= p <= 18: {p}")
-    cols = [cols] if isinstance(cols, str) else list(cols or df.columns)
-    pos = hll_position(content_hash(cols), p)
-    return (df.select(pos.alias("p"))
-            .groupBy(F.col("p.reg").alias("reg"))
-            .agg(F.max(F.col("p.rho")).alias("rho")))
+    return hll_state_by(df, [], cols or df.columns, p)
 
 
 def hll_merge(*states: DataFrame) -> DataFrame:
@@ -402,42 +376,14 @@ def hll_merge(*states: DataFrame) -> DataFrame:
     max — the union of the underlying sets, exactly.  Mismatched
     configs produce garbage (same contract as ``cms_merge``): keep
     ``p`` with the stored state."""
-    if not states:
-        raise ValueError("need at least one state")
-    out = states[0]
-    for s in states[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("reg").agg(F.max("rho").alias("rho"))
+    return hll_merge_by([], *states)
 
 
 def hll_estimate(state: DataFrame, p: int = 12,
                  out_col: str = "est_distinct") -> DataFrame:
-    """One-row DataFrame with the Flajolet HLL cardinality estimate.
-
-    Standard estimator, all plain SQL arithmetic (the DuckDB oracle
-    replays it to the last ulp): ``E = alpha_m * m^2 / Z`` where
-    ``Z = sum(2^-rho) + V`` (each of the ``V`` EMPTY registers
-    contributes ``2^0 = 1``), ``alpha_m = 0.7213 / (1 + 1.079/m)``;
-    small-range correction switches to linear counting
-    ``m * ln(m/V)`` when ``E <= 2.5m`` and ``V > 0``.  The 60-bit hash
-    makes the large-range collision correction irrelevant below ~2^30
-    distinct keys; beyond that raise ``p`` instead.
-
-    Plan: ONE aggregation over the ≤ m-row state — driver never sees
-    row-scale data.
-    """
-    m = 2 ** p
-    alpha = 0.7213 / (1 + 1.079 / m)
-    agg = state.agg(
-        F.count(F.lit(1)).alias("occ"),
-        F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("z_occ"))
-    v = F.lit(m) - F.col("occ")
-    z = F.coalesce(F.col("z_occ"), F.lit(0.0)) + v.cast("double")
-    raw = F.lit(alpha * m * m) / z
-    est = F.when((raw <= F.lit(2.5 * m)) & (v > 0),
-                 F.lit(float(m)) * F.log(F.lit(m).cast("double") / v)
-                 ).otherwise(raw)
-    return agg.select(F.round(est).cast("long").alias(out_col))
+    """One-row DataFrame with the Flajolet HLL cardinality estimate:
+    the no-group case of :func:`hll_estimate_by`."""
+    return hll_estimate_by(state, [], p, out_col)
 
 
 def topk_by_group(df: DataFrame, group_cols: str | list[str],
@@ -448,13 +394,9 @@ def topk_by_group(df: DataFrame, group_cols: str | list[str],
     per language", "top event types per user cohort") that the global
     :func:`topk_frequencies` cannot answer.
 
-    Same two-phase skew-safe ranking: phase 1 ranks inside ``(group,
-    hash(value) % sub_partitions)`` so a hot group's vocabulary never
-    funnels through one task; phase 2 ranks the surviving
-    ``sub_partitions × k`` rows per group.  A value's full count lives
-    in exactly one bucket (bucket key is a function of the value), so
-    the local top-k provably contains the global one.  NULL values are
-    excluded; NULL group keys form their own group.
+    Same ``two_phase_topk`` rank keyed by the group, salted by the
+    value, so a hot group's vocabulary never funnels through one task.
+    NULL values are excluded; NULL group keys form their own group.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
@@ -463,15 +405,9 @@ def topk_by_group(df: DataFrame, group_cols: str | list[str],
     counts = (df.where(F.col(value_col).isNotNull())
               .groupBy(*gcols, F.col(value_col).alias("value"))
               .agg(F.count(F.lit(1)).alias("cnt")))
-    bucket = F.pmod(F.xxhash64(F.col("value")), F.lit(sub_partitions))
-    w_local = (Window.partitionBy(*gcols, bucket)
-               .orderBy(F.desc("cnt"), F.asc("value")))
-    local_top = (counts.withColumn("rk", F.row_number().over(w_local))
-                 .where(F.col("rk") <= k).drop("rk"))
-    w_global = (Window.partitionBy(*gcols)
-                .orderBy(F.desc("cnt"), F.asc("value")))
-    return (local_top.withColumn("rank", F.row_number().over(w_global))
-            .where(F.col("rank") <= k))
+    return two_phase_topk(counts, gcols, F.xxhash64("value"),
+                          [F.desc("cnt"), F.asc("value")], k,
+                          sub_partitions)
 
 
 def hll_state_by(df: DataFrame, group_cols: str | list[str],
@@ -526,11 +462,19 @@ def hll_estimate_by(state: DataFrame, group_cols: str | list[str],
                     p: int = 12,
                     out_col: str = "est_distinct") -> DataFrame:
     """Per-group HLL cardinality estimates: one row per group,
-    ``(group..., est_distinct)``.  Identical estimator arithmetic to
-    :func:`hll_estimate` (alpha_m bias, empty-register Z mass, linear-
-    counting switch) applied per group over the ≤ m-rows-per-group
-    state — ONE group-keyed aggregation, driver never sees row-scale
-    data."""
+    ``(group..., est_distinct)``; ``group_cols=[]`` gives one row.
+
+    Standard Flajolet estimator, all plain SQL arithmetic (the DuckDB
+    oracle replays it to the last ulp): ``E = alpha_m * m^2 / Z`` where
+    ``Z = sum(2^-rho) + V`` (each of the ``V`` EMPTY registers
+    contributes ``2^0 = 1``), ``alpha_m = 0.7213 / (1 + 1.079/m)``;
+    small-range correction switches to linear counting
+    ``m * ln(m/V)`` when ``E <= 2.5m`` and ``V > 0``.  The 60-bit hash
+    makes the large-range collision correction irrelevant below ~2^30
+    distinct keys; beyond that raise ``p`` instead.
+
+    Plan: ONE group-keyed aggregation over the ≤ m-rows-per-group
+    state — driver never sees row-scale data."""
     m = 2 ** p
     alpha = 0.7213 / (1 + 1.079 / m)
     gcols = [group_cols] if isinstance(group_cols, str) \
@@ -737,13 +681,10 @@ def windowed_topk(df: DataFrame, ts_col: str, value_col: str,
     deterministic (count DESC, value ASC) tie order.
 
     Scale: ONE (bucket, value) map-side-combined count groupBy, then
-    the :func:`topk_frequencies` two-phase rank — phase 1 within
-    ``(bucket, hash(value) % sub_partitions)`` so no task ever sees a
-    bucket's whole distinct-value set, phase 2 over the surviving
-    ``k·sub_partitions`` rows per bucket.  The bucket id stays in
-    INTEGER space (playbook rule 5).  Results are identical for any
-    ``sub_partitions`` (a value's full count lives in exactly one
-    phase-1 bucket); set 1 to disable.
+    the ``two_phase_topk`` rank keyed by the time bucket, salted by the
+    value, so no task ever sees a bucket's whole distinct-value set.
+    The bucket id stays in INTEGER space (playbook rule 5).  Results
+    are identical for any ``sub_partitions``; set 1 to disable.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
@@ -759,16 +700,9 @@ def windowed_topk(df: DataFrame, ts_col: str, value_col: str,
               .groupBy(bucket.alias("bucket"),
                        v.cast("string").alias("value"))
               .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
-    salt = F.pmod(F.xxhash64(F.col("value")), F.lit(sub_partitions))
-    w_local = (Window.partitionBy("bucket", salt)
-               .orderBy(F.desc("cnt"), F.asc("value")))
-    w_global = (Window.partitionBy("bucket")
-                .orderBy(F.desc("cnt"), F.asc("value")))
-    return (counts
-            .withColumn("__r1", F.row_number().over(w_local))
-            .where(F.col("__r1") <= k)
-            .withColumn("rank", F.row_number().over(w_global))
-            .where(F.col("rank") <= k)
+    return (two_phase_topk(counts, ["bucket"], F.xxhash64("value"),
+                           [F.desc("cnt"), F.asc("value")], k,
+                           sub_partitions)
             .select("bucket",
                     (F.col("bucket") * F.lit(float(window)))
                     .alias("bucket_start"),

@@ -218,8 +218,7 @@ def _describe(df: DataFrame, cfg: ProfileConfig, tag: str) -> ProfileResult:
     # grows O(k^2) and the one-job ml.stat path wins.
     dtype_num_cols = [f.name for f, cls in zip(fields, base_classes)
                       if S.is_numeric(cls)]
-    corr_in_pass1 = (cfg.compute_correlations
-                     and cfg.corr_reject is not None
+    corr_in_pass1 = (cfg.corr_reject is not None
                      and 2 <= len(dtype_num_cols) <= 50)
     if corr_in_pass1:
         p1_exprs["pair"] = C.correlation_exprs(df, dtype_num_cols)
@@ -344,8 +343,7 @@ def _describe(df: DataFrame, cfg: ProfileConfig, tag: str) -> ProfileResult:
                 if S.is_numeric(cls)]
     correlations: dict[tuple[str, str], float] = {}
     rejected: dict[str, tuple[str, float]] = {}
-    if cfg.compute_correlations and cfg.corr_reject is not None \
-            and len(num_cols) >= 2:
+    if cfg.corr_reject is not None and len(num_cols) >= 2:
         if corr_in_pass1:
             corr_safe = C.decode_correlation_row(stats, dtype_num_cols)
         else:

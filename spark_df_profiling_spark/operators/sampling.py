@@ -30,6 +30,8 @@ from typing import Mapping, Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_df_profiling_spark.plans.topk import two_phase_topk
+
 #: bucket space for all fraction arithmetic (1e6 → fraction granularity 1e-6)
 BUCKETS = 1_000_000
 
@@ -580,9 +582,9 @@ def weighted_sample_k(df: DataFrame, key_col: Union[str, Column],
     probability is 0).  Returns the input columns plus ``es_key``.
 
     Scale: the uniform and the key are pure row expressions; top-k is
-    the same two-phase bounded rank as ``knn_bruteforce`` (local top-k
-    within hash salts, then a final rank over k·sub_partitions rows) —
-    no global single-task sort of the corpus.
+    the salted ``two_phase_topk`` rank (local top-k within hash salts,
+    then a final rank over k·sub_partitions rows) — no global
+    single-task sort of the corpus.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
@@ -599,17 +601,10 @@ def weighted_sample_k(df: DataFrame, key_col: Union[str, Column],
     es = F.when(w > 0, -F.log(u) / w).alias("es_key")
     scored = df.withColumn("es_key", es).where(
         w.isNotNull() & (w > 0) & _c(key_col).isNotNull())
-    from pyspark.sql import Window
-    salt = F.pmod(F.xxhash64(_c(key_col).cast("string")),
-                  F.lit(sub_partitions))
-    w1 = Window.partitionBy(salt).orderBy(
-        F.asc("es_key"), F.asc(_c(key_col).cast("string")))
-    local = (scored.withColumn("__r1", F.row_number().over(w1))
-             .where(F.col("__r1") <= k).drop("__r1"))
-    w2 = Window.partitionBy().orderBy(
-        F.asc("es_key"), F.asc(_c(key_col).cast("string")))
-    return (local.withColumn("__r2", F.row_number().over(w2))
-            .where(F.col("__r2") <= k).drop("__r2"))
+    key = _c(key_col).cast("string")
+    return two_phase_topk(scored, [], F.xxhash64(key),
+                          [F.asc("es_key"), F.asc(key)], k,
+                          sub_partitions, rank="__r2").drop("__r2")
 
 
 def score_buckets(df: DataFrame, score_col: Union[str, Column],

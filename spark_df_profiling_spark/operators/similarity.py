@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_df_profiling_spark.plans.topk import two_phase_topk
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a_i·b_i in double precision (JVM higher-order functions)."""
@@ -58,15 +60,12 @@ def knn_bruteforce(corpus: DataFrame, queries: DataFrame,
     ties broken by neighbor_id for determinism.  The query side is
     broadcast — at 100 TB the corpus streams through executors once.
 
-    The top-k itself is TWO-phase (the same skew design as
-    ``frequency.topk_frequencies``): ranking only by ``query_id`` would
-    funnel all n·q scored pairs into q reducer tasks — with a handful
-    of queries that is a handful of tasks no matter how big the
-    cluster.  Phase 1 ranks within (query_id, neighbor-hash salt) —
-    ``sub_partitions``·q parallel groups — and keeps k per group; the
-    final rank then sees only k·sub_partitions rows per query.
-    Results are identical for any ``sub_partitions`` (pure function of
-    the scores); set 1 to disable.
+    The top-k itself is ``plans.topk.two_phase_topk`` keyed by
+    ``query_id`` and salted by ``neighbor_id``: ranking only by
+    ``query_id`` would funnel all n·q scored pairs into q reducer tasks
+    — with a handful of queries that is a handful of tasks no matter
+    how big the cluster.  Results are identical for any
+    ``sub_partitions``; set 1 to disable.
 
     The per-pair dot stays the :func:`dot` higher-order fold ON
     PURPOSE: unrolling it into indexed GetArrayItem chains (the win
@@ -110,18 +109,9 @@ def knn_bruteforce(corpus: DataFrame, queries: DataFrame,
     # valid neighbors.  Cheap — runs after the per-row norm pre-filter.
     scored = (joined.select("query_id", "neighbor_id", sim.alias("sim"))
               .where(F.col("sim").isNotNull()))
-    if sub_partitions > 1:
-        salt = F.pmod(F.xxhash64("neighbor_id"), F.lit(sub_partitions))
-        w1 = Window.partitionBy("query_id", "__salt").orderBy(
-            F.desc("sim"), F.asc("neighbor_id"))
-        scored = (scored.withColumn("__salt", salt)
-                  .withColumn("__r1", F.row_number().over(w1))
-                  .where(F.col("__r1") <= k)
-                  .drop("__salt", "__r1"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    return two_phase_topk(scored, ["query_id"], F.xxhash64("neighbor_id"),
+                          [F.desc("sim"), F.asc("neighbor_id")], k,
+                          sub_partitions)
 
 
 def ann_lsh(corpus: DataFrame, queries: DataFrame,
@@ -407,19 +397,9 @@ def knn_ivf(corpus: DataFrame, queries: DataFrame,
     scored = (joined.select("query_id", "neighbor_id",
                             sim.alias("sim"))
               .where(F.col("sim").isNotNull()))
-    if sub_partitions > 1:
-        salt = F.pmod(F.xxhash64("neighbor_id"),
-                      F.lit(sub_partitions))
-        w1 = Window.partitionBy("query_id", "__salt").orderBy(
-            F.desc("sim"), F.asc("neighbor_id"))
-        scored = (scored.withColumn("__salt", salt)
-                  .withColumn("__r1", F.row_number().over(w1))
-                  .where(F.col("__r1") <= k)
-                  .drop("__salt", "__r1"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    return two_phase_topk(scored, ["query_id"], F.xxhash64("neighbor_id"),
+                          [F.desc("sim"), F.asc("neighbor_id")], k,
+                          sub_partitions)
 
 
 def knn_ivf_quantized(corpus_q8: DataFrame, queries: DataFrame,
@@ -925,26 +905,15 @@ def pq_adc_topk(corpus_codes: DataFrame, queries: DataFrame,
               .select(F.col(id_col).alias("neighbor_id"),
                       F.explode(F.array(*entries))
                       .alias("__q"))
-              .select("neighbor_id", F.col("__q.query_id"),
+              .select(F.col("__q.query_id"), "neighbor_id",
                       F.col("__q.dist").alias("dist"))
               .where(F.col("neighbor_id") != F.col("query_id"))
               # a NULL distance (NULL code element, foreign codes
               # frame) must never rank: NULLs sort FIRST under asc
               .where(F.col("dist").isNotNull()))
-    if sub_partitions > 1:
-        salt = F.pmod(F.xxhash64("neighbor_id"),
-                      F.lit(sub_partitions))
-        w1 = Window.partitionBy("query_id", "__salt").orderBy(
-            F.asc("dist"), F.asc("neighbor_id"))
-        scored = (scored.withColumn("__salt", salt)
-                  .withColumn("__r1", F.row_number().over(w1))
-                  .where(F.col("__r1") <= k)
-                  .drop("__salt", "__r1"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("dist"), F.asc("neighbor_id"))
-    return (scored.select("query_id", "neighbor_id", "dist")
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    return two_phase_topk(scored, ["query_id"], F.xxhash64("neighbor_id"),
+                          [F.asc("dist"), F.asc("neighbor_id")], k,
+                          sub_partitions)
 
 
 def ivf_pq_topk(corpus_codes: DataFrame, queries: DataFrame,
@@ -1059,16 +1028,9 @@ def ivf_pq_topk(corpus_codes: DataFrame, queries: DataFrame,
               # NULLs sort FIRST under asc — a NULL distance (NULL
               # code element) must never rank
               .where(F.col("dist").isNotNull()))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("dist"), F.asc("neighbor_id"))
-    salt = F.pmod(F.xxhash64("neighbor_id"), F.lit(32))
-    w1 = Window.partitionBy("query_id", "__salt").orderBy(
-        F.asc("dist"), F.asc("neighbor_id"))
-    return (scored.withColumn("__salt", salt)
-            .withColumn("__r1", F.row_number().over(w1))
-            .where(F.col("__r1") <= k).drop("__salt", "__r1")
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    return two_phase_topk(scored, ["query_id"], F.xxhash64("neighbor_id"),
+                          [F.asc("dist"), F.asc("neighbor_id")], k,
+                          32)
 
 
 def ivf_pq_refine(corpus_codes: DataFrame, queries: DataFrame,

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_df_profiling_spark.plans.topk import two_phase_topk
+
 # BPE-ish tokenizer: letter runs, digit runs, single non-space symbols.
 TOKEN_REGEX = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
@@ -323,29 +325,23 @@ def vocab_topk(df: DataFrame, text_col: str, k: int = 20,
 
     The one text op that NEEDS a token-stream shuffle (corpus-global
     counts), done skew-safely: explode → partial+final hash agg on the
-    token, then the same two-phase top-k as ``topk_frequencies`` — a
-    local rank within ``hash(token) % sub_partitions`` buckets before
-    the final rank, so no single task ever sees the whole vocabulary
+    token, then the salted ``two_phase_topk`` rank — a local rank
+    within ``hash(token) % sub_partitions`` buckets before the final
+    rank, so no single task ever sees the whole vocabulary
     (stop-word counts are the classic skew: the partial agg combines
     them map-side, the bucketed rank keeps the reduce side parallel).
     Ties break by token ascending (deterministic for the oracle).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
-    from pyspark.sql import Window
     counts = (df.select(F.explode(F.split(_c(text_col), " "))
                         .alias("token"))
               .where(F.col("token") != "")
               .groupBy("token")
               .agg(F.count(F.lit(1)).alias("cnt")))
-    bucket = F.pmod(F.xxhash64(F.col("token")), F.lit(sub_partitions))
-    w_local = Window.partitionBy(bucket).orderBy(
-        F.desc("cnt"), F.asc("token"))
-    local_top = (counts.withColumn("rk", F.row_number().over(w_local))
-                 .where(F.col("rk") <= k).drop("rk"))
-    w_global = Window.partitionBy().orderBy(F.desc("cnt"), F.asc("token"))
-    return (local_top.withColumn("rk", F.row_number().over(w_global))
-            .where(F.col("rk") <= k).drop("rk"))
+    return two_phase_topk(counts, [], F.xxhash64("token"),
+                          [F.desc("cnt"), F.asc("token")], k,
+                          sub_partitions).drop("rank")
 
 
 def unigram_logprob(df: DataFrame, text_col: str, id_col: str,
@@ -1416,7 +1412,7 @@ def _bpe_word_hist(df: DataFrame, text_col: str,
     of BPE training (Sennrich et al. 2016 operate on word counts, not
     the token stream): everything after this is vocabulary-sized, not
     corpus-sized.  Optional deterministic top-``max_word_types`` cap
-    (count desc, word asc, two-phase skew-safe rank — the standard
+    (count desc, word asc, ``two_phase_topk`` rank — the standard
     trainer pre-filter; a stated approximation, not a silent one)."""
     hist = (df.select(F.explode(F.split(_c(text_col), " "))
                       .alias("word"))
@@ -1425,16 +1421,9 @@ def _bpe_word_hist(df: DataFrame, text_col: str,
             .groupBy("word")
             .agg(F.count(F.lit(1)).alias("cnt")))
     if max_word_types is not None:
-        sub = 64
-        bucket = F.pmod(F.xxhash64(F.col("word")), F.lit(sub))
-        w_local = Window.partitionBy(bucket).orderBy(
-            F.desc("cnt"), F.asc("word"))
-        hist = (hist.withColumn("__rk", F.row_number().over(w_local))
-                .where(F.col("__rk") <= max_word_types).drop("__rk"))
-        w_glob = Window.partitionBy().orderBy(F.desc("cnt"),
-                                              F.asc("word"))
-        hist = (hist.withColumn("__rk", F.row_number().over(w_glob))
-                .where(F.col("__rk") <= max_word_types).drop("__rk"))
+        hist = two_phase_topk(hist, [], F.xxhash64("word"),
+                              [F.desc("cnt"), F.asc("word")],
+                              max_word_types, 64).drop("rank")
     return hist
 
 
@@ -1484,32 +1473,19 @@ def bpe_pair_counts(df: DataFrame, text_col: str, k: int = 20,
     Scale: the corpus collapses to the word-type histogram first
     (map-side combined groupBy — 'the' is ONE row with its count, not
     10¹¹ rows), pairs explode from word TYPES weighted by count, and
-    the top-k uses the two-phase bucketed rank (no single task sees
-    the pair vocabulary).
+    the top-k uses the ``two_phase_topk`` bucketed rank (no single
+    task sees the pair vocabulary).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
-    if sub_partitions < 1:
-        # pmod(_, 0) is NULL: every pair would land in ONE NULL
-        # bucket and the 'local' rank window would silently become
-        # the global single-task window this two-phase shape exists
-        # to avoid (ADVICE r12)
-        raise ValueError(
-            f"sub_partitions must be >= 1: {sub_partitions}")
     hist = _bpe_word_hist(df, text_col, None)
     seqs = hist.select(F.split(F.col("word"), "").alias("syms"),
                        "cnt")
     counts = _bpe_pair_counts_from(seqs)
-    bucket = F.pmod(F.xxhash64(F.col("pair")), F.lit(sub_partitions))
-    w_local = Window.partitionBy(bucket).orderBy(
-        F.desc("cnt"), F.asc("pair"))
-    local_top = (counts.withColumn("rk", F.row_number().over(w_local))
-                 .where(F.col("rk") <= k).drop("rk"))
-    w_glob = Window.partitionBy().orderBy(F.desc("cnt"),
-                                          F.asc("pair"))
     sp = F.split(F.col("pair"), BPE_SEP)
-    return (local_top.withColumn("rank", F.row_number().over(w_glob))
-            .where(F.col("rank") <= k)
+    return (two_phase_topk(counts, [], F.xxhash64("pair"),
+                           [F.desc("cnt"), F.asc("pair")], k,
+                           sub_partitions)
             .select(F.element_at(sp, 1).alias("sym_a"),
                     F.element_at(sp, 2).alias("sym_b"),
                     F.col("cnt").cast("long").alias("cnt"),

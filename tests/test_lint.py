@@ -48,9 +48,9 @@ def test_no_duplicate_toplevel_definitions():
 UNPARTITIONED_WINDOW_WHITELIST = {
     # streaming funnel step table: O(#steps) rows by construction
     ("streaming/__init__.py", "event_funnel"),
-    # two-phase top-k: global rank sees only sub_partitions*k rows
-    ("operators/sampling.py", "weighted_sample_k"),
-    ("operators/text.py", "vocab_topk"),
+    # the salted two-phase top-k kernel: with no key, the global rank
+    # sees at most sub_partitions × k rows (the bucket-phase survivors)
+    ("plans/topk.py", "two_phase_topk"),
     # BM25 global rank runs after .limit(k)
     ("operators/text.py", "bm25_topk"),
     # zipf ranks vocab_topk's output: max_vocab rows, bounded
@@ -61,10 +61,6 @@ UNPARTITIONED_WINDOW_WHITELIST = {
     ("sources/__init__.py", "file_row_stats"),
     # the O(#sources) mixture table by contract (dashboard-grade)
     ("operators/sampling.py", "mixture_plan"),
-    # two-phase top-k (vocab_topk shape): global rank sees only the
-    # 64-bucket local survivors — sub_partitions × cap rows
-    ("operators/text.py", "_bpe_word_hist"),
-    ("operators/text.py", "bpe_pair_counts"),
     # ordinal rank midpoints: cumulative sum over the CATEGORY
     # marginal frame (label-vocabulary-sized by construction)
     ("operators/correlation.py", "krippendorff_alpha"),

@@ -141,7 +141,7 @@ def test_no_rejection_on_lineitem(lineitem_profile):
 
 
 def test_profile_returns_dataframe(lineitem):
-    df = profile(lineitem, ProfileConfig(compute_correlations=False,
+    df = profile(lineitem, ProfileConfig(corr_reject=None,
                                          compute_histograms=False,
                                          compute_mad=False))
     assert df.count() == 11
@@ -201,8 +201,8 @@ def test_exact_keeps_every_other_field():
     cfg = ProfileConfig(
         bins=7, sample=3, corr_reject=0.5, top_k=9, distinct_rsd=0.02,
         quantile_accuracy=500, quantiles=(0.1, 0.9), fix_decimal=False,
-        profile_complex=False, compute_correlations=False,
-        compute_histograms=False, compute_mad=False)
+        profile_complex=False, compute_histograms=False,
+        compute_mad=False)
     switched = {"exact_distinct", "exact_quantiles"}
     others = [f for f in dataclasses.fields(ProfileConfig)
               if f.name not in switched]

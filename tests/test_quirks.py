@@ -182,7 +182,7 @@ def test_single_value_histogram_degenerate(spark):
     data = [(41.0,)] + [(42.0,)] * 99
     df = spark.createDataFrame(data, "q double")
     cfg = ProfileConfig(exact_distinct=True, exact_quantiles=True,
-                        compute_correlations=False)
+                        corr_reject=None)
     rows = _rows(describe(df, cfg))
     hist = rows["q"]["histogram"]
     assert sum(b["cnt"] for b in hist) == 100

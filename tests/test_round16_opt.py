@@ -278,7 +278,7 @@ def test_multi_partition_inputs_keep_standard_plan(spark, sf_dir, tmp_path):
 
 
 def test_topk_single_phase_identical(spark):
-    """two_phase=False (single-phase form) must return exactly the
+    """sub_partitions=1 (single-phase form) must return exactly the
     two-phase result — the bucket phase only pre-prunes rows that
     cannot reach the global top-k."""
     from spark_df_profiling_spark.operators.frequency import (
@@ -286,7 +286,7 @@ def test_topk_single_phase_identical(spark):
     df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     cols = ["l_returnflag", "l_linestatus", "l_quantity", "l_shipdate"]
     a = topk_frequencies(df, cols, 5)
-    b = topk_frequencies(df, cols, 5, two_phase=False)
+    b = topk_frequencies(df, cols, 5, sub_partitions=1)
     assert a == b
 
 

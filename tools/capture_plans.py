@@ -81,12 +81,12 @@ def main() -> None:
         from spark_df_profiling_spark.operators import frequency as FR
         orig_freq = FR.topk_frequencies
 
-        def spy_freq(d, cat_cols, k, sub_partitions=64, two_phase=True):
+        def spy_freq(d, cat_cols, k, sub_partitions=64):
             sections.append(
-                f"=== frequencies (two_phase={two_phase}) ===\n"
+                f"=== frequencies (sub_partitions={sub_partitions}) ===\n"
                 + fmt(FR.topk_frequencies_frame(d, cat_cols, k,
-                                                sub_partitions, two_phase)))
-            return orig_freq(d, cat_cols, k, sub_partitions, two_phase)
+                                                sub_partitions)))
+            return orig_freq(d, cat_cols, k, sub_partitions)
 
         W.make_chunks = spy_make
         P.W.make_chunks = spy_make
