@@ -1,26 +1,51 @@
-"""Dataset drift detection: Population Stability Index between snapshots.
+"""Dataset drift detection: how far a new snapshot, or a live event-time
+window, sits from a reference.
 
-When a new crawl/snapshot lands, a training pipeline compares its column
-distributions against the reference corpus before mixing it in.  PSI is
-the standard scorecard metric:
+The family:
+
+* scores per column — the Population Stability Index
+  (:func:`psi_numeric`, :func:`psi_categorical`, :func:`psi_report`,
+  per segment :func:`psi_by_group`) and the bounded Jensen–Shannon
+  divergence (:func:`jsd_numeric`, :func:`jsd_categorical`);
+* tests with p-values — chi-square/G (:func:`chi2_drift`), KS,
+  Cramér–von Mises, Mann–Whitney and Welch (:func:`ks_2samp` and its
+  siblings), Benjamini–Hochberg over the family (:func:`bh_fdr`,
+  :func:`drift_test_report`), top-k rank churn
+  (:func:`topk_rank_drift`);
+* monitors against a frozen reference — :func:`psi_reference`,
+  :func:`reference_histogram`, :func:`categorical_psi_reference` and
+  :func:`ks_reference` fit it as driver literals; :func:`windowed_psi`
+  and the ``streaming_*`` monitors of
+  :mod:`spark_df_profiling_spark.streaming` score every window.
+
+PSI is the standard scorecard metric:
 
     PSI = Σ_bins (p_ref − p_new) · ln(p_ref / p_new)
 
-with the usual reading: < 0.1 stable, 0.1–0.25 moderate shift, > 0.25
-action required.
+read as < 0.1 stable, 0.1–0.25 moderate shift, > 0.25 action required
+(:func:`_psi_band`).
 
-Scale design — one scan per dataset, total, regardless of column count:
+Every bucketed form runs on one kernel of private helpers:
 
-* every column's bin id is computed in a single projection, then
-  ``stack``-exploded to ``(column, bucket)`` rows — the follow-up
-  aggregation shuffles only ``#cols × #bins`` rows, not the data;
-* numeric bin edges come from the REFERENCE side's min/max (one
+* :func:`_bucket_index` is the clamped equal-width rule.  Edges come
+  from the REFERENCE side's min/max (:func:`_reference_edges`: one
   aggregate job collecting O(#cols) scalars, the same driver-side
-  pattern ``profile`` uses for histogram edges), then ride along as
-  literals — both datasets bucket identically with zero coordination;
-* zero-probability bins are floored at ``eps`` (the standard PSI
-  continuity fix), so a category/bin seen on one side only contributes
-  a finite, well-defined term.
+  pattern ``profile`` uses for histogram edges) and ride along as
+  literals, so both sides bucket identically with zero coordination.
+  Out-of-range rows clamp into the edge bins: that mass IS drift.
+* :func:`_bucket_counts` computes every column's bucket in a single
+  projection and ``stack``-explodes it to ``([group,] column,
+  bucket)`` rows: one scan per dataset, and the shuffle carries
+  ``#groups × #cols × #bins`` count rows, not the data.
+* :func:`_fold_shares` is the one proportions join; it folds PSI
+  (:func:`_psi_term`: zero-probability bins floored at ``EPS``, the
+  standard continuity fix) or JSD (:func:`_jsd_halves`: exact, no
+  floor) per column or per (group, column).
+* :func:`_window_counts` is the windowed monitors' ONE stateful
+  aggregation (a conditional-count column per bucket);
+  :func:`_window_psi_jsd` folds it against the reference literals in a
+  fixed term order, and :func:`_category_index` maps a categorical
+  value to its reference bucket.
 
 Everything is built-in expressions (codegen'd).  ``psi`` comes back as a
 raw double; cross-engine comparisons should normalize to significant
@@ -37,39 +62,186 @@ from pyspark.sql import functions as F
 EPS = 1e-6
 
 
-def _bucket_counts(df: DataFrame, exprs: dict[str, F.Column]) -> DataFrame:
-    """(column, bucket, n) in ONE scan via stack-explode of all columns."""
+def _psi_band(psi: F.Column) -> F.Column:
+    """The scorecard reading of a PSI value."""
+    return (F.when(psi < 0.1, F.lit("stable"))
+            .when(psi < 0.25, F.lit("moderate"))
+            .otherwise(F.lit("shifted")))
+
+
+def _reference_edges(ref: DataFrame, cols: Sequence[str]) -> dict:
+    """``{col: (min, max)}`` of the reference from ONE aggregate job;
+    ``None`` for an all-NULL (or empty) column, which has no edges."""
+    row = ref.agg(*[F.min(c) for c in cols],
+                  *[F.max(c) for c in cols]).collect()[0]
+    return {c: None if row[i] is None
+            else (float(row[i]), float(row[len(cols) + i]))
+            for i, c in enumerate(cols)}
+
+
+def _bucket_index(v: F.Column, lo: float, hi: float,
+                  bins: int) -> F.Column:
+    """Bucket ``0..bins-1`` of ``v`` on ``bins`` equal widths over
+    ``[lo, hi]``, values outside clamped into the edge buckets.  NULL
+    stays NULL; a constant range (``hi <= lo``) puts every value in
+    bucket 0."""
+    if hi <= lo:
+        return F.when(v.isNotNull(), F.lit(0))
+    width = (float(hi) - float(lo)) / bins
+    raw = F.floor((v - F.lit(float(lo))) / F.lit(width))
+    return F.when(v.isNotNull(),
+                  F.least(F.greatest(raw, F.lit(0)), F.lit(bins - 1)))
+
+
+def _numeric_bucket_exprs(ref: DataFrame, cols: Sequence[str],
+                          bins: int) -> dict:
+    """Reference-fitted bucket expressions (as strings, the common type
+    ``stack`` needs) for the numeric PSI, JSD and per-group paths: one
+    reference scan fits every column's edges."""
+    if not cols:
+        raise ValueError("cols must be non-empty")
+    if bins < 2:
+        raise ValueError(f"bins must be >= 2: {bins}")
+    # an all-NULL (or empty) reference column has no edges: its NULL
+    # bucket drops the column instead of crashing the report
+    return {c: (F.lit(None) if e is None
+                else _bucket_index(F.col(c), *e, bins)).cast("string")
+            for c, e in _reference_edges(ref, cols).items()}
+
+
+def _category_exprs(cols: Sequence[str], include_nulls: bool) -> dict:
+    """Each distinct value is its own bucket; ``include_nulls`` maps NULL
+    to a ``__null__`` bucket instead of dropping it."""
+    if not cols:
+        raise ValueError("cols must be non-empty")
+    if include_nulls:
+        return {c: F.coalesce(F.col(c).cast("string"),
+                              F.lit("__null__")) for c in cols}
+    return {c: F.col(c).cast("string") for c in cols}
+
+
+def _bucket_counts(df: DataFrame, exprs: dict,
+                   group: "F.Column | None" = None) -> DataFrame:
+    """``([group,] column, bucket, n)`` in ONE scan: every column's
+    bucket in one projection, stack-exploded, NULL buckets dropped."""
+    head = [] if group is None else [group.alias("group")]
+    keys = ["group"] * len(head)
     pairs = ", ".join(f"'{name}', `__bkt_{name}`" for name in exprs)
-    staged = df.select(*[e.alias(f"__bkt_{n}") for n, e in exprs.items()])
-    stacked = staged.select(
-        F.expr(f"stack({len(exprs)}, {pairs}) as (column, bucket)"))
+    staged = df.select(*head,
+                       *[e.alias(f"__bkt_{n}") for n, e in exprs.items()])
+    stacked = staged.select(*keys, F.expr(
+        f"stack({len(exprs)}, {pairs}) as (column, bucket)"))
     return (stacked.where(F.col("bucket").isNotNull())
-            .groupBy("column", "bucket")
+            .groupBy(*keys, "column", "bucket")
             .agg(F.count(F.lit(1)).alias("n")))
+
+
+def _psi_term(p: F.Column, q: F.Column) -> F.Column:
+    """One bucket's PSI term, both shares floored at ``EPS``."""
+    p, q = F.greatest(p, F.lit(EPS)), F.greatest(q, F.lit(EPS))
+    return (p - q) * F.log(p / q)
+
+
+def _jsd_halves(p: F.Column, q: F.Column) -> list:
+    """One bucket's two halves of JSD, ``0.5·x·ln(x/m)`` for each share
+    ``x`` against the midpoint ``m``; a zero share contributes 0."""
+    m = (p + q) / 2
+    return [F.when(x > 0, 0.5 * x * F.log(x / m)).otherwise(F.lit(0.0))
+            for x in (p, q)]
+
+
+def _fold_shares(ref_counts: DataFrame, new_counts: DataFrame,
+                 term, name: str) -> DataFrame:
+    """The one proportions join: full-outer join two
+    :func:`_bucket_counts` frames on ``([group,] column, bucket)``, turn
+    counts into each side's share of its key total (0 where a bucket is
+    absent) and sum ``term(p_ref, p_new)`` per key into ``name``.  A key
+    present on one side only is dropped (its other total is missing)."""
+    keys = [k for k in ("group", "column") if k in ref_counts.columns]
+    tot_r = ref_counts.groupBy(*keys).agg(F.sum("n").alias("tot_r"))
+    tot_n = new_counts.groupBy(*keys).agg(F.sum("n").alias("tot_n"))
+    if keys == ["column"]:
+        # #cols rows; per-(group, column) totals grow with the segments
+        tot_r, tot_n = F.broadcast(tot_r), F.broadcast(tot_n)
+    joined = (ref_counts.withColumnRenamed("n", "n_r")
+              .join(new_counts.withColumnRenamed("n", "n_n"),
+                    keys + ["bucket"], "full_outer")
+              .join(tot_r, keys).join(tot_n, keys))
+    p_r = F.coalesce(F.col("n_r"), F.lit(0)) / F.col("tot_r")
+    p_n = F.coalesce(F.col("n_n"), F.lit(0)) / F.col("tot_n")
+    return joined.groupBy(*keys).agg(F.sum(term(p_r, p_n)).alias(name))
 
 
 def _psi_from_counts(ref_counts: DataFrame,
                      new_counts: DataFrame) -> DataFrame:
-    """Join per-bucket proportions and fold the PSI sum per column."""
-    tot_r = (ref_counts.groupBy("column")
-             .agg(F.sum("n").alias("tot_r")))
-    tot_n = (new_counts.groupBy("column")
-             .agg(F.sum("n").alias("tot_n")))
-    joined = (ref_counts.withColumnRenamed("n", "n_r")
-              .join(new_counts.withColumnRenamed("n", "n_n"),
-                    ["column", "bucket"], "full_outer")
-              .join(F.broadcast(tot_r), "column")
-              .join(F.broadcast(tot_n), "column"))
-    p_r = F.greatest(F.coalesce(F.col("n_r"), F.lit(0)) / F.col("tot_r"),
-                     F.lit(EPS))
-    p_n = F.greatest(F.coalesce(F.col("n_n"), F.lit(0)) / F.col("tot_n"),
-                     F.lit(EPS))
-    term = (p_r - p_n) * F.log(p_r / p_n)
-    # raw double — callers needing cross-engine comparison normalize to
-    # significant digits themselves (summation order is engine-specific
-    # in the last ulps)
-    return (joined.groupBy("column")
-            .agg(F.sum(term).alias("psi")))
+    """PSI per key from two bucket-count frames, as a raw double —
+    callers needing cross-engine comparison normalize to significant
+    digits themselves (summation order is engine-specific in the last
+    ulps)."""
+    return _fold_shares(ref_counts, new_counts, _psi_term, "psi")
+
+
+def _jsd_from_counts(ref_counts: DataFrame,
+                     new_counts: DataFrame) -> DataFrame:
+    """Jensen–Shannon divergence per key from two bucket-count frames:
+    0.5·KL(P‖M) + 0.5·KL(Q‖M) with M = (P+Q)/2, natural log.  Exact —
+    no eps floors: a zero-mass bucket contributes 0 to its own KL term,
+    and M > 0 wherever either side has mass.  Bounded [0, ln 2], so
+    scores are comparable across columns and snapshots (PSI's
+    eps-floored unbounded scale is not)."""
+    def term(p: F.Column, q: F.Column) -> F.Column:
+        half_p, half_q = _jsd_halves(p, q)
+        return half_p + half_q
+    return _fold_shares(ref_counts, new_counts, term, "jsd")
+
+
+def _window_counts(base: DataFrame, ts_col: str, window: str,
+                   conds: list) -> DataFrame:
+    """The windowed monitors' ONE stateful aggregation (streaming-legal):
+    per tumbling ``window`` of ``ts_col``, ``n`` rows plus one
+    conditional count ``__c{i}`` per condition, as ``(window_start,
+    window_end, n, __c0, ...)``.  State is O(windows × conditions); every
+    score is a stateless projection over these columns."""
+    counts = [F.sum(F.when(c, 1).otherwise(0)).cast("long")
+              .alias(f"__c{i}") for i, c in enumerate(conds)]
+    return (base.groupBy(F.window(ts_col, window))
+            .agg(F.count(F.lit(1)).cast("long").alias("n"), *counts)
+            .select(F.col("window.start").alias("window_start"),
+                    F.col("window.end").alias("window_end"), "n",
+                    *[f"__c{i}" for i in range(len(conds))]))
+
+
+def _window_psi_jsd(fracs: Sequence[float]) -> tuple:
+    """``(psi, jsd)`` of each :func:`_window_counts` row's bucket shares
+    ``__c{b} / n`` against the reference shares ``fracs`` as literals.
+    Terms are added in bucket order b = 0..B-1, so every run, batch or
+    streaming, sums the same doubles in the same order."""
+    if len(fracs) < 2:
+        raise ValueError(f"reference needs >= 2 bins: {len(fracs)}")
+    nd = F.col("n").cast("double")
+    psi = jsd = F.lit(0.0)
+    for b, f in enumerate(fracs):
+        p, q = F.lit(f), F.col(f"__c{b}") / nd
+        half_p, half_q = _jsd_halves(p, q)
+        psi, jsd = psi + _psi_term(p, q), jsd + half_p + half_q
+    return psi, jsd
+
+
+def _category_index(v: F.Column, reference: list) -> F.Column:
+    """Index of ``v`` in a :func:`categorical_psi_reference` head as one
+    literal CASE chain; every other value maps to the final
+    ``'__other__'`` bucket (an unseen category scores as drift).  Raises
+    unless the reference ends in that bucket — a truncated reference
+    would silently mis-bucket."""
+    if (not reference or reference[-1][0] != "__other__"
+            or len(reference) < 2):
+        raise ValueError(
+            "reference must be categorical_psi_reference output: "
+            "at least one category plus a final '__other__' bucket")
+    idx = F.lit(len(reference) - 1)
+    for i in range(len(reference) - 2, -1, -1):
+        idx = F.when(v == reference[i][0], F.lit(i)).otherwise(idx)
+    return idx.cast("int")
 
 
 def psi_numeric(ref: DataFrame, new: DataFrame, cols: Sequence[str],
@@ -84,62 +256,6 @@ def psi_numeric(ref: DataFrame, new: DataFrame, cols: Sequence[str],
     exprs = _numeric_bucket_exprs(ref, cols, bins)
     return _psi_from_counts(_bucket_counts(ref, exprs),
                             _bucket_counts(new, exprs))
-
-
-def _numeric_bucket_exprs(ref: DataFrame, cols: Sequence[str],
-                          bins: int) -> dict:
-    """Reference-fitted clamped equal-width bucket expressions — shared
-    by the PSI and JSD numeric paths (one ref scan for all edges)."""
-    if not cols:
-        raise ValueError("cols must be non-empty")
-    if bins < 2:
-        raise ValueError(f"bins must be >= 2: {bins}")
-    edges_row = ref.agg(*[F.min(c).alias(f"mn_{c}") for c in cols],
-                        *[F.max(c).alias(f"mx_{c}") for c in cols]) \
-        .collect()[0]
-
-    def bucket_expr(c: str) -> F.Column:
-        if edges_row[f"mn_{c}"] is None or edges_row[f"mx_{c}"] is None:
-            # all-NULL (or empty) reference column: no edges — NULL
-            # bucket drops the column instead of crashing the report
-            return F.lit(None).cast("string")
-        mn = float(edges_row[f"mn_{c}"])
-        mx = float(edges_row[f"mx_{c}"])
-        if mx <= mn:  # constant column: everything in bucket 0
-            return F.when(F.col(c).isNotNull(), F.lit("0"))
-        width = (mx - mn) / bins
-        raw = F.floor((F.col(c) - F.lit(mn)) / F.lit(width))
-        clamped = F.least(F.greatest(raw, F.lit(0)),
-                          F.lit(bins - 1))
-        return F.when(F.col(c).isNotNull(), clamped.cast("string"))
-
-    return {c: bucket_expr(c) for c in cols}
-
-
-def _jsd_from_counts(ref_counts: DataFrame,
-                     new_counts: DataFrame) -> DataFrame:
-    """Jensen–Shannon divergence per column from the shared bucket
-    frames: 0.5·KL(P‖M) + 0.5·KL(Q‖M) with M = (P+Q)/2, natural log.
-    Exact — no eps floors: a zero-mass bucket contributes 0 to its own
-    KL term, and M > 0 wherever either side has mass.  Bounded
-    [0, ln 2], so scores are comparable across columns and snapshots
-    (PSI's eps-floored unbounded scale is not)."""
-    tot_r = (ref_counts.groupBy("column")
-             .agg(F.sum("n").alias("tot_r")))
-    tot_n = (new_counts.groupBy("column")
-             .agg(F.sum("n").alias("tot_n")))
-    joined = (ref_counts.withColumnRenamed("n", "n_r")
-              .join(new_counts.withColumnRenamed("n", "n_n"),
-                    ["column", "bucket"], "full_outer")
-              .join(F.broadcast(tot_r), "column")
-              .join(F.broadcast(tot_n), "column"))
-    p = F.coalesce(F.col("n_r"), F.lit(0)) / F.col("tot_r")
-    q = F.coalesce(F.col("n_n"), F.lit(0)) / F.col("tot_n")
-    m = (p + q) / 2
-    term = (F.when(p > 0, 0.5 * p * F.log(p / m)).otherwise(F.lit(0.0))
-            + F.when(q > 0, 0.5 * q * F.log(q / m))
-            .otherwise(F.lit(0.0)))
-    return joined.groupBy("column").agg(F.sum(term).alias("jsd"))
 
 
 def jsd_numeric(ref: DataFrame, new: DataFrame, cols: Sequence[str],
@@ -163,13 +279,7 @@ def jsd_categorical(ref: DataFrame, new: DataFrame,
     eps floors: a one-side-only value contributes its mass toward the
     ln 2 bound instead of an arbitrary eps-determined spike.  Same
     NULL contract as :func:`psi_categorical`."""
-    if not cols:
-        raise ValueError("cols must be non-empty")
-    if include_nulls:
-        exprs = {c: F.coalesce(F.col(c).cast("string"),
-                               F.lit("__null__")) for c in cols}
-    else:
-        exprs = {c: F.col(c).cast("string") for c in cols}
+    exprs = _category_exprs(cols, include_nulls)
     return _jsd_from_counts(_bucket_counts(ref, exprs),
                             _bucket_counts(new, exprs))
 
@@ -189,13 +299,7 @@ def psi_categorical(ref: DataFrame, new: DataFrame,
     is the classic silent corruption; the default excludes NULLs to
     match :func:`psi_numeric`).
     """
-    if not cols:
-        raise ValueError("cols must be non-empty")
-    if include_nulls:
-        exprs = {c: F.coalesce(F.col(c).cast("string"),
-                               F.lit("__null__")) for c in cols}
-    else:
-        exprs = {c: F.col(c).cast("string") for c in cols}
+    exprs = _category_exprs(cols, include_nulls)
     return _psi_from_counts(_bucket_counts(ref, exprs),
                             _bucket_counts(new, exprs))
 
@@ -284,37 +388,18 @@ def chi2_drift(ref: DataFrame, new: DataFrame,
     The shuffle grows to ``#groups × #cols × #values`` count rows —
     still state-sized, never data-sized.
     """
-    if not cols:
-        raise ValueError("cols must be non-empty")
+    exprs = _category_exprs(cols, include_nulls)
+    keys, group = ["column"], None
     if group_col:
         for d, name in ((ref, "ref"), (new, "new")):
             if group_col not in d.columns:
                 raise ValueError(
                     f"{name} missing group column: {group_col!r}")
-    if include_nulls:
-        exprs = {c: F.coalesce(F.col(c).cast("string"),
-                               F.lit("__null__")) for c in cols}
-    else:
-        exprs = {c: F.col(c).cast("string") for c in cols}
-
-    if group_col:
-        def counts(d: DataFrame, out: str) -> DataFrame:
-            pairs = ", ".join(f"'{c}', `__bkt_{c}`" for c in exprs)
-            staged = d.where(F.col(group_col).isNotNull()).select(
-                F.col(group_col).cast("string").alias("group"),
-                *[e.alias(f"__bkt_{c}") for c, e in exprs.items()])
-            stacked = staged.select("group", F.expr(
-                f"stack({len(exprs)}, {pairs}) as (column, bucket)"))
-            return (stacked.where(F.col("bucket").isNotNull())
-                    .groupBy("group", "column", "bucket")
-                    .agg(F.count(F.lit(1)).alias(out)))
-        rc = counts(ref, "n_r")
-        nc = counts(new, "n_n")
-        keys = ["group", "column"]
-    else:
-        rc = _bucket_counts(ref, exprs).withColumnRenamed("n", "n_r")
-        nc = _bucket_counts(new, exprs).withColumnRenamed("n", "n_n")
-        keys = ["column"]
+        ref, new = (d.where(F.col(group_col).isNotNull())
+                    for d in (ref, new))
+        keys, group = ["group", "column"], F.col(group_col).cast("string")
+    rc = _bucket_counts(ref, exprs, group).withColumnRenamed("n", "n_r")
+    nc = _bucket_counts(new, exprs, group).withColumnRenamed("n", "n_n")
     cells = (rc.join(nc, keys + ["bucket"], "full_outer")
              .select(*keys, "bucket",
                      F.coalesce("n_r", F.lit(0)).cast("double")
@@ -377,62 +462,12 @@ def psi_by_group(ref: DataFrame, new: DataFrame, group_col: str,
     aggregation — segment cardinality, not data volume, sizes the
     shuffle.
     """
-    if not cols:
-        raise ValueError("cols must be non-empty")
-    if bins < 2:
-        raise ValueError(f"bins must be >= 2: {bins}")
-    edges_row = ref.agg(*[F.min(c).alias(f"mn_{c}") for c in cols],
-                        *[F.max(c).alias(f"mx_{c}") for c in cols]) \
-        .collect()[0]
-
-    def bucket_expr(c: str) -> F.Column:
-        if edges_row[f"mn_{c}"] is None or edges_row[f"mx_{c}"] is None:
-            # all-NULL (or empty) reference column: no edges — NULL
-            # bucket drops the column instead of crashing the report
-            return F.lit(None).cast("string")
-        mn = float(edges_row[f"mn_{c}"])
-        mx = float(edges_row[f"mx_{c}"])
-        if mx <= mn:
-            return F.when(F.col(c).isNotNull(), F.lit("0"))
-        width = (mx - mn) / bins
-        raw = F.floor((F.col(c) - F.lit(mn)) / F.lit(width))
-        clamped = F.least(F.greatest(raw, F.lit(0)), F.lit(bins - 1))
-        return F.when(F.col(c).isNotNull(), clamped.cast("string"))
-
-    g = F.coalesce(F.col(group_col).cast("string"), F.lit("<null>"))
-
-    def counts(df: DataFrame) -> DataFrame:
-        pairs = ", ".join(f"'{c}', `__bkt_{c}`" for c in cols)
-        staged = df.select(g.alias("__grp"),
-                           *[bucket_expr(c).alias(f"__bkt_{c}")
-                             for c in cols])
-        stacked = staged.select("__grp", F.expr(
-            f"stack({len(cols)}, {pairs}) as (column, bucket)"))
-        return (stacked.where(F.col("bucket").isNotNull())
-                .groupBy("__grp", "column", "bucket")
-                .agg(F.count(F.lit(1)).alias("n")))
-
-    rc, nc = counts(ref), counts(new)
-    tot_r = rc.groupBy("__grp", "column").agg(F.sum("n").alias("tot_r"))
-    tot_n = nc.groupBy("__grp", "column").agg(F.sum("n").alias("tot_n"))
-    joined = (rc.withColumnRenamed("n", "n_r")
-              .join(nc.withColumnRenamed("n", "n_n"),
-                    ["__grp", "column", "bucket"], "full_outer")
-              .join(tot_r, ["__grp", "column"])
-              .join(tot_n, ["__grp", "column"]))
-    p_r = F.greatest(F.coalesce(F.col("n_r"), F.lit(0)) / F.col("tot_r"),
-                     F.lit(EPS))
-    p_n = F.greatest(F.coalesce(F.col("n_n"), F.lit(0)) / F.col("tot_n"),
-                     F.lit(EPS))
-    term = (p_r - p_n) * F.log(p_r / p_n)
-    out = (joined.groupBy("__grp", "column")
-           .agg(F.sum(term).alias("psi"))
-           .select(F.col("__grp").alias("group"), "column", "psi"))
-    return out.withColumn(
-        "band",
-        F.when(F.col("psi") < 0.1, F.lit("stable"))
-        .when(F.col("psi") < 0.25, F.lit("moderate"))
-        .otherwise(F.lit("shifted")))
+    exprs = _numeric_bucket_exprs(ref, cols, bins)
+    group = F.coalesce(F.col(group_col).cast("string"), F.lit("<null>"))
+    return _psi_from_counts(
+        _bucket_counts(ref, exprs, group),
+        _bucket_counts(new, exprs, group)).withColumn(
+        "band", _psi_band(F.col("psi")))
 
 
 def reference_histogram(ref: DataFrame, col: str,
@@ -440,31 +475,21 @@ def reference_histogram(ref: DataFrame, col: str,
     """``(lo, hi, probs)`` of a reference corpus — the frozen reference
     state :func:`windowed_psi` compares live windows against.
 
-    Two tiny jobs (edges, then per-bin proportions with the same
-    clamp-into-edge-bins rule as :func:`psi_numeric`); the result is
+    This is :func:`psi_reference` (two tiny jobs: edges, then per-bin
+    proportions with the :func:`psi_numeric` clamp-into-edge-bins
+    rule) that also refuses a constant column: every value of every
+    window would land in bucket 0, so its PSI could never leave 0.  The
+    result is
     O(bins) driver state that rides into the monitoring query as
     literals — persist it next to the model/corpus version it
     describes, exactly like frozen ``hist_edges`` in
     :func:`operators.incremental.partial_profile`.
     """
-    if bins < 2:
-        raise ValueError(f"bins must be >= 2: {bins}")
-    lo, hi = ref.agg(F.min(col), F.max(col)).collect()[0]
-    if lo is None or hi <= lo:
+    lo, hi, probs = psi_reference(ref, col, bins)
+    if hi <= lo:
         raise ValueError(
             f"reference for {col!r} needs a non-constant, non-null "
             f"range: ({lo}, {hi})")
-    lo, hi = float(lo), float(hi)
-    width = (hi - lo) / bins
-    bucket = F.least(F.greatest(
-        F.floor((F.col(col) - F.lit(lo)) / F.lit(width)), F.lit(0)),
-        F.lit(bins - 1))
-    counts = {int(r["b"]): r["n"] for r in
-              ref.where(F.col(col).isNotNull())
-              .groupBy(bucket.alias("b"))
-              .agg(F.count(F.lit(1)).alias("n")).collect()}
-    total = sum(counts.values())
-    probs = [counts.get(b, 0) / total for b in range(bins)]
     return (lo, hi, probs)
 
 
@@ -475,46 +500,27 @@ def windowed_psi(df: DataFrame, ts_col: str, value_col: str,
     — the STREAMING drift monitor (works identically on batch frames,
     same duality as :func:`streaming.windowed_profile`).
 
-    ``ref`` is :func:`reference_histogram` output.  The whole
-    computation is ONE stateful aggregation (streaming-legal in append
-    mode): per-bin counts accumulate as ``bins`` conditional sums
-    inside a single ``groupBy(window)``, and the PSI fold over the
-    fixed-length count vector happens in the stateless projection
-    AFTER the aggregation.  State is O(windows × bins); the watermark
-    bounds retention.  Deterministic term order (explicit b=0..B-1
-    sum), so batch output is engine-replayable.
+    ``ref`` is :func:`reference_histogram` or :func:`psi_reference`
+    output; a constant reference (``hi <= lo``) puts every value in
+    bucket 0.  The whole computation is ONE stateful aggregation
+    (:func:`_window_counts`, streaming-legal in append mode): per-bin
+    counts accumulate as ``bins`` conditional sums inside a single
+    ``groupBy(window)``, and the PSI fold over the fixed-length count
+    vector happens in the stateless projection AFTER the aggregation.
+    State is O(windows × bins); the watermark bounds retention.
+    Deterministic term order (explicit b=0..B-1 sum), so batch output
+    is engine-replayable.
     """
     lo, hi, probs = ref
-    bins = len(probs)
-    if bins < 2:
-        raise ValueError(f"reference needs >= 2 bins: {bins}")
+    psi, _ = _window_psi_jsd(probs)
     if df.isStreaming and watermark is not None:
         df = df.withWatermark(ts_col, watermark)
-    width = (float(hi) - float(lo)) / bins
     v = F.col(value_col)
-    bucket = F.least(F.greatest(
-        F.floor((v - F.lit(float(lo))) / F.lit(width)), F.lit(0)),
-        F.lit(bins - 1))
-    agg = (df.where(v.isNotNull())
-           .groupBy(F.window(F.col(ts_col), window).alias("w"))
-           .agg(F.count(F.lit(1)).alias("n"),
-                *[F.sum(F.when(bucket == b, 1).otherwise(0))
-                  .alias(f"__c{b}") for b in range(bins)]))
-    p_n = [F.greatest(F.col(f"__c{b}") / F.col("n"), F.lit(EPS))
-           for b in range(bins)]
-    p_r = [max(p, EPS) for p in probs]
-    terms = [(F.lit(p_r[b]) - p_n[b]) * F.log(F.lit(p_r[b]) / p_n[b])
-             for b in range(bins)]
-    psi = terms[0]
-    for t in terms[1:]:
-        psi = psi + t
-    return agg.select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        "n", psi.alias("psi"),
-        F.when(psi < 0.1, F.lit("stable"))
-        .when(psi < 0.25, F.lit("moderate"))
-        .otherwise(F.lit("shifted")).alias("band"))
+    bucket = _bucket_index(v, lo, hi, len(probs))
+    counts = _window_counts(df.where(v.isNotNull()), ts_col, window,
+                            [bucket == b for b in range(len(probs))])
+    return counts.select("window_start", "window_end", "n",
+                         psi.alias("psi"), _psi_band(psi).alias("band"))
 
 
 def psi_report(ref: DataFrame, new: DataFrame,
@@ -532,11 +538,7 @@ def psi_report(ref: DataFrame, new: DataFrame,
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.withColumn(
-        "band",
-        F.when(F.col("psi") < 0.1, F.lit("stable"))
-        .when(F.col("psi") < 0.25, F.lit("moderate"))
-        .otherwise(F.lit("shifted")))
+    return out.withColumn("band", _psi_band(F.col("psi")))
 
 
 def ks_2samp(ref: DataFrame, new: DataFrame, col: str,
@@ -1083,38 +1085,25 @@ def psi_reference(ref: DataFrame, col: str,
     ``fractions[b]`` is the reference share of bin ``b`` (zero bins
     stay 0.0 — EPS flooring happens at PSI time, not here).
 
-    Two aggregates over the reference (edges, then shares) — both
-    map-side combined; the result is O(bins) driver scalars.
+    Two aggregates over the reference, both map-side combined: the
+    shared edge fit (:func:`_reference_edges`), then the shares of
+    :func:`_bucket_index` over exactly the ``(mn, mx)`` pair that is
+    returned — one edges scan, and the fractions cannot disagree with
+    the returned edges even on a non-deterministic frame.  A constant
+    column is one full bin 0.  The result is O(bins) driver scalars.
     """
     if bins < 2:
         raise ValueError(f"bins must be >= 2: {bins}")
-    # ONE edges scan; the bucket expression is built from the SAME
-    # (mn, mx) pair that is returned — calling _numeric_bucket_exprs
-    # here would scan the reference again AND could disagree with the
-    # returned edges on a non-deterministic frame (review r12c)
-    row = ref.agg(F.min(col).alias("mn"),
-                  F.max(col).alias("mx")).collect()[0]
-    if row["mn"] is None:
+    edges = _reference_edges(ref, [col])[col]
+    if edges is None:
         raise ValueError(
             f"psi_reference: column {col!r} is all-NULL/empty — no "
             f"edges can be fit")
-    mn, mx = float(row["mn"]), float(row["mx"])
-    if mx <= mn:
-        bucket = F.when(F.col(col).isNotNull(), F.lit(0))
-    else:
-        width = (mx - mn) / bins
-        raw = F.floor((F.col(col) - F.lit(mn)) / F.lit(width))
-        bucket = F.when(
-            F.col(col).isNotNull(),
-            F.least(F.greatest(raw, F.lit(0)), F.lit(bins - 1)))
-    counts = {int(r["b"]): r["n"] for r in
-              (ref.select(bucket.alias("b"))
-               .where(F.col("b").isNotNull())
-               .groupBy("b").agg(F.count(F.lit(1)).alias("n"))
-               .collect())}
+    bucket = _bucket_index(F.col(col), *edges, bins)
+    counts = dict(ref.where(bucket.isNotNull()).groupBy(bucket)
+                  .count().collect())
     total = sum(counts.values()) or 1
-    fracs = [counts.get(b, 0) / total for b in range(bins)]
-    return mn, mx, fracs
+    return (*edges, [counts.get(b, 0) / total for b in range(bins)])
 
 
 def categorical_psi_reference(ref: DataFrame, col: str,

@@ -2960,7 +2960,7 @@ JOIN documents rb ON rb.doc_id = prs.id_b
 GROUP BY 2
 UNION ALL
 -- ngram_novelty replay: distinct word 3-gram shingles per doc
--- (shingle_expr normalization: lowercase, \s+ split), gram document
+-- (shingle_expr normalization: lowercase, \\s+ split), gram document
 -- frequency across the corpus, per-doc (n_ngrams, n_shared) — exact
 -- integers; novelty = 1 - shared/n is derived
 SELECT 'nov', d.doc_id,
@@ -2971,7 +2971,7 @@ FROM documents d LEFT JOIN (
     SELECT doc_id,
            list_distinct([array_to_string(toks[i:i+2], ' ')
                           for i in range(1, len(toks) - 1)]) AS g
-    FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS toks
+    FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS toks
           FROM documents)
     WHERE len(toks) >= 3),
   ex AS (SELECT doc_id, unnest(g) AS gram FROM shn),

@@ -15,6 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_df_profiling_spark.operators.drift import (
+    _bucket_index, _category_index, _window_counts, _window_psi_jsd,
+    chi2_sf_expr, ks_sf_expr)
+
 
 def _batch_sorted(pdfs, ts_col: str):
     """Concatenate a stateful group's Arrow chunks and sort ONCE by
@@ -891,6 +895,20 @@ def stateful_distinct_sample(stream_df: DataFrame,
                 GroupStateTimeout.NoTimeout))
 
 
+def _monitor_counts(stream_df: DataFrame, ts_col: str, window: str,
+                    watermark: str, v: F.Column, bucket: F.Column,
+                    conds: list) -> DataFrame:
+    """The streaming monitors' input and aggregation: rows with a
+    non-NULL ``v`` projected to ``(ts_col, __b = bucket)`` (the KS
+    monitor projects the value itself), watermarked AFTER that
+    projection, then counted per window under ``conds`` (over
+    ``__b``) by the shared ``drift._window_counts``."""
+    base = (stream_df.where(v.isNotNull())
+            .select(F.col(ts_col), bucket.alias("__b"))
+            .withWatermark(ts_col, watermark))
+    return _window_counts(base, ts_col, window, conds)
+
+
 def streaming_psi(stream_df: DataFrame, ts_col: str, value_col: str,
                   reference: "tuple[float, float, list[float]]",
                   window: str = "1 hour",
@@ -908,54 +926,23 @@ def streaming_psi(stream_df: DataFrame, ts_col: str, value_col: str,
     chained stateful operators): per-bin counts are ``bins``
     conditional-sum COLUMNS of one windowed agg, and PSI/JSD fold
     those columns with the reference fractions as literals in a plain
-    post-projection.  Identical EPS flooring and clamped equal-width
-    binning as the batch operator, so an availableNow replay equals
-    the batch computation exactly.
+    post-projection.  Same kernel as the batch operator
+    (:func:`~spark_df_profiling_spark.operators.drift.windowed_psi`:
+    the shared bucket rule, window counts and EPS-floored fold), so an
+    availableNow replay equals the batch computation exactly; a
+    constant reference (``mx <= mn``) puts every value in bucket 0.
 
     State is O(windows-in-flight × bins); NULL values excluded.
     """
-    from spark_df_profiling_spark.operators.drift import EPS
-
     mn, mx, fracs = reference
-    bins = len(fracs)
-    if bins < 2:
-        raise ValueError(f"reference must have >= 2 bins: {bins}")
+    psi, jsd = _window_psi_jsd(fracs)
     v = F.col(value_col).cast("double")
-    if mx <= mn:
-        bucket = F.lit(0)
-    else:
-        width = (mx - mn) / bins
-        bucket = F.least(F.greatest(
-            F.floor((v - F.lit(mn)) / F.lit(width)), F.lit(0)),
-            F.lit(bins - 1)).cast("int")
-    base = (stream_df.where(v.isNotNull())
-            .select(F.col(ts_col), bucket.alias("__b"))
-            .withWatermark(ts_col, watermark))
-    aggs = [F.count(F.lit(1)).cast("long").alias("n")]
-    for b in range(bins):
-        aggs.append(F.sum(F.when(F.col("__b") == b, 1).otherwise(0))
-                    .cast("long").alias(f"__c{b}"))
-    agg = base.groupBy(F.window(ts_col, window)).agg(*aggs)
-    nd = F.col("n").cast("double")
-    psi = F.lit(0.0)
-    jsd = F.lit(0.0)
-    for b in range(bins):
-        q_raw = F.col(f"__c{b}") / nd
-        p_raw = F.lit(fracs[b])
-        p = F.greatest(p_raw, F.lit(EPS))
-        q = F.greatest(q_raw, F.lit(EPS))
-        psi = psi + (p - q) * F.log(p / q)
-        m = (p_raw + q_raw) / 2
-        jsd = (jsd
-               + F.when(p_raw > 0,
-                        0.5 * p_raw * F.log(p_raw / m))
-               .otherwise(F.lit(0.0))
-               + F.when(q_raw > 0, 0.5 * q_raw * F.log(q_raw / m))
-               .otherwise(F.lit(0.0)))
-    return agg.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "n", psi.alias("psi"), jsd.alias("jsd"))
+    bins = len(fracs)
+    counts = _monitor_counts(stream_df, ts_col, window, watermark, v,
+                             _bucket_index(v, mn, mx, bins),
+                             [F.col("__b") == b for b in range(bins)])
+    return counts.select("window_start", "window_end", "n",
+                         psi.alias("psi"), jsd.alias("jsd"))
 
 
 def streaming_psi_categorical(stream_df: DataFrame, ts_col: str,
@@ -981,48 +968,14 @@ def streaming_psi_categorical(stream_df: DataFrame, ts_col: str,
     the ``'__other__'`` bucket (raises otherwise — a truncated
     reference would silently mis-bucket).
     """
-    from spark_df_profiling_spark.operators.drift import EPS
-
-    if (not reference or reference[-1][0] != "__other__"
-            or len(reference) < 2):
-        raise ValueError(
-            "reference must be categorical_psi_reference output: "
-            "at least one category plus a final '__other__' bucket")
-    cats = [v for v, _ in reference[:-1]]
-    fracs = [f for _, f in reference]
-    bins = len(fracs)
     v = F.col(col).cast("string")
-    idx = F.lit(bins - 1)
-    for i in range(len(cats) - 1, -1, -1):
-        idx = F.when(v == cats[i], F.lit(i)).otherwise(idx)
-    base = (stream_df.where(v.isNotNull())
-            .select(F.col(ts_col), idx.cast("int").alias("__b"))
-            .withWatermark(ts_col, watermark))
-    aggs = [F.count(F.lit(1)).cast("long").alias("n")]
-    for b in range(bins):
-        aggs.append(F.sum(F.when(F.col("__b") == b, 1).otherwise(0))
-                    .cast("long").alias(f"__c{b}"))
-    agg = base.groupBy(F.window(ts_col, window)).agg(*aggs)
-    nd = F.col("n").cast("double")
-    psi = F.lit(0.0)
-    jsd = F.lit(0.0)
-    for b in range(bins):
-        q_raw = F.col(f"__c{b}") / nd
-        p_raw = F.lit(fracs[b])
-        p = F.greatest(p_raw, F.lit(EPS))
-        q = F.greatest(q_raw, F.lit(EPS))
-        psi = psi + (p - q) * F.log(p / q)
-        m = (p_raw + q_raw) / 2
-        jsd = (jsd
-               + F.when(p_raw > 0,
-                        0.5 * p_raw * F.log(p_raw / m))
-               .otherwise(F.lit(0.0))
-               + F.when(q_raw > 0, 0.5 * q_raw * F.log(q_raw / m))
-               .otherwise(F.lit(0.0)))
-    return agg.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "n", psi.alias("psi"), jsd.alias("jsd"))
+    idx = _category_index(v, reference)
+    psi, jsd = _window_psi_jsd([f for _, f in reference])
+    counts = _monitor_counts(stream_df, ts_col, window, watermark, v, idx,
+                             [F.col("__b") == b
+                              for b in range(len(reference))])
+    return counts.select("window_start", "window_end", "n",
+                         psi.alias("psi"), jsd.alias("jsd"))
 
 
 def streaming_chi2(stream_df: DataFrame, ts_col: str, col: str,
@@ -1063,33 +1016,18 @@ def streaming_chi2(stream_df: DataFrame, ts_col: str, col: str,
     n = 0 never materialize; dof = 0 (single positive cell) yields
     NULL p.
     """
-    if (not reference or reference[-1][0] != "__other__"
-            or len(reference) < 2):
-        raise ValueError(
-            "reference must be categorical_psi_reference output: "
-            "at least one category plus a final '__other__' bucket")
+    v = F.col(col).cast("string")
+    idx = _category_index(v, reference)
     if len(reference) > 256:
         raise ValueError(
             f"streaming_chi2: reference has {len(reference)} "
             "categories; the streaming agg carries one column per "
             "category, so cap is 256 — refit with max_categories "
             "<= 255")
-    from spark_df_profiling_spark.operators.drift import chi2_sf_expr
-    cats = [v for v, _ in reference[:-1]]
     fracs = [float(f) for _, f in reference]
     bins = len(fracs)
-    v = F.col(col).cast("string")
-    idx = F.lit(bins - 1)
-    for i in range(len(cats) - 1, -1, -1):
-        idx = F.when(v == cats[i], F.lit(i)).otherwise(idx)
-    base = (stream_df.where(v.isNotNull())
-            .select(F.col(ts_col), idx.cast("int").alias("__b"))
-            .withWatermark(ts_col, watermark))
-    aggs = [F.count(F.lit(1)).cast("long").alias("n")]
-    for b in range(bins):
-        aggs.append(F.sum(F.when(F.col("__b") == b, 1).otherwise(0))
-                    .cast("long").alias(f"__c{b}"))
-    agg = base.groupBy(F.window(ts_col, window)).agg(*aggs)
+    counts = _monitor_counts(stream_df, ts_col, window, watermark, v, idx,
+                             [F.col("__b") == b for b in range(bins)])
     n_unexpected = F.lit(0).cast("long")
     pos_sum = 0.0
     n_pos = 0
@@ -1116,10 +1054,8 @@ def streaming_chi2(stream_df: DataFrame, ts_col: str, col: str,
             chi2 = chi2 + (o - e) * (o - e) / e
     chi2 = F.when(nd_eff > 0, chi2)
     dof = F.lit(float(n_pos - 1))
-    return agg.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "n", chi2.alias("chi2"),
+    return counts.select(
+        "window_start", "window_end", "n", chi2.alias("chi2"),
         dof.cast("long").alias("dof"),
         chi2_sf_expr(chi2, dof).alias("p_value"),
         n_unexpected.alias("n_unexpected"))
@@ -1175,29 +1111,20 @@ def streaming_ks(stream_df: DataFrame, ts_col: str, value_col: str,
     if edges != sorted(edges):
         raise ValueError("reference edges must be ascending")
     v = F.col(value_col).cast("double")
-    base = (stream_df.where(v.isNotNull())
-            .select(F.col(ts_col), v.alias("__v"))
-            .withWatermark(ts_col, watermark))
-    aggs = [F.count(F.lit(1)).cast("long").alias("n")]
-    for i, e in enumerate(edges):
-        aggs.append(F.sum(F.when(F.col("__v") <= F.lit(e), 1)
-                          .otherwise(0)).cast("long")
-                    .alias(f"__le{i}"))
-    agg = base.groupBy(F.window(ts_col, window)).agg(*aggs)
+    counts = _monitor_counts(stream_df, ts_col, window, watermark, v, v,
+                             [F.col("__b") <= F.lit(e) for e in edges])
     nd = F.col("n").cast("double")
     gaps = F.array(*[
         F.struct(
-            F.abs(F.col(f"__le{i}") / nd - F.lit(cdfs[i]))
+            F.abs(F.col(f"__c{i}") / nd - F.lit(cdfs[i]))
             .alias("d"),
             F.lit(edges[i]).alias("e"))
         for i in range(len(edges))])
     best = F.array_max(gaps)
-    from spark_df_profiling_spark.operators.drift import ks_sf_expr
     # p is a pure post-projection over the existing per-window
     # columns — zero new state, zero new aggregate columns
     lam = best["d"] * F.sqrt(nd)
-    return agg.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        "n", best["d"].alias("d_stat"), best["e"].alias("at_edge"),
+    return counts.select(
+        "window_start", "window_end", "n", best["d"].alias("d_stat"),
+        best["e"].alias("at_edge"),
         ks_sf_expr(lam).alias("p_value"))

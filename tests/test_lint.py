@@ -7,9 +7,24 @@ Redefinitions must fail loudly.
 
 import ast
 import pathlib
+import warnings
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / \
     "spark_df_profiling_spark"
+
+
+def test_package_compiles_with_warnings_as_errors():
+    # an invalid escape such as \s in a non-raw string compiles with
+    # a warning today and is an error in later Python releases
+    offenders = {}
+    for py in sorted(PKG.rglob("*.py")):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            try:
+                compile(py.read_text(), str(py), "exec")
+            except (SyntaxError, Warning) as e:
+                offenders[str(py.relative_to(PKG.parent))] = repr(e)
+    assert not offenders, f"compile warnings: {offenders}"
 
 
 def _toplevel_redefs(tree):
