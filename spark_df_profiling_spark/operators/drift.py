@@ -69,11 +69,17 @@ def _psi_band(psi: F.Column) -> F.Column:
             .otherwise(F.lit("shifted")))
 
 
+def _col(name: str) -> F.Column:
+    """The column named exactly ``name``: dots, quotes and backticks
+    are part of the name, not a path or SQL."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def _reference_edges(ref: DataFrame, cols: Sequence[str]) -> dict:
     """``{col: (min, max)}`` of the reference from ONE aggregate job;
     ``None`` for an all-NULL (or empty) column, which has no edges."""
-    row = ref.agg(*[F.min(c) for c in cols],
-                  *[F.max(c) for c in cols]).collect()[0]
+    row = ref.agg(*[F.min(_col(c)) for c in cols],
+                  *[F.max(_col(c)) for c in cols]).collect()[0]
     return {c: None if row[i] is None
             else (float(row[i]), float(row[len(cols) + i]))
             for i, c in enumerate(cols)}
@@ -105,7 +111,7 @@ def _numeric_bucket_exprs(ref: DataFrame, cols: Sequence[str],
     # an all-NULL (or empty) reference column has no edges: its NULL
     # bucket drops the column instead of crashing the report
     return {c: (F.lit(None) if e is None
-                else _bucket_index(F.col(c), *e, bins)).cast("string")
+                else _bucket_index(_col(c), *e, bins)).cast("string")
             for c, e in _reference_edges(ref, cols).items()}
 
 
@@ -115,9 +121,16 @@ def _category_exprs(cols: Sequence[str], include_nulls: bool) -> dict:
     if not cols:
         raise ValueError("cols must be non-empty")
     if include_nulls:
-        return {c: F.coalesce(F.col(c).cast("string"),
+        return {c: F.coalesce(_col(c).cast("string"),
                               F.lit("__null__")) for c in cols}
-    return {c: F.col(c).cast("string") for c in cols}
+    return {c: _col(c).cast("string") for c in cols}
+
+
+def _stack(exprs: dict) -> F.Column:
+    """``stack`` of ``{name: value}`` into ``(name, value)`` rows; each
+    name travels as a literal, never as SQL text."""
+    return F.stack(F.lit(len(exprs)),
+                   *[x for n, e in exprs.items() for x in (F.lit(n), e)])
 
 
 def _bucket_counts(df: DataFrame, exprs: dict,
@@ -126,11 +139,7 @@ def _bucket_counts(df: DataFrame, exprs: dict,
     bucket in one projection, stack-exploded, NULL buckets dropped."""
     head = [] if group is None else [group.alias("group")]
     keys = ["group"] * len(head)
-    pairs = ", ".join(f"'{name}', `__bkt_{name}`" for name in exprs)
-    staged = df.select(*head,
-                       *[e.alias(f"__bkt_{n}") for n, e in exprs.items()])
-    stacked = staged.select(*keys, F.expr(
-        f"stack({len(exprs)}, {pairs}) as (column, bucket)"))
+    stacked = df.select(*head, _stack(exprs).alias("column", "bucket"))
     return (stacked.where(F.col("bucket").isNotNull())
             .groupBy(*keys, "column", "bucket")
             .agg(F.count(F.lit(1)).alias("n")))
@@ -395,9 +404,9 @@ def chi2_drift(ref: DataFrame, new: DataFrame,
             if group_col not in d.columns:
                 raise ValueError(
                     f"{name} missing group column: {group_col!r}")
-        ref, new = (d.where(F.col(group_col).isNotNull())
+        ref, new = (d.where(_col(group_col).isNotNull())
                     for d in (ref, new))
-        keys, group = ["group", "column"], F.col(group_col).cast("string")
+        keys, group = ["group", "column"], _col(group_col).cast("string")
     rc = _bucket_counts(ref, exprs, group).withColumnRenamed("n", "n_r")
     nc = _bucket_counts(new, exprs, group).withColumnRenamed("n", "n_n")
     cells = (rc.join(nc, keys + ["bucket"], "full_outer")
@@ -463,7 +472,7 @@ def psi_by_group(ref: DataFrame, new: DataFrame, group_col: str,
     shuffle.
     """
     exprs = _numeric_bucket_exprs(ref, cols, bins)
-    group = F.coalesce(F.col(group_col).cast("string"), F.lit("<null>"))
+    group = F.coalesce(_col(group_col).cast("string"), F.lit("<null>"))
     return _psi_from_counts(
         _bucket_counts(ref, exprs, group),
         _bucket_counts(new, exprs, group)).withColumn(
@@ -755,11 +764,8 @@ def welch_ttest(ref: DataFrame, new: DataFrame,
         raise ValueError("cols must be non-empty")
 
     def moments(d: DataFrame, tag: str) -> DataFrame:
-        pairs = ", ".join(f"'{c}', `__v_{c}`" for c in cols)
-        staged = d.select(*[F.col(c).cast("double").alias(f"__v_{c}")
-                            for c in cols])
-        stacked = staged.select(F.expr(
-            f"stack({len(cols)}, {pairs}) as (column, v)"))
+        stacked = d.select(_stack({c: _col(c).cast("double")
+                                   for c in cols}).alias("column", "v"))
         return (stacked.where(F.col("v").isNotNull())
                 .groupBy("column")
                 .agg(F.count(F.lit(1)).cast("long").alias(f"n_{tag}"),

@@ -1157,8 +1157,7 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
     from pyspark.ml.feature import Normalizer
     from pyspark.ml.functions import array_to_vector
 
-    from spark_df_profiling_spark.operators.dedup import (
-        connected_components)
+    from spark_df_profiling_spark.operators.dedup import _dropped_ids
 
     if not -1.0 <= min_cosine <= 1.0:
         raise ValueError(f"min_cosine must be in [-1, 1]: {min_cosine}")
@@ -1192,6 +1191,7 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
                     .select("id", "__a", "cluster",
                             l2_norm(F.col("__a")).alias("__n")))
 
+    pairable = assigned
     if max_cluster_rows is not None:
         if max_cluster_rows < 2:
             raise ValueError(
@@ -1208,14 +1208,8 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
                 f"max_cluster_rows={max_cluster_rows} and are EXCLUDED "
                 f"from pairing (rows kept un-deduped): {over} — raise "
                 f"rows_per_cluster resolution or the cap", stacklevel=2)
-            assigned = assigned.withColumn(
-                "__pairable",
+            pairable = assigned.where(
                 ~F.col("cluster").isin(*[int(c) for c in over]))
-        else:
-            assigned = assigned.withColumn("__pairable", F.lit(True))
-    else:
-        assigned = assigned.withColumn("__pairable", F.lit(True))
-    pairable = assigned.where("__pairable")
 
     a = pairable.select(F.col("cluster"), F.col("id").alias("id_a"),
                         F.col("__a").alias("__va"),
@@ -1231,12 +1225,7 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
              .where(F.col("cos") >= min_cosine)
              .select("id_a", "id_b"))
 
-    if transitive:
-        comp = connected_components(pairs)  # (id, comp=min reachable id)
-        drops = comp.where(F.col("id") != F.col("comp")).select("id")
-    else:
-        # keep-first without closure: drop ids that pair with a smaller id
-        drops = pairs.select(F.col("id_b").alias("id")).distinct()
+    drops = _dropped_ids(pairs, transitive)
     return (assigned.join(drops.withColumn("__drop", F.lit(True)),
                           "id", "left")
             .select(F.col("id").alias(id_col), "cluster",

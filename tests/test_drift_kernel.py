@@ -1,9 +1,11 @@
 """The PSI drift family shares one bucket / count / fold kernel
 (``operators/drift.py``): the batch windowed monitor and the streaming
-one must bucket and fold identically, and both reference fitters must
-return the same tuple."""
+one must bucket and fold identically, both reference fitters must
+return the same tuple, and the bucketed tests take any column name."""
 
 import os
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -45,3 +47,28 @@ def test_reference_fits_and_windowed_paths_agree(spark, sf_dir):
         ev, "ts_ts", "value", ref, window="1 day").collect()}
     assert len(batch) > 1
     assert twin == batch
+
+
+NAMES = ["it's", "a.b", "x`y"]
+
+
+def _drift_call(name, ref, new):
+    from spark_df_profiling_spark.operators import drift as D
+    if name == "psi_by_group":
+        return D.psi_by_group(ref, new, "g", NAMES)
+    return getattr(D, name)(ref, new, NAMES)
+
+
+@pytest.mark.parametrize("name", [
+    "psi_numeric", "jsd_numeric", "psi_categorical", "jsd_categorical",
+    "chi2_drift", "psi_by_group", "welch_ttest"])
+def test_drift_family_takes_any_column_name(spark, name):
+    # a quote, a dot and a backtick are part of a column's name: the
+    # names travel as literals and quoted references, never as SQL text
+    def frame(shift):
+        return spark.range(100).select(
+            (F.col("id") % 2).alias("g"),
+            *[((F.col("id") + shift * k) % 7).alias(c)
+              for k, c in enumerate(NAMES, 1)])
+    got = _drift_call(name, frame(0), frame(1)).collect()
+    assert sorted({r["column"] for r in got}) == sorted(NAMES)
