@@ -45,9 +45,8 @@ def main() -> None:
         # measurement — every test parquet is ONE row group, so the
         # extra splits are empty and their task-launch overhead costs
         # 10-20% (profile_lineitem best-of-5: 2.28s at the 4 MB default
-        # vs 2.65s at 16 KB; profile_core8 4.31s vs 5.40s).  Engine-side
-        # mechanisms (fine chunking, parallelize_small_scan) carry the
-        # small-input parallelism instead.  See OPTIMIZATION_r15.md.
+        # vs 2.65s at 16 KB; profile_core8 4.31s vs 5.40s).  See
+        # OPTIMIZATION_r15.md.
         .appName("spark-df-profiling-bench")
         .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")

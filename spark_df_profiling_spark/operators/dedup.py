@@ -37,6 +37,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_df_profiling_spark.plans.sqltext import ident, slit
+
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -47,11 +49,15 @@ def _collist(cols: str | list[str]) -> list[str]:
     return [cols] if isinstance(cols, str) else list(cols)
 
 
+def _content_hash(cols: list[str]) -> str:
+    parts = ", ".join(f"coalesce(CAST({ident(c)} AS STRING), "
+                      f"{slit(chr(0) + 'NULL')})" for c in cols)
+    return f"sha2(concat_ws({slit(chr(1))}, {parts}), 256)"
+
+
 def content_hash(cols: str | list[str]) -> Column:
     """256-bit content hash over the given columns (null-safe)."""
-    parts = [F.coalesce(F.col(c).cast("string"), F.lit("\x00NULL"))
-             for c in _collist(cols)]
-    return F.sha2(F.concat_ws("\x01", *parts), 256)
+    return F.expr(_content_hash(_collist(cols)))
 
 
 def exact_dedup(df: DataFrame, cols: str | list[str] | None = None,
@@ -68,17 +74,17 @@ def exact_dedup(df: DataFrame, cols: str | list[str] | None = None,
     increasing id so the window sort is cheap per group (groups are tiny).
     """
     cols = _collist(cols) if cols else df.columns
-    h = content_hash(cols).alias("__h")
-    with_h = df.select("*", h)
+    with_h = df.selectExpr("*", f"{_content_hash(cols)} AS __h")
     if order_col is None:
         # distinct-by-hash without a deterministic survivor
         return (with_h.groupBy("__h")
-                .agg(*[F.first(c).alias(c) for c in df.columns])
+                .agg(*[F.expr(f"first({ident(c)}) AS {ident(c)}")
+                       for c in df.columns])
                 .drop("__h"))
-    w = Window.partitionBy("__h").orderBy(F.asc(order_col))
     return (with_h
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
+            .selectExpr("*", "row_number() OVER (PARTITION BY __h "
+                        f"ORDER BY {ident(order_col)} ASC) AS __rn")
+            .where("__rn = 1")
             .drop("__h", "__rn"))
 
 
@@ -233,13 +239,10 @@ def minhash_candidates(df: DataFrame, text_col: str, id_col: str,
     from pyspark.ml.feature import HashingTF, MinHashLSH
     from pyspark.storagelevel import StorageLevel
 
-    from spark_df_profiling_spark.sources import parallelize_small_scan
-    # shingle+TF+MinHash per-row work dwarfs the scan; a small
-    # file-backed corpus (single parquet row group -> ~1-task scan)
-    # gets one cheap repartition so the persisted-materialization job
-    # fans out; inert at scale (see parallelize_small_scan)
-    sh = shingle(parallelize_small_scan(df.select(id_col, text_col)),
-                 text_col, shingle_n)
+    # a NULL text has no shingles (as in shingle_expr); dropped here,
+    # because ml.feature.Tokenizer fails the job on a NULL input
+    sh = shingle(df.select(id_col, text_col)
+                 .where(F.col(text_col).isNotNull()), text_col, shingle_n)
     # filter on the shingle column BEFORE HashingTF: same rows survive
     # (transform is row-preserving), one fewer UDF stage in the pushed
     # filter when the frame is not persisted

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_df_profiling_spark.plans.sqltext import ident
 from spark_df_profiling_spark.plans.topk import two_phase_topk
 
 
@@ -59,9 +60,9 @@ def topk_frequencies_frame(df: DataFrame, cat_cols: list[str], k: int,
               .where(F.col("value").isNotNull())
               .groupBy("col_name", "value")
               .agg(F.count(F.lit(1)).alias("cnt")))
-    return two_phase_topk(counts, ["col_name"], F.xxhash64("value"),
-                          [F.desc("cnt"), F.asc("value")], k,
-                          sub_partitions, rank="rk")
+    return two_phase_topk(counts, ["col_name"], "xxhash64(value)",
+                          ["cnt DESC", "value ASC"], k, sub_partitions,
+                          rank="rk")
 
 
 def stack_columns(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -405,8 +406,8 @@ def topk_by_group(df: DataFrame, group_cols: str | list[str],
     counts = (df.where(F.col(value_col).isNotNull())
               .groupBy(*gcols, F.col(value_col).alias("value"))
               .agg(F.count(F.lit(1)).alias("cnt")))
-    return two_phase_topk(counts, gcols, F.xxhash64("value"),
-                          [F.desc("cnt"), F.asc("value")], k,
+    return two_phase_topk(counts, [ident(g) for g in gcols],
+                          "xxhash64(value)", ["cnt DESC", "value ASC"], k,
                           sub_partitions)
 
 
@@ -700,9 +701,8 @@ def windowed_topk(df: DataFrame, ts_col: str, value_col: str,
               .groupBy(bucket.alias("bucket"),
                        v.cast("string").alias("value"))
               .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
-    return (two_phase_topk(counts, ["bucket"], F.xxhash64("value"),
-                           [F.desc("cnt"), F.asc("value")], k,
-                           sub_partitions)
+    return (two_phase_topk(counts, ["bucket"], "xxhash64(value)",
+                           ["cnt DESC", "value ASC"], k, sub_partitions)
             .select("bucket",
                     (F.col("bucket") * F.lit(float(window)))
                     .alias("bucket_start"),

@@ -25,17 +25,23 @@ Mergeability per statistic:
   per-bin count arrays sum element-wise in :func:`merge_partials`;
   out-of-range values land in ``hist_below``/``hist_above`` so a later
   partial exceeding the frozen edges is visible, never silently clamped;
-* quantiles — EXACT quantiles are not mergeable from these states
-  (KLL state is not exposed by Spark SQL), but
+* quantiles — these states carry no quantile sketch (Spark SQL's
+  ``kll_sketch_agg_*`` family could add one; it is not wired in), so
   :func:`quantiles_from_state` derives ESTIMATES from the merged
   fixed-bin histogram (linear interpolation within the crossing bin,
   error bounded by one bin width); callers needing exact quantiles run
   :func:`operators.profile.profile` over the window they care about.
 
-Plan shape: ``partial_profile`` is ONE job over the partition (the same
-shuffle-free partial-agg shape as the main profile pass 1);
+Plan shape: ``partial_profile`` is one global aggregate over the
+partition (the shuffle-free partial-agg shape of the main profile pass
+1); writing it runs a map job plus the final job AQE plans after it.
 ``merge_partials``/``finalize`` run on #partials × #columns rows — state,
 not data.
+
+Every plan here is built from SQL text (one ``selectExpr``/``F.expr``
+per projection, see ``plans/sqltext.py``): the states are wide
+expressions, and as Column trees their py4j round trips cost more
+driver time than a small batch's scan.
 """
 
 from __future__ import annotations
@@ -43,10 +49,11 @@ from __future__ import annotations
 from functools import reduce
 from typing import Mapping, Optional, Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_df_profiling_spark import schema as S
+from spark_df_profiling_spark.plans.sqltext import dlit, ident, slit
 
 _NUMERIC = (S.NUM_INT, S.NUM_FLOAT)
 
@@ -57,9 +64,21 @@ STATE_COLUMNS = ("column", "type_class", "n", "count", "sum",
                  "hist_below", "hist_above")
 
 
-def _hist_fields(d: Optional[Column],
-                 spec: Optional[Tuple[float, float, int]]) -> list:
-    """Fixed-bin histogram state fields (all NULL when unconfigured).
+_INF = "double('Infinity'), double('-Infinity')"
+
+
+def _sum_if(cond: str) -> str:
+    """Count of rows meeting ``cond``, 0 (not NULL) over no rows: an
+    EMPTY partition must store 0, or the additive merge's sum is
+    poisoned."""
+    return (f"coalesce(CAST(sum(CASE WHEN {cond} THEN 1 ELSE 0 END) "
+            "AS BIGINT), 0L)")
+
+
+def _hist_fields(d: Optional[str],
+                 spec: Optional[Tuple[float, float, int]]) -> list[str]:
+    """Fixed-bin histogram state fields (all NULL when unconfigured),
+    as SQL ``expr AS name`` items over the numeric view ``d``.
 
     Bin arithmetic is identical to :func:`operators.histogram.histogram`
     — ``least(floor((x - lo) * bins / (hi - lo)), bins - 1)``, last bin
@@ -70,79 +89,61 @@ def _hist_fields(d: Optional[Column],
     signal, not silent clamping).
     """
     if d is None or spec is None:
-        return [F.lit(None).cast("double").alias("hist_lo"),
-                F.lit(None).cast("double").alias("hist_hi"),
-                F.lit(None).cast("array<bigint>").alias("hist"),
-                F.lit(None).cast("long").alias("hist_below"),
-                F.lit(None).cast("long").alias("hist_above")]
+        return ["CAST(NULL AS DOUBLE) AS hist_lo",
+                "CAST(NULL AS DOUBLE) AS hist_hi",
+                "CAST(NULL AS ARRAY<BIGINT>) AS hist",
+                "CAST(NULL AS BIGINT) AS hist_below",
+                "CAST(NULL AS BIGINT) AS hist_above"]
     lo, hi, bins = spec
-    finite = d.isNotNull() & ~F.isnan(d)
-    bin_id = F.least(F.floor((d - F.lit(lo)) * float(bins)
-                             / (F.lit(hi) - F.lit(lo))),
-                     F.lit(bins - 1).cast("long"))
-    in_range = finite & (d >= F.lit(lo)) & (d <= F.lit(hi))
-    counts = F.array(*[
-        F.coalesce(F.sum(F.when(in_range & (bin_id == i), 1)
-                         .otherwise(0)).cast("long"),
-                   F.lit(0).cast("long"))
-        for i in range(bins)])
-    below = F.coalesce(F.sum(F.when(finite & (d < F.lit(lo)), 1)
-                             .otherwise(0)).cast("long"),
-                       F.lit(0).cast("long"))
-    above = F.coalesce(F.sum(F.when(finite & (d > F.lit(hi)), 1)
-                             .otherwise(0)).cast("long"),
-                       F.lit(0).cast("long"))
-    return [F.lit(float(lo)).alias("hist_lo"),
-            F.lit(float(hi)).alias("hist_hi"),
-            counts.alias("hist"),
-            below.alias("hist_below"), above.alias("hist_above")]
+    lo_s, hi_s = dlit(lo), dlit(hi)
+    finite = f"{d} IS NOT NULL AND NOT isnan({d})"
+    bin_id = (f"least(floor(({d} - {lo_s}) * {dlit(float(bins))} "
+              f"/ ({hi_s} - {lo_s})), {bins - 1}L)")
+    in_range = f"{finite} AND {d} >= {lo_s} AND {d} <= {hi_s}"
+    counts = ", ".join(_sum_if(f"{in_range} AND {bin_id} = {i}")
+                       for i in range(bins))
+    return [f"{lo_s} AS hist_lo", f"{hi_s} AS hist_hi",
+            f"array({counts}) AS hist",
+            f"{_sum_if(f'{finite} AND {d} < {lo_s}')} AS hist_below",
+            f"{_sum_if(f'{finite} AND {d} > {hi_s}')} AS hist_above"]
 
 
-def _state_struct(name: str, cls: str, num_view: Optional[Column],
+def _state_struct(name: str, num_view: Optional[str],
                   hist_spec: Optional[Tuple[float, float, int]] = None
-                  ) -> Column:
-    """Mergeable per-column state as one struct aggregate.
+                  ) -> str:
+    """Mergeable per-column state as one struct aggregate (SQL text).
 
-    ``num_view`` is the double-valued view of the column when one exists
-    (numeric cast, or epoch seconds for date/timestamp — built by
-    :func:`partial_profile`, which knows the dtype); None for
+    ``num_view`` is the SQL of the double-valued view of the column when
+    one exists (numeric cast, or epoch seconds for date/timestamp —
+    built by :func:`partial_profile`, which knows the dtype); None for
     categorical columns.
     """
-    c = F.col(name)
-    n = F.count(F.lit(1)).cast("long")
-    cnt = F.count(c).cast("long")
-    zero_l = F.lit(0).cast("long")
+    c = ident(name)
     if num_view is not None:
         d = num_view
-        mean = F.coalesce(F.avg(d), F.lit(0.0))
-        # M2 = var_samp * (count - 1); var_samp is NULL for count < 2
-        m2 = F.coalesce(F.var_samp(d) * (F.count(d) - 1).cast("double"),
-                        F.lit(0.0))
-        sm = F.coalesce(F.sum(d), F.lit(0.0))
-        mn, mx = F.min(d), F.max(d)
-        # coalesced like mean/m2/sum: an EMPTY partition must store 0,
-        # not NULL (a NULL would poison the additive merge's sum)
-        zeros = F.coalesce(
-            F.sum(F.when(d == 0, 1).otherwise(0)).cast("long"), zero_l)
-        inf = F.coalesce(
-            F.sum(F.when(d.isin(float("inf"), float("-inf")), 1)
-                  .otherwise(0)).cast("long"), zero_l)
+        fields = [
+            f"coalesce(sum({d}), 0.0D) AS sum",
+            f"coalesce(avg({d}), 0.0D) AS mean",
+            # M2 = var_samp * (count - 1); var_samp is NULL for count < 2
+            f"coalesce(var_samp({d}) * CAST(count({d}) - 1 AS DOUBLE), "
+            "0.0D) AS m2",
+            f"min({d}) AS min_num", f"max({d}) AS max_num",
+            f"{_sum_if(f'{d} = 0')} AS n_zeros",
+            f"{_sum_if(f'{d} IN ({_INF})')} AS n_infinite"]
     else:
         d = None
-        mean, m2, sm = F.lit(0.0), F.lit(0.0), F.lit(0.0)
-        mn = F.min(F.lit(None).cast("double"))
-        mx = F.max(F.lit(None).cast("double"))
-        zeros = F.coalesce(F.sum(zero_l), zero_l)
-        inf = F.coalesce(F.sum(zero_l), zero_l)
+        fields = ["0.0D AS sum", "0.0D AS mean", "0.0D AS m2",
+                  "min(CAST(NULL AS DOUBLE)) AS min_num",
+                  "max(CAST(NULL AS DOUBLE)) AS max_num",
+                  "coalesce(sum(0L), 0L) AS n_zeros",
+                  "coalesce(sum(0L), 0L) AS n_infinite"]
     # HLL supports integral/string/binary inputs — cast through string
     # (exact for ints/strings; doubles collapse only on equal repr)
-    hll = F.hll_sketch_agg(c.cast("string"))
-    return F.struct(
-        n.alias("n"), cnt.alias("count"), sm.alias("sum"),
-        mean.alias("mean"), m2.alias("m2"),
-        mn.alias("min_num"), mx.alias("max_num"),
-        zeros.alias("n_zeros"), inf.alias("n_infinite"),
-        hll.alias("hll"), *_hist_fields(d, hist_spec))
+    return ("struct(CAST(count(1) AS BIGINT) AS n, "
+            f"CAST(count({c}) AS BIGINT) AS `count`, "
+            + ", ".join(fields)
+            + f", hll_sketch_agg(CAST({c} AS STRING)) AS hll, "
+            + ", ".join(_hist_fields(d, hist_spec)) + ")")
 
 
 def partial_profile(df: DataFrame,
@@ -167,13 +168,13 @@ def partial_profile(df: DataFrame,
     classes = {f.name: S.dtype_class(f.dataType)
                for f in df.schema.fields if f.name in names}
 
-    def num_view(c: str) -> Optional[Column]:
+    def num_view(c: str) -> Optional[str]:
         if classes[c] in _NUMERIC:
-            return F.col(c).cast("double")
+            return f"CAST({ident(c)} AS DOUBLE)"
         if classes[c] == S.DATE:
             # epoch seconds (dtype-adaptive: date / LTZ / NTZ) so date
             # min/max merge as plain doubles
-            return F.expr(_epoch_sql(df, c))
+            return _epoch_sql(df, c)
         return None
 
     edges = dict(hist_edges or {})
@@ -196,16 +197,37 @@ def partial_profile(df: DataFrame,
             return (float(lo), float(hi), hist_bins)
         return None
 
-    aggs = [_state_struct(c, classes[c], num_view(c), spec(c))
-            .alias(f"__s{i}")
-            for i, c in enumerate(names)]
-    one = df.agg(*aggs)
-    stacked = one.select(F.explode(F.array(*[
-        F.struct(F.lit(c).alias("column"),
-                 F.lit(classes[c]).alias("type_class"),
-                 F.col(f"__s{i}").alias("s"))
-        for i, c in enumerate(names)])).alias("e"))
-    return stacked.select("e.column", "e.type_class", "e.s.*")
+    one = df.selectExpr(*[
+        f"{_state_struct(c, num_view(c), spec(c))} AS __s{i}"
+        for i, c in enumerate(names)])
+    rows = ", ".join(
+        f"struct({slit(c)} AS `column`, {slit(classes[c])} AS type_class, "
+        f"__s{i} AS s)" for i, c in enumerate(names))
+    return (one.selectExpr(f"explode(array({rows})) AS e")
+            .selectExpr("e.`column`", "e.type_class", "e.s.*"))
+
+
+# Chan's parallel (count, mean, M2) update, folded over the per-partial
+# triples of one column
+_TRIPLES = """aggregate(
+    collect_list(struct(`count`, mean, m2)),
+    struct(0L AS `count`, 0.0D AS mean, 0.0D AS m2),
+    (acc, x) -> struct(
+        acc.`count` + x.`count` AS `count`,
+        CASE WHEN acc.`count` + x.`count` = 0 THEN 0.0D
+             ELSE (acc.`count` * acc.mean + x.`count` * x.mean)
+                  / (acc.`count` + x.`count`) END AS mean,
+        CASE WHEN acc.`count` + x.`count` = 0 THEN 0.0D
+             ELSE acc.m2 + x.m2 + pow(x.mean - acc.mean, 2)
+                  * acc.`count` * x.`count`
+                  / (acc.`count` + x.`count`) END AS m2))"""
+
+
+def _refuse(cond: str, what: str) -> str:
+    """``assert_true`` naming the column: NULL on pass, raises on fail
+    (an all-NULL ``cond`` raises too)."""
+    return (f"assert_true({cond}, concat({slit(what)}, `column`, "
+            f"{slit(' — refusing to merge')}))")
 
 
 def merge_partials(*parts: DataFrame) -> DataFrame:
@@ -227,107 +249,74 @@ def merge_partials(*parts: DataFrame) -> DataFrame:
     if not parts:
         raise ValueError("need at least one partial")
     allp = reduce(lambda a, b: a.unionByName(b), parts)
-    triples = F.aggregate(
-        F.collect_list(F.struct("count", "mean", "m2")),
-        F.struct(F.lit(0).cast("long").alias("count"),
-                 F.lit(0.0).alias("mean"), F.lit(0.0).alias("m2")),
-        lambda acc, x: F.struct(
-            (acc["count"] + x["count"]).alias("count"),
-            F.when(acc["count"] + x["count"] == 0, F.lit(0.0))
-            .otherwise((acc["count"] * acc["mean"]
-                        + x["count"] * x["mean"])
-                       / (acc["count"] + x["count"])).alias("mean"),
-            F.when(acc["count"] + x["count"] == 0, F.lit(0.0))
-            .otherwise(acc["m2"] + x["m2"]
-                       + F.pow(x["mean"] - acc["mean"], 2)
-                       * acc["count"] * x["count"]
-                       / (acc["count"] + x["count"])).alias("m2")))
     # "one distinct value" is tested as min == max (both ignore NULLs,
     # as count_distinct does), not with count_distinct: several DISTINCT
     # aggregates plan an Expand whose projections follow the hash order
     # of fresh expression ids, so every merge would generate new code
     # and compile its classes again.
-    def one_value(c):  # count_distinct(c) == 1, or NULL if all NULL
-        return F.min(c) == F.max(c)
-
     def at_most_one_value(c):  # count_distinct(c) <= 1
-        return F.coalesce(one_value(c), F.lit(True))
+        return f"coalesce(min({c}) = max({c}), true)"
 
     # type_class consistency: asserted INSIDE the expression that
     # produces the output type_class, so column pruning can never drop
-    # the check (assert_true yields NULL on pass, raises on fail; an
-    # all-NULL type_class gives NULL and raises too)
-    tc_ok = F.assert_true(
-        one_value("type_class"),
-        F.concat(F.lit("type_class drift across partials for column "),
-                 F.col("column"), F.lit(" — refusing to merge")))
-    tc = F.when(tc_ok.isNull(), F.max("type_class")).alias("type_class")
+    # the check
+    tc_ok = _refuse("min(type_class) = max(type_class)",
+                    "type_class drift across partials for column ")
     # histogram consistency: identical frozen edges, all-or-none
     # coverage (a partial built without hist_edges cannot silently
     # vanish into a merged histogram), and one bin COUNT — same edges
     # with different hist_bins would zip_with NULL-padded arrays into
     # NULL bins otherwise (min/max ignore the NULL sizes of hist-less
     # partials, so this composes with all-or-none)
-    hist_ok = F.assert_true(
-        at_most_one_value("hist_lo") & at_most_one_value("hist_hi")
-        & at_most_one_value(F.size("hist"))
-        & ((F.count("hist") == 0)
-           | (F.count("hist") == F.count(F.lit(1)))),
-        F.concat(F.lit("histogram edge/config drift across partials "
-                       "for column "), F.col("column"),
-                 F.lit(" — refusing to merge")))
-    hists = F.collect_list("hist")
-    hist_sum = F.when(
-        hist_ok.isNotNull() | (F.size(hists) == 0),
-        F.lit(None).cast("array<bigint>")).otherwise(
-        F.aggregate(F.slice(hists, 2, F.size(hists) - 1),
-                    F.element_at(hists, 1),
-                    lambda acc, x: F.zip_with(acc, x,
-                                              lambda a, b: a + b)))
-    return (allp.groupBy("column")
-            .agg(tc,
-                 F.sum("n").alias("n"),
-                 F.sum("count").alias("count"),
-                 F.sum("sum").alias("sum"),
-                 triples.alias("__t"),
-                 F.min("min_num").alias("min_num"),
-                 F.max("max_num").alias("max_num"),
-                 F.sum("n_zeros").alias("n_zeros"),
-                 F.sum("n_infinite").alias("n_infinite"),
-                 F.hll_union_agg("hll").alias("hll"),
-                 F.min("hist_lo").alias("hist_lo"),
-                 F.min("hist_hi").alias("hist_hi"),
-                 hist_sum.alias("hist"),
-                 F.sum("hist_below").alias("hist_below"),
-                 F.sum("hist_above").alias("hist_above"))
-            .select("column", "type_class", "n", "count", "sum",
-                    F.col("__t.mean").alias("mean"),
-                    F.col("__t.m2").alias("m2"),
-                    "min_num", "max_num", "n_zeros", "n_infinite", "hll",
-                    "hist_lo", "hist_hi", "hist",
-                    "hist_below", "hist_above"))
+    hist_ok = _refuse(
+        f"{at_most_one_value('hist_lo')} AND {at_most_one_value('hist_hi')}"
+        f" AND {at_most_one_value('size(hist)')}"
+        " AND (count(hist) = 0 OR count(hist) = count(1))",
+        "histogram edge/config drift across partials for column ")
+    hists = "collect_list(hist)"
+    hist_sum = (
+        f"CASE WHEN {hist_ok} IS NOT NULL OR size({hists}) = 0 "
+        "THEN CAST(NULL AS ARRAY<BIGINT>) "
+        f"ELSE aggregate(slice({hists}, 2, size({hists}) - 1), "
+        f"element_at({hists}, 1), "
+        "(acc, x) -> zip_with(acc, x, (a, b) -> a + b)) END")
+    aggs = [f"CASE WHEN {tc_ok} IS NULL THEN max(type_class) END "
+            "AS type_class",
+            "sum(n) AS n", "sum(`count`) AS `count`", "sum(sum) AS sum",
+            f"{_TRIPLES} AS __t",
+            "min(min_num) AS min_num", "max(max_num) AS max_num",
+            "sum(n_zeros) AS n_zeros", "sum(n_infinite) AS n_infinite",
+            "hll_union_agg(hll) AS hll",
+            "min(hist_lo) AS hist_lo", "min(hist_hi) AS hist_hi",
+            f"{hist_sum} AS hist",
+            "sum(hist_below) AS hist_below",
+            "sum(hist_above) AS hist_above"]
+    return (allp.groupBy("column").agg(*map(F.expr, aggs))
+            .selectExpr("`column`", "type_class", "n", "`count`", "sum",
+                        "__t.mean AS mean", "__t.m2 AS m2",
+                        "min_num", "max_num", "n_zeros", "n_infinite",
+                        "hll", "hist_lo", "hist_hi", "hist",
+                        "hist_below", "hist_above"))
 
 
 def finalize(partials: DataFrame) -> DataFrame:
     """Derive final statistics from (merged) state: one row per column
     with n, count, n_missing/p_missing, mean, std (sample), min/max,
     zeros/infinite counts, and the HLL distinct estimate."""
-    cnt = F.col("count")
-    numeric = F.col("type_class").isin(*_NUMERIC)
-    return partials.select(
-        "column", "type_class", "n", "count",
-        (F.col("n") - cnt).alias("n_missing"),
-        F.when(F.col("n") > 0, (F.col("n") - cnt) / F.col("n"))
-        .otherwise(F.lit(None)).alias("p_missing"),
-        F.when(numeric & (cnt > 0), F.col("mean"))
-        .otherwise(F.lit(None)).alias("mean"),
-        F.when(numeric & (cnt > 1), F.sqrt(F.col("m2") / (cnt - 1)))
-        .otherwise(F.lit(None)).alias("std"),
-        F.when(numeric & (cnt > 0), F.col("sum"))
-        .otherwise(F.lit(None)).alias("sum"),
+    numeric = f"type_class IN ({', '.join(map(slit, _NUMERIC))})"
+    return partials.selectExpr(
+        "`column`", "type_class", "n", "`count`",
+        "n - `count` AS n_missing",
+        "CASE WHEN n > 0 THEN (n - `count`) / n ELSE NULL END "
+        "AS p_missing",
+        f"CASE WHEN {numeric} AND `count` > 0 THEN mean ELSE NULL END "
+        "AS mean",
+        f"CASE WHEN {numeric} AND `count` > 1 "
+        "THEN sqrt(m2 / (`count` - 1)) ELSE NULL END AS std",
+        f"CASE WHEN {numeric} AND `count` > 0 THEN sum ELSE NULL END "
+        "AS sum",
         "min_num", "max_num", "n_zeros", "n_infinite",
-        F.hll_sketch_estimate("hll").cast("long")
-        .alias("distinct_estimate"),
+        "CAST(hll_sketch_estimate(hll) AS BIGINT) AS distinct_estimate",
         "hist_lo", "hist_hi", "hist", "hist_below", "hist_above")
 
 
@@ -337,8 +326,8 @@ def quantiles_from_state(state: DataFrame,
                          ) -> DataFrame:
     """Quantile ESTIMATES from merged fixed-bin histogram state.
 
-    The missing piece of the incremental workflow: exact quantiles are
-    not mergeable (no KLL state in Spark SQL), but the fixed-bin count
+    The missing piece of the incremental workflow: the states hold no
+    quantile sketch (see the module docstring), but the fixed-bin count
     arrays merge EXACTLY, so a histogram-derived estimate is fully
     deterministic w.r.t. how the corpus was partitioned into partials —
     merge order, partial count, and daily-append history cannot change

@@ -599,12 +599,12 @@ def weighted_sample_k(df: DataFrame, key_col: Union[str, Column],
     # Catalyst to push the filter under the projection is plan-shape
     # luck, not a contract
     es = F.when(w > 0, -F.log(u) / w).alias("es_key")
-    scored = df.withColumn("es_key", es).where(
-        w.isNotNull() & (w > 0) & _c(key_col).isNotNull())
-    key = _c(key_col).cast("string")
-    return two_phase_topk(scored, [], F.xxhash64(key),
-                          [F.asc("es_key"), F.asc(key)], k,
-                          sub_partitions, rank="__r2").drop("__r2")
+    scored = (df.withColumn("es_key", es)
+              .where(w.isNotNull() & (w > 0) & _c(key_col).isNotNull())
+              .withColumn("__es_k", _c(key_col).cast("string")))
+    return two_phase_topk(scored, [], "xxhash64(__es_k)",
+                          ["es_key ASC", "__es_k ASC"], k,
+                          sub_partitions, rank="__r2").drop("__r2", "__es_k")
 
 
 def score_buckets(df: DataFrame, score_col: Union[str, Column],

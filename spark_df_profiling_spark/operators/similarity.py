@@ -19,21 +19,31 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_df_profiling_spark.plans.sqltext import ident, operand
 from spark_df_profiling_spark.plans.topk import two_phase_topk
 
 
-def dot(a: Column, b: Column) -> Column:
+# Each rule is one SQL fragment over its operands' SQL text
+# (``plans.sqltext.operand``); the public helpers wrap it in ``F.expr``.
+def _dot(a: str, b: str) -> str:
+    return (f"aggregate(zip_with({a}, {b}, "
+            "(__x, __y) -> CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE)), "
+            "0.0D, (__acc, __v) -> __acc + __v)")
+
+
+def _l2_norm(a: str) -> str:
+    return (f"sqrt(aggregate(transform({a}, "
+            "__x -> CAST(__x AS DOUBLE) * CAST(__x AS DOUBLE)), "
+            "0.0D, (__acc, __v) -> __acc + __v))")
+
+
+def dot(a: Column | str, b: Column | str) -> Column:
     """Σ a_i·b_i in double precision (JVM higher-order functions)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v)
+    return F.expr(_dot(operand(a), operand(b)))
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v))
+def l2_norm(a: Column | str) -> Column:
+    return F.expr(_l2_norm(operand(a)))
 
 
 def safe_cosine(d: Column, na: Column, nb: Column) -> Column:
@@ -76,41 +86,37 @@ def knn_bruteforce(corpus: DataFrame, queries: DataFrame,
     20M times.  Per-row folds amortize huge expressions over few
     evaluations; per-PAIR expressions cannot.
     """
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("__qv"),
-                       l2_norm(F.col(vec_col)).alias("__qn"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("__cv"),
-                      l2_norm(F.col(vec_col)).alias("__cn"))
+    if metric not in ("cosine", "dot"):
+        raise ValueError(f"unknown metric: {metric}")
+    i, v = ident(id_col), ident(vec_col)
+    q = queries.selectExpr(f"{i} AS query_id", f"{v} AS __qv",
+                           f"{_l2_norm(v)} AS __qn")
+    c = corpus.selectExpr(f"{i} AS neighbor_id", f"{v} AS __cv",
+                          f"{_l2_norm(v)} AS __cn")
     if metric == "cosine":
         # zero-norm rows are excluded ONCE PER ROW, not per pair: their
         # cosine is undefined (safe_cosine would NULL every pair they
         # touch), so dropping them up front gives identical output while
         # keeping the per-pair expression a bare multiply-divide — a
         # per-pair when() branch measurably slows the O(n·q·d) stage
-        q = q.where(F.col("__qn") > 0)
-        c = c.where(F.col("__cn") > 0)
-    joined = c.crossJoin(F.broadcast(q)).where(
-        F.col("neighbor_id") != F.col("query_id"))
+        q = q.where("__qn > 0")
+        c = c.where("__cn > 0")
+    joined = c.crossJoin(F.broadcast(q)).where("neighbor_id != query_id")
     # norms are hoisted to one-per-ROW projections before the join —
     # higher-order functions run interpreted, so expanding cosine() per
     # PAIR would re-evaluate each norm q (resp. n) times and triple the
     # dominant O(n·q·d) stage (same reasoning as embedding_near_dup_exact)
+    sim = _dot("__qv", "__cv")
     if metric == "cosine":
-        sim = dot(F.col("__qv"), F.col("__cv")) \
-            / (F.col("__qn") * F.col("__cn"))
-    elif metric == "dot":
-        sim = dot(F.col("__qv"), F.col("__cv"))
-    else:
-        raise ValueError(f"unknown metric: {metric}")
+        sim = f"{sim} / (__qn * __cn)"
     # NULL sims (dot metric with NULL vectors, or vectors containing
     # NULL elements) are EXCLUDED, not ranked: they would sort last
     # under desc but still surface whenever a query has fewer than k
     # valid neighbors.  Cheap — runs after the per-row norm pre-filter.
-    scored = (joined.select("query_id", "neighbor_id", sim.alias("sim"))
-              .where(F.col("sim").isNotNull()))
-    return two_phase_topk(scored, ["query_id"], F.xxhash64("neighbor_id"),
-                          [F.desc("sim"), F.asc("neighbor_id")], k,
+    scored = (joined.selectExpr("query_id", "neighbor_id", f"{sim} AS sim")
+              .where("sim IS NOT NULL"))
+    return two_phase_topk(scored, ["query_id"], "xxhash64(neighbor_id)",
+                          ["sim DESC", "neighbor_id ASC"], k,
                           sub_partitions)
 
 
@@ -397,8 +403,8 @@ def knn_ivf(corpus: DataFrame, queries: DataFrame,
     scored = (joined.select("query_id", "neighbor_id",
                             sim.alias("sim"))
               .where(F.col("sim").isNotNull()))
-    return two_phase_topk(scored, ["query_id"], F.xxhash64("neighbor_id"),
-                          [F.desc("sim"), F.asc("neighbor_id")], k,
+    return two_phase_topk(scored, ["query_id"], "xxhash64(neighbor_id)",
+                          ["sim DESC", "neighbor_id ASC"], k,
                           sub_partitions)
 
 
@@ -911,8 +917,8 @@ def pq_adc_topk(corpus_codes: DataFrame, queries: DataFrame,
               # a NULL distance (NULL code element, foreign codes
               # frame) must never rank: NULLs sort FIRST under asc
               .where(F.col("dist").isNotNull()))
-    return two_phase_topk(scored, ["query_id"], F.xxhash64("neighbor_id"),
-                          [F.asc("dist"), F.asc("neighbor_id")], k,
+    return two_phase_topk(scored, ["query_id"], "xxhash64(neighbor_id)",
+                          ["dist ASC", "neighbor_id ASC"], k,
                           sub_partitions)
 
 
@@ -1028,9 +1034,8 @@ def ivf_pq_topk(corpus_codes: DataFrame, queries: DataFrame,
               # NULLs sort FIRST under asc — a NULL distance (NULL
               # code element) must never rank
               .where(F.col("dist").isNotNull()))
-    return two_phase_topk(scored, ["query_id"], F.xxhash64("neighbor_id"),
-                          [F.asc("dist"), F.asc("neighbor_id")], k,
-                          32)
+    return two_phase_topk(scored, ["query_id"], "xxhash64(neighbor_id)",
+                          ["dist ASC", "neighbor_id ASC"], k, 32)
 
 
 def ivf_pq_refine(corpus_codes: DataFrame, queries: DataFrame,
@@ -1292,7 +1297,7 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame,
     pool_df = (cand.join(cv, "neighbor_id")
                .select("query_id", "neighbor_id", "sim", "__cv", "__cn"))
 
-    def _dot(a, b):
+    def _py_dot(a, b):
         s = 0.0
         for x, y in zip(a, b):
             s += float(x) * float(y)
@@ -1321,7 +1326,7 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame,
                     mx = None
                     for sid in selected:
                         vb, nb = vecs[sid]
-                        c = (_dot(va, vb) / (na * nb)
+                        c = (_py_dot(va, vb) / (na * nb)
                              if na * nb > 0 else None)
                         if c is not None and (mx is None or c > mx):
                             mx = c

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_df_profiling_spark.plans.sqltext import ident, operand, slit
 from spark_df_profiling_spark.plans.topk import two_phase_topk
 
 # BPE-ish tokenizer: letter runs, digit runs, single non-space symbols.
@@ -27,62 +28,121 @@ def _c(col: str | Column) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+# --- per-document features --------------------------------------------------
+# Each rule is one private SQL fragment over the SQL text of its operand
+# (``plans.sqltext.operand``: a quoted column name or column reference).
+# The public helpers are ``F.expr`` wrappers around the fragment, and
+# :func:`text_features` projects every fragment in one ``selectExpr`` —
+# one py4j call instead of a Column tree of round trips per feature.
+# Binary-operator fragments come parenthesized so they nest safely.
+def _toks_ws(c: str) -> str:
+    return f"split({c}, ' ')"
+
+
+def _toks_lc(c: str) -> str:
+    return f"split(lower({c}), '\\\\s+')"
+
+
+def _n_chars(c: str) -> str:
+    return f"length({c})"
+
+
+def _n_tokens_bpe(c: str) -> str:
+    return f"size(regexp_extract_all({c}, {slit(TOKEN_REGEX)}, 0))"
+
+
+def _kept_len(c: str, char_class: str) -> str:
+    """Length after keeping only chars in the class."""
+    return f"length(regexp_replace({c}, {slit(f'[^{char_class}]')}, ''))"
+
+
+def _ratio(c: str, char_class: str) -> str:
+    return f"({_kept_len(c, char_class)} / length({c}))"
+
+
+def _punct_ratio(c: str) -> str:
+    return (f"((length({c}) - {_kept_len(c, 'A-Za-z0-9 ')}) "
+            f"/ length({c}))")
+
+
+def _avg_token_len(toks: str) -> str:
+    return (f"(CAST(aggregate({toks}, 0L, (__a, __t) -> __a + length(__t))"
+            f" AS DOUBLE) / size({toks}))")
+
+
+def _lang_scores(c: str, toks: str) -> dict[str, str]:
+    out = {lang: f"size(filter({toks}, __t -> array_contains("
+                 f"array({', '.join(map(slit, words))}), __t)))"
+           for lang, words in STOPWORDS.items()}
+    # each CJK char counts as one hit (no spaces between zh "words")
+    out["zh"] = (f"(length({c}) - "
+                 f"length(regexp_replace({c}, {slit(CJK_REGEX)}, '')))")
+    return out
+
+
+def _lang_id(c: str, toks: str, default: str) -> str:
+    entries = ", ".join(
+        f"struct(CAST({s} AS BIGINT) AS score, {slit(lang)} AS lang)"
+        for lang, s in sorted(_lang_scores(c, toks).items()))
+    best = f"array_max(array({entries}))"
+    return (f"CASE WHEN {best}.score > 0 THEN {best}.lang "
+            f"ELSE {slit(default)} END")
+
+
+def _quality_score(c: str, toks: str) -> str:
+    tok = _avg_token_len(toks)
+    return (f"(0.4D * {_ratio(c, 'A-Za-z')} "
+            f"+ 0.3D * least(length({c}) / 200.0D, 1.0D) "
+            f"+ 0.3D * CASE WHEN {tok} >= 2 AND {tok} <= 12 THEN 1.0D "
+            f"ELSE 0.3D END)")
+
+
+def _toks(col, toks) -> str:
+    """SQL text of the whitespace token array: the caller's pre-bound
+    ``toks`` column, else ``split(col, ' ')`` inline."""
+    return operand(toks) if toks is not None else _toks_ws(operand(col))
+
+
 def n_chars(col) -> Column:
-    return F.length(_c(col))
+    return F.expr(_n_chars(operand(col)))
 
 
 def n_tokens_ws(col) -> Column:
     """Whitespace token count (single-space split, matches DuckDB
     string_split semantics)."""
-    return F.size(F.split(_c(col), " "))
+    return F.expr(f"size({_toks_ws(operand(col))})")
 
 
 def n_tokens_bpe(col) -> Column:
-    return F.size(F.expr(
-        f"regexp_extract_all({_sql(col)}, '{TOKEN_REGEX}', 0)"))
-
-
-def _sql(col) -> str:
-    if isinstance(col, str):
-        return f"`{col}`"
-    raise TypeError("expression form requires a column name")
-
-
-def _kept_len(col, char_class: str) -> Column:
-    """Length after keeping only chars in the class."""
-    return F.length(F.regexp_replace(_c(col), f"[^{char_class}]", ""))
+    return F.expr(_n_tokens_bpe(operand(col)))
 
 
 def alpha_ratio(col) -> Column:
-    return _kept_len(col, "A-Za-z") / F.length(_c(col))
+    return F.expr(_ratio(operand(col), "A-Za-z"))
 
 
 def digit_ratio(col) -> Column:
-    return _kept_len(col, "0-9") / F.length(_c(col))
+    return F.expr(_ratio(operand(col), "0-9"))
 
 
 def space_ratio(col) -> Column:
-    return _kept_len(col, " ") / F.length(_c(col))
+    return F.expr(_ratio(operand(col), " "))
 
 
 def upper_ratio(col) -> Column:
-    return _kept_len(col, "A-Z") / F.length(_c(col))
+    return F.expr(_ratio(operand(col), "A-Z"))
 
 
 def punct_ratio(col) -> Column:
-    return (F.length(_c(col))
-            - _kept_len(col, "A-Za-z0-9 ")) / F.length(_c(col))
+    return F.expr(_punct_ratio(operand(col)))
 
 
 def avg_token_len(col, toks: Column | None = None) -> Column:
     """``toks`` lets callers pass a pre-bound ``split(col, ' ')`` array
-    (higher-order functions run interpreted with no CSE, so re-splitting
-    per consumer is a real cost — see :func:`text_features`)."""
-    if toks is None:
-        toks = F.split(_c(col), " ")
-    return (F.aggregate(toks, F.lit(0).cast("long"),
-                        lambda a, t: a + F.length(t)).cast("double")
-            / F.size(toks))
+    column (higher-order functions run interpreted with no CSE, so
+    re-splitting per consumer is a real cost — see
+    :func:`text_features`)."""
+    return F.expr(_avg_token_len(_toks(col, toks)))
 
 
 def fingerprint_min_shingle(col: str, toks_col: str | None = None) -> Column:
@@ -101,17 +161,22 @@ def fingerprint_min_shingle(col: str, toks_col: str | None = None) -> Column:
     ``toks_col`` names an already-materialized token-array column to use
     instead of splitting (see :func:`text_features`).
     """
-    src = f"`{toks_col}`" if toks_col else f"split(`{col}`, ' ')"
-    return F.expr(f"""
+    c = operand(col)
+    return F.expr(_fingerprint(
+        c, ident(toks_col) if toks_col else _toks_ws(c)))
+
+
+def _fingerprint(c: str, toks: str) -> str:
+    return f"""
         coalesce(
-            element_at(transform(array({src}), toks ->
+            element_at(transform(array({toks}), toks ->
                 CASE WHEN size(toks) >= 3 THEN
                     array_min(transform(
                         sequence(0, size(toks) - 3),
                         i -> md5(concat_ws(' ', toks[i], toks[i + 1],
                                            toks[i + 2]))))
                 END), 1),
-            md5(`{col}`))""")
+            md5({c}))"""
 
 
 # --- rolling hash + winnowing fingerprints ---------------------------------
@@ -173,11 +238,10 @@ def winnow_fingerprints(col, k: int = 5, w: int = 4) -> Column:
     expr = ("element_at(transform(array(split({src}, '')), chars -> "
             " CASE WHEN size(chars) >= %d THEN %s END), 1)"
             % (k, inner))
-    whole = F.array(rolling_hash(col))
-    src = _sql(col) if isinstance(col, str) else None
-    if src is None:
+    if not isinstance(col, str):
         raise TypeError("winnow_fingerprints requires a column name")
-    return F.coalesce(F.expr(expr.format(src=src)), whole)
+    return F.coalesce(F.expr(expr.format(src=ident(col))),
+                      F.array(rolling_hash(col)))
 
 
 # --- language ID -----------------------------------------------------------
@@ -194,20 +258,12 @@ def lang_scores(col, toks: Column | None = None) -> dict[str, Column]:
     """Stopword-hit count per language + CJK char count for zh.
 
     ``toks`` lets callers pass a pre-bound ``split(lower(col), '\\s+')``
-    array: each per-language filter is an interpreted higher-order
-    function that would otherwise re-lowercase and re-split the whole
-    document (len(STOPWORDS) times per row)."""
-    if toks is None:
-        toks = F.split(F.lower(_c(col)), r"\s+")
-    out: dict[str, Column] = {}
-    for lang, words in STOPWORDS.items():
-        wordset = F.array(*[F.lit(w) for w in words])
-        out[lang] = F.size(
-            F.filter(toks, lambda t: F.array_contains(wordset, t)))
-    # each CJK char counts as one hit (no spaces between zh "words")
-    out["zh"] = F.length(_c(col)) \
-        - F.length(F.regexp_replace(_c(col), CJK_REGEX, ""))
-    return out
+    array column: each per-language filter is an interpreted
+    higher-order function that would otherwise re-lowercase and re-split
+    the whole document (len(STOPWORDS) times per row)."""
+    c = operand(col)
+    lc = operand(toks) if toks is not None else _toks_lc(c)
+    return {lang: F.expr(s) for lang, s in _lang_scores(c, lc).items()}
 
 
 def lang_id(col, default: str = "und",
@@ -217,26 +273,18 @@ def lang_id(col, default: str = "und",
     argmax over per-language scores via array_max on (score, lang)
     structs — struct comparison orders by score then lang name, so ties
     break deterministically.  Returns ``default`` when no signal.
+    ``toks`` is the pre-bound lowercased token array, as in
+    :func:`lang_scores`.
     """
-    scores = lang_scores(col, toks=toks)
-    entries = F.array(*[
-        F.struct(s.cast("long").alias("score"), F.lit(lang).alias("lang"))
-        for lang, s in sorted(scores.items())])
-    best = F.array_max(entries)
-    return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit(default))
+    c = operand(col)
+    lc = operand(toks) if toks is not None else _toks_lc(c)
+    return F.expr(_lang_id(c, lc, default))
 
 
 def quality_score(col, toks: Column | None = None) -> Column:
     """Composite quality in [0, 1]: favors alphabetic text with sane
     token lengths and some minimum length (heuristic, deterministic)."""
-    c = _c(col)
-    len_score = F.least(F.length(c) / F.lit(200.0), F.lit(1.0))
-    alpha = alpha_ratio(col)
-    tok = avg_token_len(col, toks=toks)
-    tok_score = F.when((tok >= 2) & (tok <= 12), F.lit(1.0)) \
-        .otherwise(F.lit(0.3))
-    return (F.lit(0.4) * alpha + F.lit(0.3) * len_score
-            + F.lit(0.3) * tok_score)
+    return F.expr(_quality_score(operand(col), _toks(col, toks)))
 
 
 # --- repetition / diversity (Gopher-style quality rules) -------------------
@@ -339,8 +387,8 @@ def vocab_topk(df: DataFrame, text_col: str, k: int = 20,
               .where(F.col("token") != "")
               .groupBy("token")
               .agg(F.count(F.lit(1)).alias("cnt")))
-    return two_phase_topk(counts, [], F.xxhash64("token"),
-                          [F.desc("cnt"), F.asc("token")], k,
+    return two_phase_topk(counts, [], "xxhash64(token)",
+                          ["cnt DESC", "token ASC"], k,
                           sub_partitions).drop("rank")
 
 
@@ -526,34 +574,29 @@ def text_features(df: DataFrame, text_col: str) -> DataFrame:
     CollapseProject keeps the two-stage shape because inlining would
     duplicate a non-cheap expression referenced several times; the
     regexp/length kernels stay whole-stage-codegen either way.
+
+    Both projections are ``selectExpr`` calls over the helpers' SQL
+    fragments, so building the plan costs a few dozen py4j round trips
+    instead of ~1,600 for the same features as Column trees.
     """
-    from spark_df_profiling_spark.sources import parallelize_small_scan
-    tws, tlc = "__tf_toks_ws", "__tf_toks_lc"
-    # the per-row kernels here (regex ratios, min-shingle fingerprint,
-    # stopword scans) dwarf the scan, so a small file-backed input —
-    # whose single parquet row group pins everything to ~1 task — is
-    # worth one cheap repartition to fan the compute out; inert for
-    # non-file frames and at-scale inputs (see parallelize_small_scan)
-    step = parallelize_small_scan(df).select(
-        "*",
-        F.split(F.col(text_col), " ").alias(tws),
-        F.split(F.lower(F.col(text_col)), r"\s+").alias(tlc))
-    toks_ws, toks_lc = F.col(tws), F.col(tlc)
-    return step.select(
-        *df.columns,
-        n_chars(text_col).alias("f_n_chars"),
-        F.size(toks_ws).alias("f_n_tokens"),
-        n_tokens_bpe(text_col).alias("f_n_tokens_bpe"),
-        alpha_ratio(text_col).alias("f_alpha_ratio"),
-        digit_ratio(text_col).alias("f_digit_ratio"),
-        space_ratio(text_col).alias("f_space_ratio"),
-        upper_ratio(text_col).alias("f_upper_ratio"),
-        punct_ratio(text_col).alias("f_punct_ratio"),
-        avg_token_len(text_col, toks=toks_ws).alias("f_avg_token_len"),
-        fingerprint_min_shingle(text_col, toks_col=tws)
-        .alias("f_fingerprint"),
-        lang_id(text_col, toks=toks_lc).alias("f_lang"),
-        quality_score(text_col, toks=toks_ws).alias("f_quality"),
+    c = ident(text_col)
+    tws, tlc = "`__tf_toks_ws`", "`__tf_toks_lc`"
+    step = df.selectExpr("*", f"{_toks_ws(c)} AS {tws}",
+                         f"{_toks_lc(c)} AS {tlc}")
+    return step.selectExpr(
+        *map(ident, df.columns),
+        f"{_n_chars(c)} AS f_n_chars",
+        f"size({tws}) AS f_n_tokens",
+        f"{_n_tokens_bpe(c)} AS f_n_tokens_bpe",
+        f"{_ratio(c, 'A-Za-z')} AS f_alpha_ratio",
+        f"{_ratio(c, '0-9')} AS f_digit_ratio",
+        f"{_ratio(c, ' ')} AS f_space_ratio",
+        f"{_ratio(c, 'A-Z')} AS f_upper_ratio",
+        f"{_punct_ratio(c)} AS f_punct_ratio",
+        f"{_avg_token_len(tws)} AS f_avg_token_len",
+        f"{_fingerprint(c, tws)} AS f_fingerprint",
+        f"{_lang_id(c, tlc, 'und')} AS f_lang",
+        f"{_quality_score(c, tws)} AS f_quality",
     )
 
 
@@ -795,7 +838,7 @@ def zipf_fit(df: DataFrame, text_col: str,
 def _char_count(col, char_class: str) -> Column:
     """Number of chars in the class (complement-strip trick — stays a
     single codegen'd regexp_replace, no explode)."""
-    return _kept_len(col, char_class)
+    return F.expr(_kept_len(operand(col), char_class))
 
 
 def _safe_len(col) -> Column:
@@ -1421,8 +1464,8 @@ def _bpe_word_hist(df: DataFrame, text_col: str,
             .groupBy("word")
             .agg(F.count(F.lit(1)).alias("cnt")))
     if max_word_types is not None:
-        hist = two_phase_topk(hist, [], F.xxhash64("word"),
-                              [F.desc("cnt"), F.asc("word")],
+        hist = two_phase_topk(hist, [], "xxhash64(word)",
+                              ["cnt DESC", "word ASC"],
                               max_word_types, 64).drop("rank")
     return hist
 
@@ -1483,9 +1526,8 @@ def bpe_pair_counts(df: DataFrame, text_col: str, k: int = 20,
                        "cnt")
     counts = _bpe_pair_counts_from(seqs)
     sp = F.split(F.col("pair"), BPE_SEP)
-    return (two_phase_topk(counts, [], F.xxhash64("pair"),
-                           [F.desc("cnt"), F.asc("pair")], k,
-                           sub_partitions)
+    return (two_phase_topk(counts, [], "xxhash64(pair)",
+                           ["cnt DESC", "pair ASC"], k, sub_partitions)
             .select(F.element_at(sp, 1).alias("sym_a"),
                     F.element_at(sp, 2).alias("sym_b"),
                     F.col("cnt").cast("long").alias("cnt"),

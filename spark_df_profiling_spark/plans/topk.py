@@ -16,18 +16,23 @@ identical for every ``sub_partitions``.
 
 from __future__ import annotations
 
-from typing import Sequence, Union
+from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from spark_df_profiling_spark.plans.sqltext import ident
 
 
-def two_phase_topk(df: DataFrame, by: Sequence[Union[str, Column]],
-                   salt: Column, order: Sequence[Column], k: int,
-                   sub_partitions: int, rank: str = "rank") -> DataFrame:
+def two_phase_topk(df: DataFrame, by: Sequence[str], salt: str,
+                   order: Sequence[str], k: int, sub_partitions: int,
+                   rank: str = "rank") -> DataFrame:
     """Keep the top ``k`` rows of ``df`` per ``by`` key under ``order``
     (which must be a total order for deterministic output), adding the
     1-based ``rank`` column.  ``by=[]`` ranks the whole frame.
+
+    ``by``, ``salt`` and ``order`` are SQL text (``"xxhash64(value)"``,
+    ``"cnt DESC"``), with column names quoted by the caller where they
+    need it; each phase is one ``selectExpr`` and one ``where``.
 
     ``sub_partitions == 1`` skips the bucket phase: the single-phase
     reference form, with the same result.  ``sub_partitions < 1`` raises
@@ -36,13 +41,14 @@ def two_phase_topk(df: DataFrame, by: Sequence[Union[str, Column]],
     """
     if sub_partitions < 1:
         raise ValueError(f"sub_partitions must be >= 1: {sub_partitions}")
+    order_by = "ORDER BY " + ", ".join(order)
     if sub_partitions > 1:
-        bucket = F.pmod(salt, F.lit(sub_partitions))
-        local = Window.partitionBy(*by, bucket).orderBy(*order)
-        df = (df.withColumn("__r1", F.row_number().over(local))
-              .where(F.col("__r1") <= k).drop("__r1"))
-    final = (Window.partitionBy(*by).orderBy(*order) if by
-             # unkeyed: the bucket phase leaves sub_partitions × k rows
-             else Window.orderBy(*order))
-    return (df.withColumn(rank, F.row_number().over(final))
-            .where(F.col(rank) <= k))
+        keys = ", ".join([*by, f"pmod({salt}, {sub_partitions})"])
+        local = f"PARTITION BY {keys} {order_by}"
+        df = (df.selectExpr("*", f"row_number() OVER ({local}) AS __r1")
+              .where(f"__r1 <= {k}").drop("__r1"))
+    # unkeyed: the bucket phase leaves sub_partitions × k rows
+    final = f"PARTITION BY {', '.join(by)} {order_by}" if by else order_by
+    r = ident(rank)
+    return (df.selectExpr("*", f"row_number() OVER ({final}) AS {r}")
+            .where(f"{r} <= {k}"))

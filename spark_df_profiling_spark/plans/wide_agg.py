@@ -33,17 +33,12 @@ from pyspark.sql import DataFrame
 
 from spark_df_profiling_spark import schema as S
 from spark_df_profiling_spark.config import ProfileConfig
+from spark_df_profiling_spark.plans.sqltext import dlit, ident
 
 
 def stat_key(i: int, stat: str) -> str:
     """Result alias of statistic ``stat`` of column ``i``."""
     return f"c{i}__{stat}"
-
-
-def _dlit(v: float) -> str:
-    """Exact DOUBLE literal: ``repr(float)`` is shortest-round-trip and
-    Java's ``Double.parseDouble`` reads it back bit-exact."""
-    return f"double('{v!r}')"
 
 
 def build_pass1_exprs(df: DataFrame, classes: list[str],
@@ -58,6 +53,9 @@ def build_pass1_exprs(df: DataFrame, classes: list[str],
     costs ~10 py4j socket round-trips and a wide profile needs hundreds of
     expressions — string building is pure Python (measured: ~1.2s of py4j
     chatter per table collapsed to one ``selectExpr`` call per chunk).
+    ``text_features``, ``partial_profile``/``merge_partials``/``finalize``,
+    ``knn_bruteforce``, ``two_phase_topk`` and ``exact_dedup`` build their
+    plans the same way (see ``plans/sqltext.py``).
     Callers pass them to :func:`run_chunked_agg` (or ``df.selectExpr``).
     Column names are backtick-quoted; ``describe()`` renames columns to
     ``__c{i}`` first, so embedded backticks can't occur in the hot path.
@@ -144,7 +142,7 @@ def build_pass2_exprs(df: DataFrame, classes: list[str], pass1: dict[str, Any],
     (``base.py::describe>>describe_integer_1d``), an inherently two-pass
     statistic.  Histogram bins are equal-width on [min, max] with the last
     bin right-closed, matching ``base.py::describe>>create_hist_data``.
-    Bin-edge literals are emitted with :func:`_dlit`, so the SQL form
+    Bin-edge literals are emitted with ``sqltext.dlit``, so the SQL form
     computes the bit-exact same bins as driver-side float arithmetic.
     """
     exprs: list[str] = []
@@ -162,12 +160,12 @@ def build_pass2_exprs(df: DataFrame, classes: list[str], pass1: dict[str, Any],
                 for b in range(cfg.bins):
                     left = mn_e + width * b
                     if b == cfg.bins - 1:
-                        cond = (f"{ep} >= {_dlit(left)} "
-                                f"AND {ep} <= {_dlit(mx_e)}")
+                        cond = (f"{ep} >= {dlit(left)} "
+                                f"AND {ep} <= {dlit(mx_e)}")
                     else:
                         right = mn_e + width * (b + 1)
-                        cond = (f"{ep} >= {_dlit(left)} "
-                                f"AND {ep} < {_dlit(right)}")
+                        cond = (f"{ep} >= {dlit(left)} "
+                                f"AND {ep} < {dlit(right)}")
                     exprs.append(
                         f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END) "
                         f"AS `{stat_key(i, f'hist{b}')}`")
@@ -181,7 +179,7 @@ def build_pass2_exprs(df: DataFrame, classes: list[str], pass1: dict[str, Any],
         c = f"CAST(`{field.name}` AS DOUBLE)"
         if cfg.compute_mad and cnt > 0 and mean is not None \
                 and math.isfinite(mean):
-            exprs.append(f"avg(abs({c} - {_dlit(mean)})) "
+            exprs.append(f"avg(abs({c} - {dlit(mean)})) "
                          f"AS `{stat_key(i, 'mad')}`")
         if cfg.compute_histograms and cnt > 0 and mn is not None \
                 and mx is not None and math.isfinite(mn) and math.isfinite(mx) \
@@ -190,11 +188,11 @@ def build_pass2_exprs(df: DataFrame, classes: list[str], pass1: dict[str, Any],
             for b in range(cfg.bins):
                 left = mn + width * b
                 if b == cfg.bins - 1:
-                    cond = (f"{c} >= {_dlit(left)} AND {c} <= {_dlit(mx)} "
+                    cond = (f"{c} >= {dlit(left)} AND {c} <= {dlit(mx)} "
                             f"AND NOT isnan({c})")
                 else:
                     right = mn + width * (b + 1)
-                    cond = (f"{c} >= {_dlit(left)} AND {c} < {_dlit(right)} "
+                    cond = (f"{c} >= {dlit(left)} AND {c} < {dlit(right)} "
                             f"AND NOT isnan({c})")
                 exprs.append(f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END) "
                              f"AS `{stat_key(i, f'hist{b}')}`")
@@ -379,11 +377,11 @@ def _epoch_sql(df: DataFrame, col: str) -> str:
     """Epoch-seconds SQL expression for LTZ/NTZ timestamp or date cols."""
     dt = dict(df.dtypes)[col]
     if dt.startswith("timestamp_ntz"):
-        return (f"CAST(timestampdiff(SECOND, "
-                f"TIMESTAMP_NTZ '1970-01-01 00:00:00', `{col}`) AS DOUBLE)")
+        return (f"CAST(timestampdiff(SECOND, TIMESTAMP_NTZ "
+                f"'1970-01-01 00:00:00', {ident(col)}) AS DOUBLE)")
     if dt == "date":
-        return f"(CAST(unix_date(`{col}`) AS DOUBLE) * 86400.0)"
-    return f"CAST(unix_seconds(`{col}`) AS DOUBLE)"
+        return f"(CAST(unix_date({ident(col)}) AS DOUBLE) * 86400.0)"
+    return f"CAST(unix_seconds({ident(col)}) AS DOUBLE)"
 
 
 def date_range_seconds(mn: Any, mx: Any) -> float | None:

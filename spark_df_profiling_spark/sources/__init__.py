@@ -169,41 +169,6 @@ def scan_parallelism(df: DataFrame, probe_cap: int = 256,
         return None
 
 
-def parallelize_small_scan(df: DataFrame, min_bytes: int = 64 << 10,
-                           max_bytes_per_core: int = 4 << 20) -> DataFrame:
-    """Repartition a SMALL file-backed frame to core count so heavy
-    per-row work downstream can use the whole machine.
-
-    Parquet splits cannot go below row-group granularity, so a small
-    file pins the scan — and every per-row kernel above it — to ~1
-    task regardless of cores.  When the input is file-backed and its
-    size sits in ``[min_bytes, cores * max_bytes_per_core)``, a
-    round-robin repartition (a cheap shuffle of the small input) lets
-    the compute above fan out; outside the band — non-file frames,
-    trivially small inputs where the exchange costs more than it
-    saves, and at-scale inputs whose scan already parallelizes — the
-    frame is returned unchanged, so the helper is inert at 100 TB.
-    Row ORDER changes under repartition; callers must be
-    order-insensitive (every profiling aggregate/join/shuffle consumer
-    here is).
-
-    The byte band is a cost guard; the row-group bound
-    (:func:`scan_parallelism`) is the correctness-of-purpose guard — a
-    file whose footer shows >= cores row groups (or any frame whose
-    bound is unknowable) already scans in parallel and is returned
-    unchanged, so a many-core cluster can't be tricked into shuffling a
-    multi-GB many-row-group input that never needed help.
-    """
-    spark = df.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    b = input_bytes(df)
-    if min_bytes <= b < cores * max_bytes_per_core:
-        rg = scan_parallelism(df)
-        if rg is not None and rg < cores:
-            return df.repartition(cores)
-    return df
-
-
 def read_any(spark: SparkSession, path: str, fmt: str | None = None,
              **options) -> DataFrame:
     """Generic reader: parquet/csv/json/orc by extension or explicit fmt."""

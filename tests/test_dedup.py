@@ -364,3 +364,23 @@ def test_decontaminate_bench_side_broadcasts(spark):
     out = decontaminate(corpus, bench, n=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+
+
+def test_minhash_null_text_has_no_shingles(spark, dup_docs):
+    """A NULL text is a document with no shingles, as in shingle_expr
+    and the native path: it joins no pair and does not fail the job
+    (ml.feature.Tokenizer raises on a NULL input)."""
+    base = dup_docs.where(F.col("doc_id") < 1010)
+    with_null = base.unionByName(spark.createDataFrame(
+        [(5000, None)], "doc_id long, text string"))
+
+    def pairs(df):
+        cand = D.minhash_candidates(df, "text", "doc_id",
+                                    jaccard_max_distance=0.5)
+        got = sorted(tuple(r) for r in cand.collect())
+        cand._minhash_features.unpersist()
+        return got
+
+    got = pairs(with_null)
+    assert got == pairs(base)
+    assert {(i, i + 1000) for i in range(10)} <= {(a, b) for a, b, _ in got}

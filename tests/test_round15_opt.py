@@ -61,29 +61,6 @@ def test_chunking_is_value_preserving(spark, li):
     assert run_chunked_agg(li, by_class) == one
 
 
-def test_parallelize_small_scan_bands(spark, tmp_path):
-    from spark_df_profiling_spark.sources import (
-        input_bytes, parallelize_small_scan)
-    cores = spark.sparkContext.defaultParallelism
-    # non-file frame: inert (input_bytes 0)
-    local = spark.range(100)
-    assert parallelize_small_scan(local) is local
-    # in-band file: repartitioned to core count
-    p = str(tmp_path / "band.parquet")
-    spark.range(200_000).select(
-        F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("pad")
-    ).coalesce(1).write.mode("overwrite").parquet(p)
-    df = spark.read.parquet(p)
-    b = input_bytes(df)
-    assert b >= (64 << 10), f"fixture too small to exercise band: {b}"
-    out = parallelize_small_scan(df)
-    assert out.rdd.getNumPartitions() == cores
-    assert out.count() == 200_000
-    # above-band: inert
-    big = parallelize_small_scan(df, max_bytes_per_core=1)
-    assert big is df
-
-
 def test_minhash_persist_toggle_identical(spark, sf_dir):
     from spark_df_profiling_spark.operators.dedup import (
         minhash_candidates)

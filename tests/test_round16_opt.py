@@ -1,6 +1,5 @@
 """Round-16 optimization internals: the row-group count
-(scan_parallelism) gating the small-scan fan-out, and describe()'s
-one-partition plan."""
+(scan_parallelism) and describe()'s one-partition plan."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -31,31 +30,6 @@ def test_scan_parallelism_counts_row_groups(spark, tmp_path):
     assert got is not None and got >= 64
     # probe_cap exceeded -> None (that many files parallelize by count)
     assert scan_parallelism(spark.read.parquet(p2), probe_cap=0) is None
-
-
-def test_small_scan_inert_when_row_groups_suffice(spark, tmp_path):
-    """An in-band (by bytes) file whose row groups already reach core
-    count must NOT be repartitioned: the scan parallelizes on its own,
-    so the shuffle would be pure cost (the many-core-cluster trap from
-    ADVICE r15)."""
-    from spark_df_profiling_spark.sources import (
-        input_bytes, parallelize_small_scan, scan_parallelism)
-    cores = spark.sparkContext.defaultParallelism
-    p = str(tmp_path / "manyrg.parquet")
-    _write_multi_rowgroup(spark, p, n_groups=64)
-    df = spark.read.parquet(p)
-    assert scan_parallelism(df) >= cores
-    b = input_bytes(df)
-    assert b >= (64 << 10), f"fixture too small to exercise band: {b}"
-    # in the byte band, but row groups >= cores -> returned unchanged
-    assert parallelize_small_scan(df) is df
-    # control: a single-row-group file of similar size IS repartitioned
-    p1 = str(tmp_path / "onerg.parquet")
-    spark.range(200_000).select(
-        F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("pad")
-    ).coalesce(1).write.mode("overwrite").parquet(p1)
-    one = spark.read.parquet(p1)
-    assert parallelize_small_scan(one).rdd.getNumPartitions() == cores
 
 
 def test_first_digit_pow_free(spark):

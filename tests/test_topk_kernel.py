@@ -105,8 +105,8 @@ def test_single_phase_equals_default_and_zero_raises(spark, caller):
 def test_kernel_matches_python_rank(spark, sub, by):
     rows = [(r["g"], r["v"], r["id"]) for r in _events(spark).collect()]
     df = spark.createDataFrame(rows, "g string, v string, id long")
-    out = two_phase_topk(df, by, F.xxhash64("id"),
-                         [F.asc("v"), F.desc("id")], 5, sub)
+    out = two_phase_topk(df, by, "xxhash64(id)", ["v ASC", "id DESC"],
+                         5, sub)
     got = sorted((r["g"] if by else None, r["rank"], r["id"])
                  for r in out.collect())
     exp = []
